@@ -11,9 +11,11 @@ that forces the full plan without driver materialization.
 
 r18 addition (additive only — existing keys unchanged): a fourth,
 untimed instrumented pass per query emits deterministic metrics
-("metrics": {name: {jobs, shuffle_bytes, exchanges, broadcasts}}) so
-byte-reduction and shuffle-removal wins are visible even where sf0.1
-wall seconds are noise-bound (see OPTIMIZATION_r18.md).
+("metrics": {name: {jobs, shuffle_bytes, exchanges, broadcasts,
+codegen_compiles}}) so byte-reduction and shuffle-removal wins are
+visible even where sf0.1 wall seconds are noise-bound (see
+OPTIMIZATION_r18.md). A query that raises in that pass reports
+{"error": text} in place of its counters.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from configdrivendatapipeline_spark.queries import registry
-from configdrivendatapipeline_spark.session import get_spark
+from configdrivendatapipeline_spark.session import codegen_compiles, get_spark
 
 # Ordered preference — first N that exist in the registry are run.
 HEADLINE = [
@@ -94,7 +96,10 @@ def main() -> None:
     #   exchanges/broadcasts — shuffle / broadcast Exchange nodes in
     #                     the pre-execution physical plan (static
     #                     shape; AQE reuse doesn't mask structure)
-    metrics: dict[str, dict[str, int]] = {}
+    #   codegen_compiles — generated classes Janino compiled for this
+    #                     run; after three timed runs of the same plan
+    #                     every class should be a codegen-cache hit
+    metrics: dict[str, dict] = {}
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
     tracker = sc.statusTracker()
@@ -121,6 +126,7 @@ def main() -> None:
             _flush()
             jobs0 = len(tracker.getJobIdsForGroup(None))
             shuf0 = _shuffle_write()
+            compiles0 = codegen_compiles(spark)
             df = reg[name].build(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
             lines = [
@@ -136,9 +142,10 @@ def main() -> None:
                 "shuffle_bytes": _shuffle_write() - shuf0,
                 "exchanges": n_exch,
                 "broadcasts": n_bcast,
+                "codegen_compiles": codegen_compiles(spark) - compiles0,
             }
-        except Exception:
-            pass  # metrics are additive extras — never fail the bench
+        except Exception as exc:  # metrics never fail the bench
+            metrics[name] = {"error": f"{type(exc).__name__}: {exc}"[:500]}
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     out = {

@@ -64,7 +64,9 @@ def main(argv: list[str] | None = None) -> int:
     from configdrivendatapipeline_spark.compiler import compile_pipeline, run_pipeline
     from configdrivendatapipeline_spark.session import get_spark
 
-    spark = get_spark(f"cddp:{cfg.name}")
+    # The YAML's spark_conf goes in at build time: static SQL confs
+    # cannot be set on a running session.
+    spark = get_spark(f"cddp:{cfg.name}", extra_conf=cfg.spark_conf)
     spark.sparkContext.setLogLevel("WARN")
     if args.cmd == "run":
         run_pipeline(spark, cfg)

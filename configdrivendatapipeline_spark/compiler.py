@@ -1880,9 +1880,14 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFram
     written through the identical batch sink layer) with
     ``Trigger.AvailableNow`` — production would swap the trigger, not
     the pipeline.
+
+    ``spark_conf`` keys already at their value are skipped: ``cli run``
+    builds the session with them, and a static conf (which only a
+    session build can set) would raise on ``spark.conf.set``.
     """
     for k, v in cfg.spark_conf.items():
-        spark.conf.set(k, v)
+        if spark.conf.get(k, None) != v:
+            spark.conf.set(k, v)
     frames = compile_pipeline(spark, cfg)
     for sink in cfg.sinks:
         df = frames[sink.input]

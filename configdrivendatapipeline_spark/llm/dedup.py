@@ -1178,11 +1178,14 @@ def duplicate_clusters(
             .select("id", F.col("__ccomp").alias("comp"), "__old")
         )
         new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.filter(F.col("comp") != F.col("__old")).limit(1).count()
-        )
+        # take(1), not limit(1).count(): a limit inside a codegen
+        # stage gets a fresh counter name per plan, so its class never
+        # hits the codegen cache and every round compiled it again;
+        # take(1) plans CollectLimit over a limit-free scan+filter
+        # stage that is compiled once per session.
+        changed = new_labels.filter(F.col("comp") != F.col("__old")).take(1)
         labels = new_labels.select("id", "comp")
-        if changed == 0:
+        if not changed:
             converged = True
             break
     if not converged:

@@ -338,30 +338,33 @@ def _staged_neardup_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the identical staged pair table; the propagation's per-round
 #: localCheckpoints already materialize the labels, so re-running it
 #: per consumer re-paid ~6 driver-paced rounds × label shuffles for a
-#: bit-identical result. Keyed on (session, staged-table path) — the
-#: staged path embeds the documents fixture identity (mtime+size via
-#: _scratch) plus the code-version token, so a fixture swap or code
-#: bump can never serve a stale label table; the session object is
-#: held in the value to guard against id() reuse (same discipline as
-#: _BPE_CACHE below and queries.__init__._LOAD_CACHE). Session-scoped
-#: ONLY: nothing persists across runs, and the first consumer in any
-#: run computes from the parquet inputs.
+#: bit-identical result. ONE entry per session, keyed on id(session)
+#: and holding (session, staged-table path, labels): the staged path
+#: embeds the documents fixture identity (mtime+size via _scratch)
+#: plus the code-version token, so a fixture swap or code bump can
+#: never serve a stale label table, and a new fixture REPLACES the
+#: previous one's labels instead of pinning their localCheckpoint
+#: blocks for the life of the session (a daily new corpus would
+#: otherwise grow RDD storage without bound). The session object
+#: guards against id() reuse (same discipline as _BPE_CACHE below and
+#: queries.__init__._LOAD_CACHE). Nothing persists across runs, and
+#: the first consumer in any run computes from the parquet inputs.
 _CC_CACHE: dict = {}
 
 
 def _staged_cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Converged (doc_id, component) labels over the staged t=0.95
     edge set, computed once per (session, fixture)."""
-    key = (id(spark), _staged_neardup_paths(sf_dir)[0])
-    hit = _CC_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    path = _staged_neardup_paths(sf_dir)[0]
+    hit = _CC_CACHE.get(id(spark))
+    if hit is not None and hit[0] is spark and hit[1] == path:
+        return hit[2]
     docs = load(spark, sf_dir, "documents")
     pairs = dedup.filter_jaccard(
         _staged_neardup_scores(spark, sf_dir), 0.95
     ).select("id_a", "id_b")
     comp = dedup.duplicate_clusters(pairs, docs, id_col="doc_id")
-    _CC_CACHE[key] = (spark, comp)
+    _CC_CACHE[id(spark)] = (spark, path, comp)
     return comp
 
 

@@ -61,8 +61,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    Every conf here is a public Spark conf; all are overridable via
-    ``extra_conf`` or pipeline YAML ``spark_conf``.
+    Every conf here is a Spark conf, overridable via ``extra_conf``;
+    the two codegen confs are internal (undocumented) SQL confs, stable
+    since Spark 2.4. Pipeline YAML ``spark_conf`` reaches this factory
+    only through ``cli run``, which passes it as ``extra_conf``. A
+    static SQL conf (``spark.sql.codegen.cache.maxEntries``,
+    ``spark.sql.warehouse.dir``, ...) takes effect only when the
+    session is first built: ``getOrCreate`` on an existing session
+    keeps the value it was built with.
     """
     builder = SparkSession.builder.appName(app_name)
     if master:
@@ -97,9 +103,33 @@ def get_spark(
         # Local driver memory; ignored under spark-submit cluster mode.
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",
+        # Generated-class cache (static; Spark's default is 100). One
+        # fresh-corpus pass of the near-dup/CC/kNN family needs ~150
+        # classes, so at 100 the LRU missed on nearly every lookup and
+        # every CC round, PageRank iteration and new corpus re-ran
+        # Janino plus the JIT on code it had already compiled. 1000
+        # holds that working set several times over (CHANGES.md has
+        # the compile counts and the metaspace cost).
+        "spark.sql.codegen.cache.maxEntries": "1000",
+        # The cache key is the generated source, and by default the
+        # class name carries the codegen stage id. AQE re-plans as
+        # stages finish and can number the same stage differently from
+        # one run to the next, and a stage at another position in a
+        # plan gets another id: both missed the cache. Only stack
+        # traces lose the id; the plan keeps it.
+        "spark.sql.codegen.useIdInClassName": "false",
     }
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far; a
+    codegen-cache hit does not count. The counter is JVM-wide (every
+    session, driver and local executors), so read it as a delta
+    around the work being measured."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

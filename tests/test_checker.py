@@ -140,6 +140,11 @@ def test_bench_output_contract(sf_dir):
     assert d["unit"] == "sec" and d["value"] > 0
     assert d["metric"] and isinstance(d["queries"], dict) and d["queries"]
     assert all(v >= 0 for v in d["queries"].values())
+    # untimed counter pass: one entry per timed query, counters or the
+    # query's exception text
+    assert set(d["metrics"]) == set(d["queries"])
+    for m in d["metrics"].values():
+        assert "error" in m or m["codegen_compiles"] >= 0, m
 
 
 def test_spark_entry_contract(spark):

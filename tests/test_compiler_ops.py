@@ -597,6 +597,36 @@ sinks:
     assert m["never_run"] == {}
 
 
+def test_run_pipeline_skips_static_conf_already_set(spark, sf_dir, tmp_path):
+    """`cli run` builds the session with the YAML spark_conf, so a
+    static key (settable only when the session is built) reaches
+    run_pipeline already at its value; re-setting it would raise."""
+    from configdrivendatapipeline_spark.compiler import run_pipeline
+    from configdrivendatapipeline_spark.config.loader import load_pipeline_str
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    value = spark.conf.get(key)
+    with pytest.raises(Exception, match="CANNOT_MODIFY_STATIC_CONFIG"):
+        spark.conf.set(key, value)
+    out = str(tmp_path / "static_conf_out")
+    cfg = load_pipeline_str(
+        f"""
+pipeline:
+  name: static_conf
+  spark_conf:
+    {key}: "{value}"
+sources:
+  nation: {{format: parquet, path: "{sf_dir}/nation.parquet"}}
+steps:
+  - {{id: keys, input: nation, op: select, params: {{columns: [n_nationkey]}}}}
+sinks:
+  - {{input: keys, format: parquet, path: "{out}", mode: overwrite}}
+"""
+    )
+    run_pipeline(spark, cfg)
+    assert spark.read.parquet(out).count() == 25
+
+
 def test_kmeans_through_yaml(spark, sf_dir):
     """kmeans from YAML equals the library function; every vector is
     assigned and seeds keep their own cluster (cos_sim 1.0 with

@@ -3,6 +3,8 @@ idempotence, fingerprint sensitivity."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from configdrivendatapipeline_spark.llm import dedup, similarity, textstats
@@ -2016,3 +2018,40 @@ def test_cc_label_table_memoized_per_session(spark, sf_dir):
     finally:
         llm_q._CC_CACHE.clear()
         llm_q._CC_CACHE.update(saved)
+
+
+def test_cc_label_table_keeps_only_the_latest_fixture(spark, sf_dir, tmp_path, monkeypatch):
+    """The CC label memo holds ONE entry per session: a second fixture
+    replaces the first one's labels (which would otherwise stay pinned
+    for the life of the session, one set per new corpus), while the
+    three CC consumers of one fixture still share a single label
+    build."""
+    import shutil
+
+    from configdrivendatapipeline_spark.queries import llm_q, registry
+
+    reg = registry()
+    other = str(tmp_path / "fixture_b")
+    os.makedirs(other)
+    shutil.copy(f"{sf_dir}/documents.parquet", other)
+    calls = []
+    real = dedup.duplicate_clusters
+    monkeypatch.setattr(
+        dedup, "duplicate_clusters", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    saved = dict(llm_q._CC_CACHE)
+    llm_q._CC_CACHE.clear()
+    try:
+        for n, fixture in enumerate((sf_dir, other), start=1):
+            for qid in ("llm_dup_clusters", "llm_dedup_canonical", "llm_cluster_sizes"):
+                reg[qid].build(spark, fixture).collect()
+            assert len(calls) == n  # one label build per fixture
+            assert list(llm_q._CC_CACHE) == [id(spark)]
+            assert llm_q._CC_CACHE[id(spark)][1] == llm_q._staged_neardup_paths(fixture)[0]
+    finally:
+        llm_q._CC_CACHE.clear()
+        llm_q._CC_CACHE.update(saved)
+        out, marker = llm_q._staged_neardup_paths(other)
+        shutil.rmtree(out, ignore_errors=True)
+        if os.path.exists(marker):
+            os.remove(marker)
