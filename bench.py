@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {...}, "sf": ...}.
+"queries": {...}, "sf": ..., "cpus": N}, where ``cpus`` is the
+session's defaultParallelism (the cores the timings ran on).
 
 Headline set: the flagship pricing summary plus one representative
 query per major SURVEY.md §2 family that exists in the registry.
@@ -154,6 +155,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": sc.defaultParallelism,
         "metrics": metrics,
     }
     print(json.dumps(out))

@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from configdrivendatapipeline_spark.partitioning import widen_narrow_scan
+from configdrivendatapipeline_spark.session import session_memo
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -87,31 +88,6 @@ def declare(
     return wrap
 
 
-#: id(session) → session. The value holds the session object itself so
-#: a GC'd session whose id() is reused can never skip the conf setup
-#: (same guard as _LOAD_CACHE's ``hit[0] is spark``). Judge r13 nit:
-#: these caches must not grow (or pin sessions) forever when the
-#: engine is embedded long-lived with session churn — so they are
-#: LRU-bounded to the last few sessions seen rather than weakref'd
-#: (a weak map cannot work here: cached DataFrames strongly reference
-#: their session, so a weak-keyed entry would never be collected).
-_CONF_DONE: "dict[int, SparkSession]" = {}
-
-#: sessions a process legitimately juggles at once (driver harness +
-#: tests + an embedder's retry session); beyond it the OLDEST
-#: session's conf flag and table frames are evicted — a live session
-#: that reappears just pays one conf round-trip + footer re-read.
-_MAX_SESSIONS = 4
-
-
-def _evict_lru_sessions() -> None:
-    while len(_CONF_DONE) > _MAX_SESSIONS:
-        stale_id = next(iter(_CONF_DONE))  # dicts preserve insertion order
-        del _CONF_DONE[stale_id]
-        for k in [k for k in _LOAD_CACHE if k[0] == stale_id]:
-            del _LOAD_CACHE[k]
-
-
 def ensure_session_confs(spark: SparkSession) -> None:
     """Make any caller-supplied SparkSession safe for these queries:
     ns-parquet readable and deterministic UTC timestamps. Both are
@@ -119,33 +95,21 @@ def ensure_session_confs(spark: SparkSession) -> None:
     them, but the driver hands us ITS session. Applied once per
     session — a registry sweep calls this per query and the conf
     round-trips add up."""
-    if _CONF_DONE.get(id(spark)) is spark:
-        # refresh recency (move-to-end) so a long-lived primary
-        # session is never evicted by transient-session churn —
-        # eviction order below is the dict's insertion order
-        _CONF_DONE[id(spark)] = _CONF_DONE.pop(id(spark))
-        return
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Right-size reducers only when the caller left Spark's static
-    # default (200 is 6× the data at these SFs); never override an
-    # explicit choice.
-    if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    _CONF_DONE[id(spark)] = spark
-    _evict_lru_sessions()
 
+    def apply() -> None:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        # Right-size reducers only when the caller left Spark's static
+        # default (200 is 6× the data at these SFs); never override an
+        # explicit choice.
+        if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
+            spark.conf.set(
+                "spark.sql.shuffle.partitions",
+                str(spark.sparkContext.defaultParallelism),
+            )
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
-#: (session, sf_dir, table) → reader DataFrame. Plans are immutable
-#: and the test parquet never changes mid-run, so re-deriving the
-#: schema per query (240+ queries × ~4 tables × ~50 ms of footer
-#: reads) is pure overhead. The session object itself is held in the
-#: value to guard against id() reuse after a session is collected.
-_LOAD_CACHE: dict = {}
+    session_memo(spark, "confs", None, apply)
 
 
 def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -183,22 +147,18 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
     ``events.ts`` is normalized to TimestampType (see
     :func:`normalize_ts`) so both engines see identical timestamps.
+    The reader frame is memoized per session and table: plans are
+    immutable and a fixture never changes mid-run, so re-deriving the
+    schema per query (240+ queries × ~4 tables × ~50 ms of footer
+    reads) is pure overhead. A new ``sf_dir`` replaces the entry.
     """
-    key = (id(spark), sf_dir, table)
-    hit = _LOAD_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        # Refresh LRU recency on cached loads too (r14 advice): a
-        # primary session touched only via this fast path must not be
-        # evictable by transient-session churn. ensure_session_confs'
-        # own hit path is a dict move-to-end — no conf round-trip.
+
+    def read() -> DataFrame:
         ensure_session_confs(spark)
-        return hit[1]
-    ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-    if table == "events":
-        df = normalize_ts(df)
-    _LOAD_CACHE[key] = (spark, df)
-    return df
+        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        return normalize_ts(df) if table == "events" else df
+
+    return session_memo(spark, ("load", table), sf_dir, read)
 
 
 def spread(df: DataFrame, min_factor: int = 2, key: "str | Column | None" = None) -> DataFrame:
@@ -246,12 +206,12 @@ def spread(df: DataFrame, min_factor: int = 2, key: "str | Column | None" = None
 #: (filter_compare ... win_dwell_time), followed by the r11 cohort.
 #:
 #: ROUND-19 HANDOFF: run ``python tools/rotation_window.py`` and paste
-#: its tuple body here (rename to _ROUND19_WINDOW; update registry()'s
-#: docstring + loop). Round 18's 50-budget drains the whole 40-id r10
-#: tail plus 10 of the 50-id r11 cohort (agg_bucket_hist ...
+#: its tuple body over _ROTATION_WINDOW's (the name stays, so no code
+#: or test changes with it). Round 18's 50-budget drains the whole
+#: 40-id r10 tail plus 10 of the 50-id r11 cohort (agg_bucket_hist ...
 #: fn_posexplode), so after r18 the oldest remaining evidence should
 #: be the r11 tail (40 ids) followed by the r12 cohort.
-_ROUND18_WINDOW = (
+_ROTATION_WINDOW = (
     # ---- latest driver evidence r10 (40 ids) ----
     "filter_compare",
     "filter_in",
@@ -656,7 +616,7 @@ _ROUND18_WINDOW = (
 def registry() -> dict[str, DeclaredQuery]:
     """Import all query modules and return the full registry, ordered
     so a budget-limited driver always verifies the least-proven
-    operators first: the explicit ``_ROUND18_WINDOW`` ordering
+    operators first: the explicit ``_ROTATION_WINDOW`` ordering
     (never-checked ids, then oldest-driver-evidence first).
     """
     # Imports are deferred so a syntax error in one section surfaces
@@ -677,7 +637,7 @@ def registry() -> dict[str, DeclaredQuery]:
     )
 
     ordered: dict[str, DeclaredQuery] = {}
-    for name in _ROUND18_WINDOW:
+    for name in _ROTATION_WINDOW:
         ordered[name] = _REGISTRY[name]  # KeyError = stale window list
     for name, q in _REGISTRY.items():
         if name not in ordered:

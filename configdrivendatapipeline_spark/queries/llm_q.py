@@ -12,14 +12,14 @@ buckets are pure integer arithmetic the oracle replays directly.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from configdrivendatapipeline_spark import scratch
 from configdrivendatapipeline_spark.llm import dedup, multimodal, similarity, textstats
 from configdrivendatapipeline_spark.queries import declare, load
+from configdrivendatapipeline_spark.session import session_memo
 
 _SEC = "2.11"
 
@@ -259,113 +259,59 @@ def llm_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.lsh_candidate_pairs(sigs, bands=8, sig_len=32, band_key="concat")
 
 
-#: Version token folded into the staged pair table's scratch key.
-#: _scratch already keys on documents.parquet identity (mtime+size),
-#: which tracks FIXTURE changes but not CODE changes — bump this on
-#: any change to dedup.jaccard_pairs' tokenization, prefix filter, or
-#: the raw-count schema so staged tables from the old code are never
-#: served to the new (r16 advice: a stale stage would otherwise
-#: surface only as a confusing oracle hash mismatch).
-_NEARDUP_STAGE_VERSION = "v2"  # r17: set-dedup + coded-bitmap PPJoin build
-
-
-def _staged_neardup_paths(sf_dir: str) -> tuple[str, str]:
-    """(table_dir, marker_path) for the staged t=0.8 raw-count pair
-    table — shared with tools/cc_probe.py so the probe can read and
-    reset the staged state it is timing."""
-    from configdrivendatapipeline_spark.queries.streaming_q import _scratch
-
-    out = _scratch(
-        sf_dir,
-        f"neardup_scores_t80_{_NEARDUP_STAGE_VERSION}",
-        src_table="documents",
-    )
-    return out, out + ".staged"
-
-
-def _staged_neardup_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared near-dup pair table, staged to parquet once per
-    documents fixture.
+def _neardup_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared near-dup pair table, built once per session and fixture.
 
     Four declared queries consume the same expensive PPJoin pair
     build (llm_jaccard_neardup at t=0.8; llm_dup_clusters,
     llm_cluster_sizes and llm_dedup_canonical at t=0.95) — measured
     at sf0.1 the build is 113 s where the downstream CC loop is 7 s,
     so re-building per consumer made the family ~3× more expensive
-    than the data requires (r15 verdict item 3; SCALING.md round-16
-    note). The t=0.8 RAW-COUNT table (id_a, id_b, n_inter, n_a, n_b)
-    is staged once per sf_dir — identity-keyed on documents.parquet
-    via _scratch (mtime+size), the exact precedent the staged
-    streaming feeds set — and each consumer recovers its threshold
-    EXACTLY with dedup.filter_jaccard: prefix filtering at the weaker
-    t is lossless for every t' ≥ t, and the integer cross-multiply
-    cut is rounding-free, so staged-then-filtered output is
-    bit-identical to a direct jaccard_pairs(t') build. At 100 TB this
-    is the materialize-once pattern pipeline_dedup_reuse demonstrates
-    in-pipeline: the pair table is the costly artifact; every
-    consumer after the first is a parquet scan.
-
-    Staging is concurrency-safe (r16 advice): the table is written to
-    a process-unique temp dir and ``os.rename``d into place, so the
-    final path only ever appears ATOMICALLY holding a complete table —
-    two sweeps/probes racing on one fixture can no longer interleave
-    ``mode("overwrite")`` writes into the same directory (the loser's
-    rename fails and its temp dir is discarded). Existence of the
-    final dir, not the marker, is therefore the staged test; the
-    ``.staged`` marker remains as the observable cold/warm signal
-    (tools/cc_probe.py reads it to label its build timings).
+    than the data requires. The t=0.8 RAW-COUNT table (id_a, id_b,
+    n_inter, n_a, n_b) is materialized once to within-run scratch
+    parquet and each consumer recovers its threshold EXACTLY with
+    dedup.filter_jaccard: prefix filtering at the weaker t is lossless
+    for every t' ≥ t, and the integer cross-multiply cut is
+    rounding-free, so filtered output is bit-identical to a direct
+    jaccard_pairs(t') build. At 100 TB this is the materialize-once
+    pattern pipeline_dedup_reuse demonstrates in-pipeline: the pair
+    table is the costly artifact; every consumer after the first is a
+    parquet scan. Nothing outlives the run: a new process rebuilds
+    from the documents it reads.
     """
-    out, marker = _staged_neardup_paths(sf_dir)
-    if not os.path.isdir(out):
+
+    def build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
-        tmp = f"{out}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        dedup.jaccard_pairs(docs, threshold=0.8, raw_counts=True).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    if not os.path.exists(marker):
-        open(marker, "w").close()
-    return spark.read.parquet(out)
+        return scratch.scratch_parquet(
+            dedup.jaccard_pairs(docs, threshold=0.8, raw_counts=True),
+            "neardup_scores_t80",
+        )
+
+    return session_memo(spark, "neardup", sf_dir, build)
 
 
-#: Session-scoped memo of the CONVERGED connected-components label
-#: table over the staged t=0.95 edges (r17 verdict item 6). Three
-#: declared queries (llm_dup_clusters, llm_dedup_canonical,
-#: llm_cluster_sizes) run the identical 6-round label propagation over
-#: the identical staged pair table; the propagation's per-round
-#: localCheckpoints already materialize the labels, so re-running it
-#: per consumer re-paid ~6 driver-paced rounds × label shuffles for a
-#: bit-identical result. ONE entry per session, keyed on id(session)
-#: and holding (session, staged-table path, labels): the staged path
-#: embeds the documents fixture identity (mtime+size via _scratch)
-#: plus the code-version token, so a fixture swap or code bump can
-#: never serve a stale label table, and a new fixture REPLACES the
-#: previous one's labels instead of pinning their localCheckpoint
-#: blocks for the life of the session (a daily new corpus would
-#: otherwise grow RDD storage without bound). The session object
-#: guards against id() reuse (same discipline as _BPE_CACHE below and
-#: queries.__init__._LOAD_CACHE). Nothing persists across runs, and
-#: the first consumer in any run computes from the parquet inputs.
-_CC_CACHE: dict = {}
+def _cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Converged (doc_id, component) labels over the t=0.95 edge set,
+    computed once per session and fixture.
 
+    Three declared queries (llm_dup_clusters, llm_dedup_canonical,
+    llm_cluster_sizes) run the identical label propagation over the
+    identical pair table; the propagation's per-round localCheckpoints
+    already materialize the labels, so re-running it per consumer
+    re-paid ~6 driver-paced rounds × label shuffles for a
+    bit-identical result. A new fixture replaces the previous labels
+    instead of pinning their checkpoint blocks for the life of the
+    session.
+    """
 
-def _staged_cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Converged (doc_id, component) labels over the staged t=0.95
-    edge set, computed once per (session, fixture)."""
-    path = _staged_neardup_paths(sf_dir)[0]
-    hit = _CC_CACHE.get(id(spark))
-    if hit is not None and hit[0] is spark and hit[1] == path:
-        return hit[2]
-    docs = load(spark, sf_dir, "documents")
-    pairs = dedup.filter_jaccard(
-        _staged_neardup_scores(spark, sf_dir), 0.95
-    ).select("id_a", "id_b")
-    comp = dedup.duplicate_clusters(pairs, docs, id_col="doc_id")
-    _CC_CACHE[id(spark)] = (spark, path, comp)
-    return comp
+    def build() -> DataFrame:
+        docs = load(spark, sf_dir, "documents")
+        pairs = dedup.filter_jaccard(
+            _neardup_scores(spark, sf_dir), 0.95
+        ).select("id_a", "id_b")
+        return dedup.duplicate_clusters(pairs, docs, id_col="doc_id")
+
+    return session_memo(spark, "cc", sf_dir, build)
 
 
 @declare(
@@ -399,7 +345,7 @@ def _staged_cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with the whole CC family (r16: 4 consumers, one build).",
 )
 def llm_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.jaccard_readout(_staged_neardup_scores(spark, sf_dir))
+    return dedup.jaccard_readout(_neardup_scores(spark, sf_dir))
 
 
 def _simhash_oracle(bits: int = 64) -> str:
@@ -1015,7 +961,7 @@ def llm_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "build amortized across the CC family).",
 )
 def llm_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _staged_cc_components(spark, sf_dir)
+    return _cc_components(spark, sf_dir)
 
 
 @declare(
@@ -2033,29 +1979,26 @@ def _obpe_sql(n_merges: int) -> str:
     return "WITH " + ",\n".join(_obpe_ctes(n_merges)) + "\n" + sel
 
 
-#: (id(spark), sf_dir, n_merges) → (spark, [(step, pair, n), ...]).
-#: BPE training is deterministic (lexicographic tie-break), so the
-#: trained artifact is a pure function of (corpus, n_merges) — and in
-#: production the tokenizer is trained ONCE and shipped to every
-#: consumer. Three declared queries (train / encode / fertility)
-#: consume the same 20-merge artifact; retraining per query would
-#: triple the 20-sequential-job training cost for bit-identical
-#: output. The session object is held in the value to guard against
-#: id() reuse (same pattern as queries.__init__._LOAD_CACHE).
-_BPE_CACHE: dict = {}
-
-
 def _trained_merges(spark: SparkSession, sf_dir: str, n_merges: int = 20):
-    """Rows of the trained merge table, memoized per (session, corpus)."""
+    """Rows of the trained merge table, ``[(step, pair, n), ...]``,
+    memoized per session and corpus.
+
+    BPE training is deterministic (lexicographic tie-break), so the
+    trained artifact is a pure function of (corpus, n_merges) — and in
+    production the tokenizer is trained ONCE and shipped to every
+    consumer. Three declared queries (train / encode / fertility)
+    consume the same 20-merge artifact; retraining per query would
+    triple the 20-sequential-job training cost for bit-identical
+    output. A new corpus replaces the entry.
+    """
     from configdrivendatapipeline_spark.llm.bpe import bpe_train_rows
 
-    key = (id(spark), sf_dir, n_merges)
-    hit = _BPE_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    rows = bpe_train_rows(load(spark, sf_dir, "documents"), n_merges=n_merges)
-    _BPE_CACHE[key] = (spark, rows)
-    return rows
+    return session_memo(
+        spark,
+        ("bpe", n_merges),
+        sf_dir,
+        lambda: bpe_train_rows(load(spark, sf_dir, "documents"), n_merges=n_merges),
+    )
 
 
 @declare(
@@ -3198,14 +3141,14 @@ def llm_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load(spark, sf_dir, "documents")
-    # The staged raw-count table shares the PPJoin pair computation
-    # across the whole CC family, and the converged label table is
-    # additionally memoized per session (_staged_cc_components); the
-    # rank branch reads the cheap filtered parquet scan.
+    # The raw-count table shares the PPJoin pair computation across
+    # the whole CC family, and the converged label table is memoized
+    # per session too (_cc_components); the rank branch reads the
+    # cheap filtered parquet scan.
     pairs = dedup.filter_jaccard(
-        _staged_neardup_scores(spark, sf_dir), 0.95
+        _neardup_scores(spark, sf_dir), 0.95
     ).select("id_a", "id_b")
-    clusters = _staged_cc_components(spark, sf_dir)
+    clusters = _cc_components(spark, sf_dir)
     ranks = dedup.graph_rank(pairs, docs.select("doc_id"), id_col="doc_id")
     joined = clusters.join(ranks, "doc_id")
     w = Window.partitionBy("component").orderBy(
@@ -3526,7 +3469,7 @@ def llm_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(one PPJoin build amortized across the CC family).",
 )
 def llm_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    comp = _staged_cc_components(spark, sf_dir)
+    comp = _cc_components(spark, sf_dir)
     cs = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     hist = cs.groupBy("cluster_size").agg(F.count(F.lit(1)).alias("n_clusters"))
     tot = hist.agg(

@@ -16,7 +16,9 @@ pruning on the scan, which checkpoint blocks (full rows) never had.
 Scratch location: ``spark.cddp.scratchDir`` conf if set (on a real
 cluster this must be shared storage — HDFS/object store scratch — so
 every executor can read what any executor wrote), else the driver's
-tempdir, which is correct for local[N]. Each process gets a unique
+tempdir, which is correct only for a ``local*`` master: on any other
+master an unset ``spark.cddp.scratchDir`` raises instead of writing
+files executors cannot read back. Each process gets a unique
 run directory, deleted at interpreter exit; nothing persists across
 runs and nothing is keyed on the input fixture — every run writes its
 own scratch from its own computation (this is a materialization
@@ -31,7 +33,7 @@ import shutil
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _RUN_DIRS: dict[str, str] = {}
 
@@ -50,6 +52,10 @@ def _run_dir(base: str) -> str:
     return root
 
 
+def _master(spark: SparkSession) -> str:
+    return spark.sparkContext.master
+
+
 def scratch_parquet(df: DataFrame, tag: str) -> DataFrame:
     """Materialize ``df`` to within-run scratch parquet and return the
     read-back frame.
@@ -64,7 +70,16 @@ def scratch_parquet(df: DataFrame, tag: str) -> DataFrame:
     same as any shuffle boundary.
     """
     spark = df.sparkSession
-    base = spark.conf.get("spark.cddp.scratchDir", None) or tempfile.gettempdir()
+    base = spark.conf.get("spark.cddp.scratchDir", None)
+    if not base:
+        master = _master(spark)
+        if not master.startswith("local"):
+            raise RuntimeError(
+                f"scratch_parquet({tag!r}): master {master!r} is not local and "
+                "spark.cddp.scratchDir is unset; set it to storage every "
+                "executor can read (HDFS or object-store scratch)"
+            )
+        base = tempfile.gettempdir()
     path = os.path.join(_run_dir(base), f"{tag}-{uuid.uuid4().hex[:8]}")
     df.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)

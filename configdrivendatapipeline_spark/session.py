@@ -12,8 +12,15 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
+from typing import Any, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
+
+#: attribute of the SparkSession object that holds its memo store
+MEMO_ATTR = "_cddp_memo"
 
 # Shuffle partitions: on local[N] runs a small multiple of cores keeps
 # every reducer busy without tiny-partition overhead; on a cluster this
@@ -133,3 +140,25 @@ def codegen_compiles(spark: SparkSession) -> int:
     around the work being measured."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def session_memo(spark: SparkSession, slot: Any, key: Any, build: Callable[[], T]) -> T:
+    """Per-session memo: the value ``build()`` returned for ``key`` in
+    ``slot``, built at most once per (session, slot, key).
+
+    Each slot holds ONE ``(key, value)`` pair. The same key returns
+    the stored value; a new key (another fixture, another corpus)
+    rebuilds and replaces it, so a slot never grows with the inputs a
+    long session sees. The store lives in the session object's own
+    ``__dict__``: it is collected with the session, and a later
+    session can never be served an earlier one's entries. Cached
+    frames refer back to their session, so the cycle is left to the
+    garbage collector, which handles it.
+    """
+    store = spark.__dict__.setdefault(MEMO_ATTR, {})
+    hit = store.get(slot)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    value = build()
+    store[slot] = (key, value)
+    return value

@@ -18,19 +18,22 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: id(session) → [source bytes noted since the last drain]. Streaming
-#: plans cannot be re-coalesced by AQE, so the stateful-shuffle
-#: partition count a query STARTS with is the one it keeps — and each
-#: state-store partition carries fixed per-micro-batch overhead
-#: (delta/commit files, store init). Every streaming source builder
-#: notes its backing file size here; :func:`run_available_now` drains
-#: the notes and sizes the shuffle like AQE would size a batch
-#: exchange: ceil(bytes / advisoryPartitionSizeInBytes), clamped to
-#: [min(defaultParallelism, _STREAM_PARTS_FLOOR), defaultParallelism].
-#: A 100 TB backlog therefore still gets full cluster parallelism
-#: (the clamp ceiling), while a small AvailableNow drain stops paying
-#: per-partition state overhead ~cores× larger than its data.
-_SRC_BYTES: dict[int, list[int]] = {}
+from configdrivendatapipeline_spark.session import session_memo
+
+#: Per-session memo slot holding the source bytes noted since the last
+#: drain. Streaming plans cannot be re-coalesced by AQE, so the
+#: stateful-shuffle partition count a query STARTS with is the one it
+#: keeps — and each state-store partition carries fixed
+#: per-micro-batch overhead (delta/commit files, store init). Every
+#: streaming source builder notes its backing file size here;
+#: :func:`run_available_now` drains the notes and sizes the shuffle
+#: like AQE would size a batch exchange: ceil(bytes /
+#: advisoryPartitionSizeInBytes), clamped to [min(defaultParallelism,
+#: _STREAM_PARTS_FLOOR), defaultParallelism]. A 100 TB backlog
+#: therefore still gets full cluster parallelism (the clamp ceiling),
+#: while a small AvailableNow drain stops paying per-partition state
+#: overhead ~cores× larger than its data.
+_SRC_BYTES_SLOT = "stream_src_bytes"
 
 #: Parallelism floor (pre-clamp to cores): keeps CPU headroom for
 #: map-heavy micro-batches even when the backlog is tiny.
@@ -54,7 +57,7 @@ def note_stream_source(spark: SparkSession, path: str) -> None:
             total = os.path.getsize(path)
     except OSError:
         return
-    _SRC_BYTES.setdefault(id(spark), []).append(total)
+    session_memo(spark, _SRC_BYTES_SLOT, None, list).append(total)
 
 
 def _parse_byte_conf(v: str) -> int:
@@ -159,7 +162,7 @@ def run_available_now(
 
     Stateful-shuffle sizing: the session's shuffle-partition conf is
     transiently set from the source bytes noted by
-    :func:`note_stream_source` (see ``_SRC_BYTES`` — the AQE
+    :func:`note_stream_source` (see ``_SRC_BYTES_SLOT`` — the AQE
     coalescing rule applied at plan time, because streaming exchanges
     are exempt from AQE and each state-store partition costs fixed
     per-batch I/O) and restored after the drain. Partition count
@@ -170,7 +173,8 @@ def run_available_now(
     """
     name = name or f"stream_{uuid.uuid4().hex[:12]}"
     spark = sdf.sparkSession
-    noted = _SRC_BYTES.pop(id(spark), None)
+    pending = session_memo(spark, _SRC_BYTES_SLOT, None, list)
+    noted, pending[:] = list(pending), []
     env = os.environ.get("SPARK_GRAFT_STREAM_PARTS")
     target: int | None = None
     if env:

@@ -12,7 +12,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from configdrivendatapipeline_spark.queries import TABLES
-from configdrivendatapipeline_spark.session import get_spark
+from configdrivendatapipeline_spark.session import MEMO_ATTR, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -37,3 +37,16 @@ def oracle():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     yield con
     con.close()
+
+
+@pytest.fixture
+def memo(spark):
+    """The shared session's per-session memo store (see
+    ``session.session_memo``), emptied for one test and restored after
+    it, so a test sees its own builds and leaves later tests theirs."""
+    store = spark.__dict__.setdefault(MEMO_ATTR, {})
+    saved = dict(store)
+    store.clear()
+    yield store
+    store.clear()
+    store.update(saved)

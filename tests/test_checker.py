@@ -140,6 +140,8 @@ def test_bench_output_contract(sf_dir):
     assert d["unit"] == "sec" and d["value"] > 0
     assert d["metric"] and isinstance(d["queries"], dict) and d["queries"]
     assert all(v >= 0 for v in d["queries"].values())
+    # the core count the timings were taken on (SPARK_GRAFT_CPUS above)
+    assert d["cpus"] == 4
     # untimed counter pass: one entry per timed query, counters or the
     # query's exception text
     assert set(d["metrics"]) == set(d["queries"])
@@ -598,83 +600,36 @@ def test_scale_probe_vector_salt_preserves_within_replica_cosine(
     ) < 1e-6
 
 
-def test_session_caches_are_lru_bounded():
-    """Judge r13 residual nit: the id(session)-keyed conf/load caches
-    must not pin sessions (or grow) for process lifetime when the
-    engine is embedded with session churn. Weakrefs cannot solve
-    this (cached DataFrames strongly reference their session), so
-    the caches LRU-evict past _MAX_SESSIONS; the evicted session's
-    load-cache entries go with it."""
-    from configdrivendatapipeline_spark import queries as q
+def test_session_churn_leaves_dropped_sessions_collectable(spark, sf_dir):
+    """Per-session state (the conf flag, loaded table frames) lives on
+    the session object itself, so an engine embedded long-lived with
+    session churn never pins a dropped session. PySpark's own RDD.toDF
+    monkeypatch holds the most recently created session, so at most
+    the newest transient may still be alive."""
+    import gc
+    import weakref
 
-    saved_conf, saved_load = dict(q._CONF_DONE), dict(q._LOAD_CACHE)
-    q._CONF_DONE.clear()
-    q._LOAD_CACHE.clear()
-    try:
-        sessions = [object() for _ in range(q._MAX_SESSIONS + 2)]
-        for s in sessions:
-            q._CONF_DONE[id(s)] = s
-            q._LOAD_CACHE[(id(s), "/sf", "t")] = (s, None)
-            q._evict_lru_sessions()
-        assert len(q._CONF_DONE) == q._MAX_SESSIONS
-        kept = sessions[-q._MAX_SESSIONS:]
-        assert [q._CONF_DONE[id(s)] for s in kept] == kept
-        assert set(q._LOAD_CACHE) == {(id(s), "/sf", "t") for s in kept}
-    finally:
-        q._CONF_DONE.clear(), q._CONF_DONE.update(saved_conf)
-        q._LOAD_CACHE.clear(), q._LOAD_CACHE.update(saved_load)
+    from configdrivendatapipeline_spark.queries import load
+
+    refs = []
+    for _ in range(6):
+        s = spark.newSession()
+        load(s, sf_dir, "region")
+        refs.append(weakref.ref(s))
+    del s
+    spark.createDataFrame([(1,)], "x int")  # the primary is active again
+    gc.collect()
+    alive = [i for i, r in enumerate(refs) if r() is not None]
+    assert alive in ([], [5]), f"transient sessions still alive: {alive}"
 
 
-def test_session_cache_eviction_is_recency_ordered():
-    """A long-lived primary session that keeps getting used must
-    never be evicted by transient-session churn: touching a cached
-    session refreshes its recency, so eviction hits the
-    least-recently-TOUCHED session, not the first-seen one."""
-    from configdrivendatapipeline_spark import queries as q
+def test_scratch_parquet_needs_scratch_dir_off_local(spark, monkeypatch):
+    """On a non-local master the driver's tempdir is not storage every
+    executor can read, so scratch_parquet must refuse to run without
+    spark.cddp.scratchDir instead of writing files that are lost."""
+    from configdrivendatapipeline_spark import scratch
 
-    saved_conf, saved_load = dict(q._CONF_DONE), dict(q._LOAD_CACHE)
-    q._CONF_DONE.clear()
-    q._LOAD_CACHE.clear()
-    try:
-        primary, *churn = [object() for _ in range(q._MAX_SESSIONS + 2)]
-        q._CONF_DONE[id(primary)] = primary
-        for s in churn:
-            # touch primary between each new transient session, the
-            # way ensure_session_confs' move-to-end refresh does
-            q._CONF_DONE[id(primary)] = q._CONF_DONE.pop(id(primary))
-            q._CONF_DONE[id(s)] = s
-            q._evict_lru_sessions()
-        assert id(primary) in q._CONF_DONE, "primary evicted by churn"
-        assert len(q._CONF_DONE) == q._MAX_SESSIONS
-    finally:
-        q._CONF_DONE.clear(), q._CONF_DONE.update(saved_conf)
-        q._LOAD_CACHE.clear(), q._LOAD_CACHE.update(saved_load)
-
-
-def test_load_cache_hit_refreshes_recency():
-    """r14 advice: load()'s cache-hit fast path must ALSO refresh the
-    session's LRU recency — a primary session touched only via cached
-    loads would otherwise still be evictable by 4+ transient sessions,
-    voiding the recency guarantee the move-to-end refresh claims."""
-    from configdrivendatapipeline_spark import queries as q
-
-    saved_conf, saved_load = dict(q._CONF_DONE), dict(q._LOAD_CACHE)
-    q._CONF_DONE.clear()
-    q._LOAD_CACHE.clear()
-    try:
-        primary, *churn = [object() for _ in range(q._MAX_SESSIONS + 2)]
-        q._CONF_DONE[id(primary)] = primary
-        sentinel = object()
-        q._LOAD_CACHE[(id(primary), "/sf", "t")] = (primary, sentinel)
-        for s in churn:
-            # touch primary ONLY through the load() hit path
-            assert q.load(primary, "/sf", "t") is sentinel
-            q._CONF_DONE[id(s)] = s
-            q._evict_lru_sessions()
-        assert id(primary) in q._CONF_DONE, (
-            "primary evicted despite cached-load touches"
-        )
-        assert (id(primary), "/sf", "t") in q._LOAD_CACHE
-    finally:
-        q._CONF_DONE.clear(), q._CONF_DONE.update(saved_conf)
-        q._LOAD_CACHE.clear(), q._LOAD_CACHE.update(saved_load)
+    assert not spark.conf.get("spark.cddp.scratchDir", None)
+    monkeypatch.setattr(scratch, "_master", lambda s: "yarn")
+    with pytest.raises(RuntimeError, match="spark.cddp.scratchDir"):
+        scratch.scratch_parquet(spark.range(3), "guard")

@@ -19,27 +19,18 @@ from configdrivendatapipeline_spark.session import codegen_compiles
 LOOP_IDS = ("llm_dup_clusters", "llm_dup_pagerank")
 
 
-def _run_group(spark, sf_dir) -> int:
-    from configdrivendatapipeline_spark.queries import llm_q
-
+def _run_group(spark, sf_dir, memo) -> int:
     reg = registry()
     before = codegen_compiles(spark)
     for qid in LOOP_IDS:
-        llm_q._CC_CACHE.clear()
+        memo.pop("cc", None)
         reg[qid].build(spark, sf_dir).collect()
     return codegen_compiles(spark) - before
 
 
-def test_second_run_reuses_generated_classes(spark, sf_dir):
-    from configdrivendatapipeline_spark.queries import llm_q
-
-    saved = dict(llm_q._CC_CACHE)
-    try:
-        first = _run_group(spark, sf_dir)
-        second = _run_group(spark, sf_dir)
-    finally:
-        llm_q._CC_CACHE.clear()
-        llm_q._CC_CACHE.update(saved)
+def test_second_run_reuses_generated_classes(spark, sf_dir, memo):
+    first = _run_group(spark, sf_dir, memo)
+    second = _run_group(spark, sf_dir, memo)
     # The first run may find classes earlier tests compiled; the second
     # must find nearly all of its own. At Spark's default cache size
     # it compiled ~140, as many as the first. Not exactly zero: AQE

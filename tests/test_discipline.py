@@ -91,6 +91,29 @@ def test_no_rdd_in_engine():
     assert not violations, ".rdd access in engine code:\n" + "\n".join(violations)
 
 
+def test_no_id_keyed_session_state_in_engine():
+    """Per-session state has one way in: ``session.session_memo``,
+    which stores on the session object itself. A module dict keyed on
+    ``id(spark)`` needs its own guard against a collected session's id
+    being reused, and pins or leaks sessions unless it also brings its
+    own eviction."""
+    violations = []
+    for py in PKG.rglob("*.py"):
+        tree = ast.parse(py.read_text())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "id"
+                and any(
+                    isinstance(a, ast.Name) and a.id in ("spark", "session")
+                    for a in node.args
+                )
+            ):
+                violations.append(f"{py.relative_to(PKG.parent)}:{node.lineno}: id({node.args[0].id})")
+    assert not violations, "id()-keyed session state:\n" + "\n".join(violations)
+
+
 def test_survey_rows_and_window_names_resolve():
     """Contract hygiene: every SURVEY.md §2 operator row must name a
     registered query (a stale row is a false promise the judge
@@ -98,7 +121,7 @@ def test_survey_rows_and_window_names_resolve():
     must exist (a typo there silently reorders coverage)."""
     import re
 
-    from configdrivendatapipeline_spark.queries import registry, _ROUND18_WINDOW
+    from configdrivendatapipeline_spark.queries import registry, _ROTATION_WINDOW
 
     reg = set(registry())
     survey = (PKG.parent / "SURVEY.md").read_text()
@@ -111,10 +134,10 @@ def test_survey_rows_and_window_names_resolve():
     # TAIL via its fallback loop, which is exactly the silent
     # coverage loss this test exists to prevent.
     dupes = sorted(
-        n for n in set(_ROUND18_WINDOW) if _ROUND18_WINDOW.count(n) > 1
+        n for n in set(_ROTATION_WINDOW) if _ROTATION_WINDOW.count(n) > 1
     )
     assert not dupes, f"ordering-window ids listed twice: {dupes}"
-    missing = sorted(n for n in _ROUND18_WINDOW if n not in reg)
+    missing = sorted(n for n in _ROTATION_WINDOW if n not in reg)
     assert not missing, f"ordering-window ids not in registry: {missing}"
-    omitted = sorted(reg - set(_ROUND18_WINDOW))
+    omitted = sorted(reg - set(_ROTATION_WINDOW))
     assert not omitted, f"registry ids missing from ordering window: {omitted}"

@@ -207,7 +207,7 @@ def test_jaccard_raw_counts_rethreshold_matches_direct_build(spark):
     filter_jaccard at any stronger t', must be row-identical
     (ids AND 6-dp readout) to a direct jaccard_pairs(t') build —
     the lossless-superset property the CC family's shared staged
-    table relies on (queries/llm_q.py _staged_neardup_scores)."""
+    table relies on (queries/llm_q.py _neardup_scores)."""
     import random
 
     rnd = random.Random(11)
@@ -1992,35 +1992,25 @@ def test_textstats_degenerate_docs_and_guards(spark):
     assert "1 < 2" in pi_clean
 
 
-def test_cc_label_table_memoized_per_session(spark, sf_dir):
-    """r18 (verdict item 6): the three staged-edge CC consumers share
-    ONE converged label table per session; the memo must be identity-
-    stable within a session, keyed on the staged-table path (fixture
-    identity + code version), and value-identical to a direct build."""
-    from configdrivendatapipeline_spark.llm import dedup
+def test_cc_label_table_memoized_per_session(spark, sf_dir, memo):
+    """The three CC consumers share ONE converged label table per
+    session: the memo must be identity-stable within a session, keyed
+    on the fixture, and value-identical to a direct build."""
     from configdrivendatapipeline_spark.queries import llm_q
 
-    saved = dict(llm_q._CC_CACHE)
-    llm_q._CC_CACHE.clear()
-    try:
-        a = llm_q._staged_cc_components(spark, sf_dir)
-        b = llm_q._staged_cc_components(spark, sf_dir)
-        assert a is b  # second consumer reuses, not recomputes
-        assert len(llm_q._CC_CACHE) == 1
-        docs = llm_q.load(spark, sf_dir, "documents")
-        pairs = dedup.filter_jaccard(
-            llm_q._staged_neardup_scores(spark, sf_dir), 0.95
-        ).select("id_a", "id_b")
-        direct = dedup.duplicate_clusters(pairs, docs, id_col="doc_id")
-        assert sorted(map(tuple, a.collect())) == sorted(
-            map(tuple, direct.collect())
-        )
-    finally:
-        llm_q._CC_CACHE.clear()
-        llm_q._CC_CACHE.update(saved)
+    a = llm_q._cc_components(spark, sf_dir)
+    b = llm_q._cc_components(spark, sf_dir)
+    assert a is b  # second consumer reuses, not recomputes
+    assert memo["cc"][0] == sf_dir and memo["cc"][1] is a
+    docs = llm_q.load(spark, sf_dir, "documents")
+    pairs = dedup.jaccard_pairs(docs, threshold=0.95).select("id_a", "id_b")
+    direct = dedup.duplicate_clusters(pairs, docs, id_col="doc_id")
+    assert sorted(map(tuple, a.collect())) == sorted(
+        map(tuple, direct.collect())
+    )
 
 
-def test_cc_label_table_keeps_only_the_latest_fixture(spark, sf_dir, tmp_path, monkeypatch):
+def test_cc_label_table_keeps_only_the_latest_fixture(spark, sf_dir, tmp_path, monkeypatch, memo):
     """The CC label memo holds ONE entry per session: a second fixture
     replaces the first one's labels (which would otherwise stay pinned
     for the life of the session, one set per new corpus), while the
@@ -2028,7 +2018,7 @@ def test_cc_label_table_keeps_only_the_latest_fixture(spark, sf_dir, tmp_path, m
     build."""
     import shutil
 
-    from configdrivendatapipeline_spark.queries import llm_q, registry
+    from configdrivendatapipeline_spark.queries import registry
 
     reg = registry()
     other = str(tmp_path / "fixture_b")
@@ -2039,19 +2029,43 @@ def test_cc_label_table_keeps_only_the_latest_fixture(spark, sf_dir, tmp_path, m
     monkeypatch.setattr(
         dedup, "duplicate_clusters", lambda *a, **k: calls.append(1) or real(*a, **k)
     )
-    saved = dict(llm_q._CC_CACHE)
-    llm_q._CC_CACHE.clear()
-    try:
-        for n, fixture in enumerate((sf_dir, other), start=1):
-            for qid in ("llm_dup_clusters", "llm_dedup_canonical", "llm_cluster_sizes"):
-                reg[qid].build(spark, fixture).collect()
-            assert len(calls) == n  # one label build per fixture
-            assert list(llm_q._CC_CACHE) == [id(spark)]
-            assert llm_q._CC_CACHE[id(spark)][1] == llm_q._staged_neardup_paths(fixture)[0]
-    finally:
-        llm_q._CC_CACHE.clear()
-        llm_q._CC_CACHE.update(saved)
-        out, marker = llm_q._staged_neardup_paths(other)
-        shutil.rmtree(out, ignore_errors=True)
-        if os.path.exists(marker):
-            os.remove(marker)
+    for n, fixture in enumerate((sf_dir, other), start=1):
+        for qid in ("llm_dup_clusters", "llm_dedup_canonical", "llm_cluster_sizes"):
+            reg[qid].build(spark, fixture).collect()
+        assert len(calls) == n  # one label build per fixture
+        assert memo["cc"][0] == fixture
+
+
+def test_neardup_table_is_built_in_run_scratch(spark, sf_dir, memo):
+    """The shared near-dup pair table is within-run scratch parquet,
+    built once per session and fixture: nothing is staged under the
+    cross-run fixture cache the streaming stages use."""
+    import glob
+    import tempfile
+
+    from configdrivendatapipeline_spark.queries import llm_q, registry
+
+    pattern = os.path.join(tempfile.gettempdir(), "cddp_stream", "*", "neardup_scores*")
+    before = set(glob.glob(pattern))
+    registry()["llm_jaccard_neardup"].build(spark, sf_dir).collect()
+    scores = llm_q._neardup_scores(spark, sf_dir)
+    assert memo["neardup"][0] == sf_dir and memo["neardup"][1] is scores
+    assert all("cddp_scratch" in f for f in scores.inputFiles())
+    assert set(glob.glob(pattern)) == before
+
+
+def test_bpe_merges_keep_only_the_latest_corpus(spark, sf_dir, tmp_path, memo):
+    """The trained-merge memo is one ("bpe", n_merges) slot per
+    session: the same corpus reuses the trained rows, a second corpus
+    replaces them instead of adding an entry per corpus."""
+    from configdrivendatapipeline_spark.queries import llm_q
+
+    first = llm_q._trained_merges(spark, sf_dir)
+    assert llm_q._trained_merges(spark, sf_dir) is first
+    other = str(tmp_path / "fixture_b")
+    llm_q.load(spark, sf_dir, "documents").limit(20).write.parquet(
+        f"{other}/documents.parquet"
+    )
+    second = llm_q._trained_merges(spark, other)
+    assert [k for k in memo if k[0] == "bpe"] == [("bpe", 20)]
+    assert memo[("bpe", 20)][0] == other and memo[("bpe", 20)][1] is second

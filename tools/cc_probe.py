@@ -13,8 +13,10 @@ corpus scales with its pair table and cluster structure growing
 exactly k× — the shape a k×-larger real corpus has.
 
 Per factor it reports:
-- the staged PPJoin pair build (t=0.8 raw counts, the shared
-  artifact every family consumer reads): wall + pair count;
+- the PPJoin pair build (t=0.8 raw counts, the shared artifact every
+  family consumer reads, built once per session and fixture): wall +
+  pair count. Nothing is staged across runs, so every process pays
+  this build cold;
 - duplicate_clusters over the exact-filtered t=0.95 edges: wall,
   component count, and the PROPAGATION ROUND COUNT
   (dedup.LAST_CC_ROUNDS) — pointer-doubled min-label propagation
@@ -22,9 +24,9 @@ Per factor it reports:
   FLAT as rows grow k× (salting preserves per-replica cluster
   diameter); a round count growing with k would mean the iterative
   cost compounds with data size and the 100 TB story fails;
-- steady-state walls for the five registry consumers (staged pair
-  table warm — the per-query cost a census sees after the one
-  staging build per fixture).
+- steady-state walls for the five registry consumers (pair table
+  already built — the per-query cost a census sees after the one
+  build per fixture).
 
 Usage: python tools/cc_probe.py [--factors 1 5 25]
 """
@@ -58,23 +60,11 @@ def main() -> int:
                          "worth dropping at x25 — its warm run pays an "
                          "in-pipeline t=0.95 build of the SAME pair "
                          "artifact the build row already times)")
-    ap.add_argument("--cold", action="store_true",
-                    help="delete any pre-staged pair table (and its "
-                         "marker) before the timed build, so build_s "
-                         "is a true cold PPJoin build even on a "
-                         "fixture prior sweeps already staged")
     args = ap.parse_args()
-
-    import shutil
-
-    from pyspark.sql import functions as F  # noqa: F401
 
     from configdrivendatapipeline_spark.llm import dedup
     from configdrivendatapipeline_spark.queries import load, registry
-    from configdrivendatapipeline_spark.queries.llm_q import (
-        _staged_neardup_paths,
-        _staged_neardup_scores,
-    )
+    from configdrivendatapipeline_spark.queries.llm_q import _neardup_scores
     from configdrivendatapipeline_spark.session import get_spark
     from tools.scale_probe import stage
 
@@ -89,21 +79,8 @@ def main() -> int:
         docs = load(spark, sf_dir, "documents")
         n_docs = docs.count()
 
-        # Shared pair build. The staged state is READ (and with --cold,
-        # reset) before the timed call, so build_s is labeled rather
-        # than silently mixing cold PPJoin builds with warm parquet
-        # scans (r16 advice: at factor 1 BASE_SF is typically already
-        # staged by prior sweeps).
-        staged_dir, staged_marker = _staged_neardup_paths(sf_dir)
-        if args.cold and os.path.isdir(staged_dir):
-            shutil.rmtree(staged_dir, ignore_errors=True)
-            try:
-                os.remove(staged_marker)
-            except FileNotFoundError:
-                pass
-        build_label = "warm" if os.path.isdir(staged_dir) else "cold"
         t0 = time.monotonic()
-        scored = _staged_neardup_scores(spark, sf_dir)
+        scored = _neardup_scores(spark, sf_dir)
         n_pairs = scored.count()
         build_s = time.monotonic() - t0
 
@@ -116,7 +93,7 @@ def main() -> int:
 
         print(
             f"\nfactor x{factor}: docs={n_docs} pairs_t80={n_pairs} "
-            f"build={build_s:.1f}s ({build_label})  cc={cc_s:.1f}s "
+            f"build={build_s:.1f}s  cc={cc_s:.1f}s "
             f"rounds={rounds} components={n_comp}",
             flush=True,
         )

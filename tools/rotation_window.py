@@ -2,7 +2,7 @@
 
 The driver hash-checks the FIRST ~50 registry entries per round, so
 registry order is the correctness-coverage budget. The standing
-protocol (queries/__init__.py, the _ROUNDxx_WINDOW handoff comment):
+protocol (queries/__init__.py, the _ROTATION_WINDOW handoff comment):
 order ALL registry ids by how stale their latest driver hash-green
 evidence is — never-checked ids first, then oldest cohort first,
 alphabetical within a cohort. This tool computes that ordering

@@ -26,9 +26,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def _stage_markers() -> set[str]:
     """Fixture-staging markers currently on disk. Every scratch
-    fixture the queries stage (doubled streaming feeds, the near-dup
-    pair table, binary-file stages) lands under /tmp/cddp_stream/
-    <fixture-tag>/<name> with a ``<name>.staged`` marker, so the
+    fixture the queries stage (doubled streaming feeds, binary-file
+    stages) lands under <tempdir>/cddp_stream/<fixture-tag>/<name>
+    with a ``<name>.staged`` marker, so the
     marker set is the complete observable staging state."""
     return set(
         glob.glob(
@@ -76,8 +76,8 @@ def main() -> int:
     for name in names:
         # Snapshot the staging-marker set around each timed run: an id
         # that builds a scratch fixture inside its window (a doubled
-        # streaming feed, the near-dup pair table) pays that one-off
-        # build in ITS census seconds on a cold /tmp. Annotating the
+        # streaming feed) pays that one-off build in ITS census
+        # seconds on a cold tempdir. Annotating the
         # line makes the census-vs-steady gap attributable
         # mechanically (r16 verdict item 8: stream_dedup_watermark's
         # 16 s census / 2.2 s steady needed a human to explain).
