@@ -89,9 +89,9 @@ def read_source(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
         if streaming and os.path.isfile(path):
             # FileStreamSource monitors directories; stage a bare
             # file behind a symlinked dir.
-            from configdrivendatapipeline_spark.streaming.ops import _stage_dir
+            from configdrivendatapipeline_spark.streaming.ops import file_stream_dir
 
-            path = _stage_dir(path)
+            path = file_stream_dir(spark, path)
         df = reader.load(path)
     elif fmt == "jdbc":
         reader = (

@@ -3163,6 +3163,30 @@ def llm_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def binary_file_stage(spark: SparkSession, sf_dir: str) -> str:
+    """One payload file per doc (doc_id < 60), staged once per session
+    and fixture; src_binaryfile and pipeline_mm_ingest both read it."""
+
+    def stage() -> str:
+        path = scratch.run_path(spark, "binary_files", local=True)
+        docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
+        os.makedirs(path)
+
+        # Stage EXECUTOR-SIDE (foreach, not collect): each task writes
+        # its partition's payload files — the shape a real media dump
+        # to shared storage has; no row data ever lands on the driver.
+        def _write_payload(row) -> None:
+            with open(
+                os.path.join(path, f"doc_{row['doc_id']:06d}.bin"), "wb"
+            ) as f:
+                f.write(bytes(row["payload"]))
+
+        multimodal.attach_mixed_payload(docs).foreach(_write_payload)
+        return path
+
+    return session_memo(spark, "binary_files", sf_dir, stage)
+
+
 @declare(
     "src_binaryfile",
     """
@@ -3200,28 +3224,7 @@ def llm_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Oracle recomputes modality and exact byte size analytically.",
 )
 def src_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from configdrivendatapipeline_spark.queries.streaming_q import _scratch
-
-    stage = _scratch(sf_dir, "binary_files", src_table="documents")
-    marker = stage + ".staged"
-    if not os.path.exists(marker):
-        docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-        os.makedirs(stage, exist_ok=True)
-
-        # Stage EXECUTOR-SIDE (foreach, not collect): each task writes
-        # its partition's payload files — the shape a real media dump
-        # to shared storage has; no row data ever lands on the driver.
-        def _write_payload(row) -> None:
-            with open(
-                os.path.join(stage, f"doc_{row['doc_id']:06d}.bin"), "wb"
-            ) as f:
-                f.write(bytes(row["payload"]))
-
-        multimodal.attach_mixed_payload(docs).foreach(_write_payload)
-        with open(marker, "w") as f:
-            f.write("ok")
+    stage = binary_file_stage(spark, sf_dir)
     read = (
         spark.read.format("binaryFile")
         .load(stage)

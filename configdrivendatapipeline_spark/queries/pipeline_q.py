@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from configdrivendatapipeline_spark.compiler import compile_pipeline
 from configdrivendatapipeline_spark.config.loader import load_pipeline_str
 from configdrivendatapipeline_spark.queries import declare, ensure_session_confs
+from configdrivendatapipeline_spark.scratch import run_path
 
 _SEC = "3.1"
 
@@ -1200,13 +1201,10 @@ steps:
     "query.",
 )
 def pipeline_include(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
-    import tempfile
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    frag_dir = os.path.join(tempfile.gettempdir(), "cddp_fragments", tag)
-    os.makedirs(frag_dir, exist_ok=True)
+    frag_dir = run_path(spark, "fragments", local=True)
+    os.makedirs(frag_dir)
     frag = os.path.join(frag_dir, "solvent_customers.yaml")
     with open(frag, "w") as f:
         f.write(
@@ -1568,12 +1566,9 @@ steps:
 )
 def pipeline_mm_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Reuse src_binaryfile's staged directory (stages on first use).
-    from configdrivendatapipeline_spark.queries.llm_q import src_binaryfile
+    from configdrivendatapipeline_spark.queries.llm_q import binary_file_stage
 
-    src_binaryfile(spark, sf_dir)  # ensure files are staged (lazy marker)
-    from configdrivendatapipeline_spark.queries.streaming_q import _scratch
-
-    stage = _scratch(sf_dir, "binary_files", src_table="documents")
+    stage = binary_file_stage(spark, sf_dir)
     yml = f"""
 pipeline:
   name: mm_ingest
@@ -2231,9 +2226,7 @@ from configdrivendatapipeline_spark.queries.llm_q import _opagerank_iter  # noqa
     "one CTE chain, hash-exact.",
 )
 def pipeline_dedup_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from configdrivendatapipeline_spark.queries.streaming_q import _scratch
-
-    stage = _scratch(sf_dir, "dedup_reuse_pairs", src_table="documents")
+    stage = run_path(spark, "dedup_reuse_pairs")
     yml = f"""
 pipeline:
   name: dedup_reuse

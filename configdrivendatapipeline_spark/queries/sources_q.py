@@ -1,8 +1,8 @@
 """SURVEY.md §2.1 — source and sink operators.
 
 Pattern: each query materializes the driver's parquet into the
-target format under a deterministic scratch dir (idempotent,
-content-identical re-writes), reads it back through the engine's
+target format under a fresh path in the run's scratch directory
+(``scratch.run_path``), reads it back through the engine's
 ``read_source``/``write_sink`` layer, and the oracle simply selects
 the same rows from the parquet view — a full round-trip equality
 check, stronger than the "rows-only read-back" floor in SURVEY §2.1.
@@ -14,22 +14,17 @@ networked RDBMS — only the URL changes).
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from configdrivendatapipeline_spark.io import read_source, write_sink
 from configdrivendatapipeline_spark.queries import declare, load
+from configdrivendatapipeline_spark.scratch import run_path
+from configdrivendatapipeline_spark.session import session_memo
 
 _SEC = "2.1"
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), "cddp_scratch", tag, name)
 
 
 @declare(
@@ -52,7 +47,7 @@ def src_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     "CSV scan (header, explicit schema) after a lossless round-trip.",
 )
 def src_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "nation_csv")
+    path = run_path(spark, "nation_csv")
     nat = load(spark, sf_dir, "nation")
     write_sink(
         nat,
@@ -76,7 +71,7 @@ def src_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "JSON-lines scan (schema'd — inference would widen ints).",
 )
 def src_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "supplier_json")
+    path = run_path(spark, "supplier_json")
     sup = load(spark, sf_dir, "supplier")
     write_sink(sup, {"format": "json", "path": path, "mode": "overwrite"})
     return read_source(
@@ -96,10 +91,8 @@ def src_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Raw text-line source (one string column named value).",
 )
 def src_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "region_txt")
-    load(spark, sf_dir, "region").select("r_name").coalesce(1).write.mode(
-        "overwrite"
-    ).text(path)
+    path = run_path(spark, "region_txt")
+    load(spark, sf_dir, "region").select("r_name").coalesce(1).write.text(path)
     return read_source(spark, {"format": "text", "path": path})
 
 
@@ -158,7 +151,7 @@ def src_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "column type survives directory-encoding round-trip).",
 )
 def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "nation_part_parquet")
+    path = run_path(spark, "nation_part_parquet")
     nat = load(spark, sf_dir, "nation")
     write_sink(
         nat,
@@ -182,7 +175,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     "CSV sink verified by schema'd read-back.",
 )
 def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "customer_csv_sink")
+    path = run_path(spark, "customer_csv_sink")
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
     write_sink(
         cust,
@@ -206,7 +199,7 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "JSON sink verified by schema'd read-back.",
 )
 def sink_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "part_json_sink")
+    path = run_path(spark, "part_json_sink")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_name", "p_retailprice")
     write_sink(p, {"format": "json", "path": path, "mode": "overwrite"})
     return read_source(
@@ -233,7 +226,7 @@ def sink_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     "replaces only that partition, leaving the others intact.",
 )
 def sink_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "orders_dyn_overwrite")
+    path = run_path(spark, "orders_dyn_overwrite")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -274,7 +267,7 @@ def sink_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(columnar alternative to parquet).",
 )
 def src_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "part_orc")
+    path = run_path(spark, "part_orc")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_name", "p_size")
     write_sink(p, {"format": "orc", "path": path, "mode": "overwrite"})
     return read_source(spark, {"format": "orc", "path": path})
@@ -367,6 +360,23 @@ def layout_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _orders_by_priority(spark: SparkSession, sf_dir: str) -> str:
+    """orders partitioned by priority, staged once per session and
+    fixture for the two pruning proofs."""
+
+    def stage() -> str:
+        path = run_path(spark, "orders_by_priority")
+        (
+            load(spark, sf_dir, "orders")
+            .select("o_orderkey", "o_custkey", "o_orderpriority")
+            .write.partitionBy("o_orderpriority")
+            .parquet(path)
+        )
+        return path
+
+    return session_memo(spark, "orders_by_priority", sf_dir, stage)
+
+
 @declare(
     "src_partition_pruning",
     """
@@ -387,17 +397,7 @@ def src_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import io as _io
     from contextlib import redirect_stdout
 
-    path = _scratch(sf_dir, "orders_by_priority")
-    marker = path + ".staged"
-    if not os.path.exists(marker):
-        (
-            load(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_orderpriority")
-            .write.mode("overwrite")
-            .partitionBy("o_orderpriority")
-            .parquet(path)
-        )
-        open(marker, "w").close()
+    path = _orders_by_priority(spark, sf_dir)
     df = (
         spark.read.parquet(path)
         .filter(F.col("o_orderpriority") == "1-URGENT")
@@ -432,10 +432,9 @@ def src_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mis-parses either way fails the hash, not just a count.",
 )
 def src_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents").select("doc_id", "lang")
-    path = _scratch(sf_dir, "docs_corrupt_csv")
-    marker = path + ".staged"
-    if not os.path.exists(marker):
+    def stage() -> str:
+        path = run_path(spark, "docs_corrupt_csv")
+        docs = load(spark, sf_dir, "documents").select("doc_id", "lang")
         # good rows: "id,lang"; corrupted rows: missing the delimiter
         # (wrong arity) so the int cast of field 0 fails
         line = F.when(
@@ -444,10 +443,10 @@ def src_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(
             F.concat(F.col("doc_id").cast("string"), F.lit(","), F.col("lang"))
         )
-        docs.select(line.alias("value")).coalesce(1).write.mode(
-            "overwrite"
-        ).text(path)
-        open(marker, "w").close()
+        docs.select(line.alias("value")).coalesce(1).write.text(path)
+        return path
+
+    path = session_memo(spark, "docs_corrupt_csv", sf_dir, stage)
     schema = "doc_id BIGINT, lang STRING, _corrupt STRING"
     read = (
         spark.read.schema(schema)
@@ -485,16 +484,10 @@ def src_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     "states the per-batch expectation exactly.",
 )
 def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    path = _scratch(sf_dir, "docs_schema_evolved")
-    marker = path + ".staged"
-    if not os.path.exists(marker):
-        (
-            docs.filter(F.col("doc_id") % 2 == 0)
-            .select("doc_id", "lang")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+    def stage() -> str:
+        path = run_path(spark, "docs_schema_evolved")
+        docs = load(spark, sf_dir, "documents")
+        docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.parquet(path)
         (
             docs.filter(F.col("doc_id") % 2 == 1)
             .select(
@@ -507,7 +500,9 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("append")
             .parquet(path)
         )
-        open(marker, "w").close()
+        return path
+
+    path = session_memo(spark, "docs_schema_evolved", sf_dir, stage)
     return (
         spark.read.option("mergeSchema", "true")
         .parquet(path)
@@ -539,17 +534,7 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     import io as _io
     from contextlib import redirect_stdout
 
-    path = _scratch(sf_dir, "orders_by_priority")
-    marker = path + ".staged"
-    if not os.path.exists(marker):
-        (
-            load(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_orderpriority")
-            .write.mode("overwrite")
-            .partitionBy("o_orderpriority")
-            .parquet(path)
-        )
-        open(marker, "w").close()
+    path = _orders_by_priority(spark, sf_dir)
     fact = spark.read.parquet(path)
     dim = (
         load(spark, sf_dir, "orders")
@@ -590,25 +575,25 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Oracle states the exact expected contents per file.",
 )
 def src_text_wholefile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 50 == 0)
-    path = _scratch(sf_dir, "docs_wholefile")
-    marker = path + ".staged"
-    if not os.path.exists(marker):
+    def stage() -> str:
         # Fixture staging reads the parquet via pyarrow directly —
         # no Spark driver materialization in the engine package.
         import pyarrow.parquet as pq
 
+        path = run_path(spark, "docs_wholefile", local=True)
         t = pq.read_table(
             f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
         )
-        os.makedirs(path, exist_ok=True)
+        os.makedirs(path)
         for doc_id, text in zip(
             t.column("doc_id").to_pylist(), t.column("text").to_pylist()
         ):
             if doc_id % 50 == 0:
                 with open(os.path.join(path, f"{doc_id}.txt"), "w") as f:
                     f.write(text)
-        open(marker, "w").close()
+        return path
+
+    path = session_memo(spark, "docs_wholefile", sf_dir, stage)
     read = (
         spark.read.option("wholetext", "true")
         .text(path)
@@ -633,7 +618,7 @@ def src_text_wholefile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "CSV/JSON/ORC sources.",
 )
 def src_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "supplier_xml")
+    path = run_path(spark, "supplier_xml")
     sup = load(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
@@ -670,7 +655,7 @@ def src_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     "column type survives the round trip via explicit cast.",
 )
 def sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "supplier_orc_sink")
+    path = run_path(spark, "supplier_orc_sink")
     sup = load(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_acctbal", "s_nationkey"
     )

@@ -13,14 +13,14 @@ streaming partial aggregation order can't flip hashes.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from configdrivendatapipeline_spark.queries import declare, load
+from configdrivendatapipeline_spark.scratch import run_path
+from configdrivendatapipeline_spark.session import session_memo
 from configdrivendatapipeline_spark.streaming import (
     note_stream_source,
     run_available_now,
@@ -30,16 +30,6 @@ from configdrivendatapipeline_spark.streaming import (
 _SEC = "2.10"
 
 _VU = "CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)"
-
-
-def _scratch(sf_dir: str, name: str, src_table: str = "events") -> str:
-    """Scratch dir keyed on the source file's identity, not just its
-    path (see streaming.ops.file_identity_tag — the shared keying
-    rule that tracks in-place fixture regeneration)."""
-    from configdrivendatapipeline_spark.streaming.ops import file_identity_tag
-
-    tag = file_identity_tag(f"{sf_dir}/{src_table}.parquet")
-    return os.path.join(tempfile.gettempdir(), "cddp_stream", tag, name)
 
 
 @declare(
@@ -202,30 +192,31 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from configdrivendatapipeline_spark.queries import ensure_session_confs
 
     ensure_session_confs(spark)
-    ev = load(spark, sf_dir, "events")
-    feed = _scratch(sf_dir, "events_two_batch")
-    marker = feed + ".staged"  # outside the dir the stream monitors
-    if not os.path.exists(marker):
-        # Stage once per sf_dir: two time-ordered parquet files. The
-        # cut at max(ts) − 2 h puts every batch-2 row AFTER batch 1's
-        # watermark (max(b1) − 10 min), so nothing is late-dropped and
-        # the final result equals the batch aggregate of closed
-        # windows. Driver-side file shuffling only — row data never
-        # leaves the executors.
+
+    def stage() -> str:
+        # Two time-ordered parquet files. The cut at max(ts) − 2 h
+        # puts every batch-2 row AFTER batch 1's watermark
+        # (max(b1) − 10 min), so nothing is late-dropped and the final
+        # result equals the batch aggregate of closed windows.
+        # Driver-side file shuffling only — row data never leaves the
+        # executors.
+        ev = load(spark, sf_dir, "events")
+        feed = run_path(spark, "events_two_batch", local=True)
         cut = ev.agg(
             (F.max("ts") - F.expr("INTERVAL 2 HOURS")).alias("c")
         ).collect()[0]["c"]
-        shutil.rmtree(feed, ignore_errors=True)
         for i, part in enumerate(
             (ev.filter(F.col("ts") <= F.lit(cut)), ev.filter(F.col("ts") > F.lit(cut)))
         ):
             d = os.path.join(feed, f"_part{i}")
-            part.coalesce(1).write.mode("overwrite").parquet(d)
+            part.coalesce(1).write.parquet(d)
             src = glob.glob(os.path.join(d, "part-*.parquet"))[0]
             # lexicographic AND mtime order == event-time order
             shutil.move(src, os.path.join(feed, f"{i:04d}.parquet"))
             shutil.rmtree(d)
-        open(marker, "w").close()
+        return feed
+
+    feed = session_memo(spark, "events_two_batch", sf_dir, stage)
     from configdrivendatapipeline_spark.queries import normalize_ts
 
     schema = spark.read.parquet(os.path.join(feed, "0000.parquet")).schema
@@ -255,9 +246,9 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Manufacture an at-least-once feed: every event delivered twice.
-    path = _scratch(sf_dir, "events_doubled")
+    path = run_path(spark, "events_doubled")
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    ev.unionByName(ev).write.mode("overwrite").parquet(path)
+    ev.unionByName(ev).write.parquet(path)
     static = spark.read.parquet(path)
     note_stream_source(spark, path)
     sdf = spark.readStream.schema(static.schema).parquet(path)
@@ -322,10 +313,7 @@ def stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from configdrivendatapipeline_spark.io import write_sink
 
-    out = _scratch(sf_dir, "purchases_feb")
-    import shutil
-
-    shutil.rmtree(out, ignore_errors=True)
+    out = run_path(spark, "purchases_feb")
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
         write_sink(
@@ -547,11 +535,13 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events.",
 )
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "events_doubled_wm")
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
-    if not os.path.exists(path + ".staged"):
-        ev.unionByName(ev).write.mode("overwrite").parquet(path)
-        open(path + ".staged", "w").close()
+    def stage() -> str:
+        path = run_path(spark, "events_doubled_wm")
+        ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
+        ev.unionByName(ev).write.parquet(path)
+        return path
+
+    path = session_memo(spark, "events_doubled_wm", sf_dir, stage)
     static = spark.read.parquet(path)
     from configdrivendatapipeline_spark.queries import normalize_ts
 
@@ -582,10 +572,8 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     "what makes a crashed streaming job resume without re-emitting.",
 )
 def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _scratch(sf_dir, "stream_parquet_out")
-    ckpt = _scratch(sf_dir, "stream_parquet_ckpt")
-    marker = out + ".done"
-    if not os.path.exists(marker):
+    def drain() -> str:
+        out = run_path(spark, "stream_parquet_out")
         sdf = (
             stream_events(spark, sf_dir)
             .filter(F.col("event_type").isin("click", "purchase"))
@@ -594,14 +582,15 @@ def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             sdf.writeStream.format("parquet")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", run_path(spark, "stream_parquet_ckpt"))
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-        open(marker, "w").close()
-    return spark.read.parquet(out)
+        return out
+
+    return spark.read.parquet(session_memo(spark, "stream_parquet_out", sf_dir, drain))
 
 
 @declare(
@@ -622,12 +611,12 @@ def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     "RocksDB and the key is the 128-bit hash, not the text.",
 )
 def stream_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "docs_doubled", src_table="documents")
+    path = run_path(spark, "docs_doubled")
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     feed = docs.unionByName(
         docs.withColumn("doc_id", F.col("doc_id") + 1_000_000)
     )
-    feed.write.mode("overwrite").parquet(path)
+    feed.write.parquet(path)
     static = spark.read.parquet(path)
     note_stream_source(spark, path)
     sdf = spark.readStream.schema(static.schema).parquet(path)
@@ -677,12 +666,12 @@ def stream_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from configdrivendatapipeline_spark.llm.textstats import quality_score
 
-    path = _scratch(sf_dir, "docs_quality_feed", src_table="documents")
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    if not os.path.exists(path + ".staged"):
-        docs.write.mode("overwrite").parquet(path)
-        with open(path + ".staged", "w") as f:
-            f.write("ok")
+    def stage() -> str:
+        path = run_path(spark, "docs_quality_feed")
+        load(spark, sf_dir, "documents").select("doc_id", "text").write.parquet(path)
+        return path
+
+    path = session_memo(spark, "docs_quality_feed", sf_dir, stage)
     static = spark.read.parquet(path)
     note_stream_source(spark, path)
     sdf = spark.readStream.schema(static.schema).parquet(path)
@@ -750,63 +739,46 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "processes only the unseen files — no reprocessing, no loss. "
     "The final sink equals the one-shot batch aggregate "
     "(hash-checked), which is exactly the guarantee the offset log "
-    "in the checkpoint exists to provide. Idempotent staging keyed "
-    "on the fixture's identity; re-drains are no-ops.",
+    "in the checkpoint exists to provide. Staged and drained once "
+    "per session and fixture.",
 )
 def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
-    import hashlib
-    import os
     import shutil
-    import tempfile
 
-    ev_path = f"{sf_dir}/events.parquet"
-    st = os.stat(ev_path)
-    tag = hashlib.md5(
-        f"ckptresume:{ev_path}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), "cddp_ckpt_resume", tag)
-    src = os.path.join(base, "src")
-    sink = os.path.join(base, "sink")
-    ckpt = os.path.join(base, "ckpt")
-    stage = os.path.join(base, "stage")
-    os.makedirs(src, exist_ok=True)
-    static = load(spark, sf_dir, "events").select(
-        "event_id", "event_type", F.expr(_VU).alias("vu")
-    )
-    halves = [
-        static.filter(F.col("event_id") % 2 == 0),
-        static.filter(F.col("event_id") % 2 == 1),
-    ]
     schema = "event_id BIGINT, event_type STRING, vu BIGINT"
 
-    def arrive(i: int) -> None:
-        marker = os.path.join(base, f"_arrived{i}")
-        if os.path.exists(marker):
-            return
-        hdir = os.path.join(stage, f"half{i}")
-        halves[i].write.mode("overwrite").parquet(hdir)
-        for j, f in enumerate(sorted(glob.glob(os.path.join(hdir, "part-*.parquet")))):
-            shutil.copyfile(f, os.path.join(src, f"half{i}-{j}.parquet"))
-        open(marker, "w").write("ok")
-
-    def drain() -> None:
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    def stage() -> str:
+        base = run_path(spark, "ckpt_resume", local=True)
+        src, sink, ckpt, halves_dir = (
+            os.path.join(base, n) for n in ("src", "sink", "ckpt", "stage")
         )
-        q.awaitTermination()
+        os.makedirs(src)
+        static = load(spark, sf_dir, "events").select(
+            "event_id", "event_type", F.expr(_VU).alias("vu")
+        )
+        for i in (0, 1):
+            # half i arrives...
+            hdir = os.path.join(halves_dir, f"half{i}")
+            static.filter(F.col("event_id") % 2 == i).write.parquet(hdir)
+            for j, f in enumerate(sorted(glob.glob(os.path.join(hdir, "part-*.parquet")))):
+                shutil.copyfile(f, os.path.join(src, f"half{i}-{j}.parquet"))
+            # ...and a new query on the SAME checkpoint drains it: the
+            # first run sees only half 0, the resumed run ONLY half 1.
+            q = (
+                spark.readStream.schema(schema)
+                .parquet(src)
+                .writeStream.format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return sink
 
-    arrive(0)
-    drain()  # first run: sees only half 0
-    arrive(1)
-    drain()  # resumed run: same checkpoint, processes ONLY half 1
+    sink = session_memo(spark, "ckpt_resume", sf_dir, stage)
     out = spark.read.parquet(sink)
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),

@@ -10,14 +10,14 @@ semantics, then stops).
 
 from __future__ import annotations
 
-import hashlib
 import math
 import os
-import tempfile
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from configdrivendatapipeline_spark.scratch import run_path
 from configdrivendatapipeline_spark.session import session_memo
 
 #: Per-session memo slot holding the source bytes noted since the last
@@ -90,45 +90,22 @@ def scaled_stream_partitions(spark: SparkSession, total_bytes: int) -> int:
     return max(floor, min(dp, math.ceil(total_bytes / max(adv, 1))))
 
 
-def file_identity_tag(path: str) -> str:
-    """Short tag of a file's identity (abspath + mtime + size).
-
-    The ONE keying rule for every streaming scratch dir: the driver
-    regenerates fixtures IN PLACE between rounds, and a path-keyed
-    stage marker would silently replay the previous round's rows.
-    Absolute path, because a relative one would stat fine
-    (cwd-relative) but symlink-resolve against the scratch dir."""
+def file_stream_dir(spark: SparkSession, path: str) -> str:
+    """FileStreamSource monitors directories; a bare source file is
+    symlinked into a run-directory stage, once per session and file."""
     path = os.path.abspath(path)
-    try:
-        st = os.stat(path)
-        ident = f"{path}:{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        ident = path
-    return hashlib.md5(ident.encode()).hexdigest()[:10]
 
-
-def _stage_dir(path: str) -> str:
-    """FileStreamSource wants a directory; the fixture is one parquet
-    file. Stage it (symlink; idempotent) into a scratch dir keyed on
-    the file's identity — a symlink tracks in-place regeneration, but
-    the copyfile fallback would not, and the driver has regenerated
-    fixtures between rounds."""
-    path = os.path.abspath(path)
-    d = os.path.join(
-        tempfile.gettempdir(), "cddp_stream_src", file_identity_tag(path)
-    )
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, os.path.basename(path))
-    # lexists, not exists: exists() follows a dangling symlink and
-    # would re-attempt the symlink into EEXIST.
-    if not os.path.lexists(link):
+    def stage() -> str:
+        d = run_path(spark, "stream_src", local=True)
+        os.makedirs(d)
+        link = os.path.join(d, os.path.basename(path))
         try:
             os.symlink(path, link)
         except OSError:
-            import shutil
-
             shutil.copyfile(path, link)
-    return d
+        return d
+
+    return session_memo(spark, "stream_src", path, stage)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,7 +122,9 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     static = spark.read.parquet(path)
     note_stream_source(spark, path)
     sdf = (
-        spark.readStream.schema(static.schema).format("parquet").load(_stage_dir(path))
+        spark.readStream.schema(static.schema)
+        .format("parquet")
+        .load(file_stream_dir(spark, path))
     )
     return normalize_ts(sdf)
 
@@ -196,4 +175,8 @@ def run_available_now(
     finally:
         if target is not None and prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sdf.sparkSession.table(name)
+    out = spark.table(name)
+    # The frame keeps the sink's rows; the view would pin them for the
+    # life of the session.
+    spark.catalog.dropTempView(name)
+    return out

@@ -114,6 +114,22 @@ def test_no_id_keyed_session_state_in_engine():
     assert not violations, "id()-keyed session state:\n" + "\n".join(violations)
 
 
+def test_only_scratch_chooses_temp_dirs():
+    """scratch.py is the one module that picks a directory for files
+    the engine writes (its per-process run directory, removed at
+    exit). A temp-dir call anywhere else starts a second root: files
+    shared between processes, or left behind after them."""
+    temp_calls = {"gettempdir", "mkdtemp", "TemporaryDirectory"}
+    violations = [
+        f"{py.relative_to(PKG.parent)}:{line}: {name}()"
+        for py in PKG.rglob("*.py")
+        if py.relative_to(PKG).as_posix() != "scratch.py"
+        for name, line in _called_names(ast.parse(py.read_text()))
+        if name in temp_calls
+    ]
+    assert not violations, "temp dirs chosen outside scratch.py:\n" + "\n".join(violations)
+
+
 def test_survey_rows_and_window_names_resolve():
     """Contract hygiene: every SURVEY.md §2 operator row must name a
     registered query (a stale row is a false promise the judge

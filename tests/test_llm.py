@@ -2037,21 +2037,16 @@ def test_cc_label_table_keeps_only_the_latest_fixture(spark, sf_dir, tmp_path, m
 
 
 def test_neardup_table_is_built_in_run_scratch(spark, sf_dir, memo):
-    """The shared near-dup pair table is within-run scratch parquet,
-    built once per session and fixture: nothing is staged under the
-    cross-run fixture cache the streaming stages use."""
-    import glob
-    import tempfile
-
+    """The shared near-dup pair table is scratch parquet in the
+    process's run directory, built once per session and fixture."""
     from configdrivendatapipeline_spark.queries import llm_q, registry
+    from configdrivendatapipeline_spark.scratch import run_dir
 
-    pattern = os.path.join(tempfile.gettempdir(), "cddp_stream", "*", "neardup_scores*")
-    before = set(glob.glob(pattern))
     registry()["llm_jaccard_neardup"].build(spark, sf_dir).collect()
     scores = llm_q._neardup_scores(spark, sf_dir)
     assert memo["neardup"][0] == sf_dir and memo["neardup"][1] is scores
-    assert all("cddp_scratch" in f for f in scores.inputFiles())
-    assert set(glob.glob(pattern)) == before
+    root = run_dir(spark)
+    assert all(f"{root}/neardup_scores" in f for f in scores.inputFiles())
 
 
 def test_bpe_merges_keep_only_the_latest_corpus(spark, sf_dir, tmp_path, memo):

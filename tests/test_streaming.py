@@ -274,3 +274,24 @@ def test_run_available_now_restores_shuffle_conf(spark, sf_dir):
     )
     assert out.count() > 0
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_run_available_now_leaves_no_memory_sink_view(spark, sf_dir):
+    """Each drain's memory sink is registered as a temp view; the view
+    is dropped once the returned frame is built, so repeated drains do
+    not pin their result rows for the life of the session. The frame
+    still holds the sink's rows."""
+    from configdrivendatapipeline_spark.queries import registry
+
+    def stream_views():
+        return {
+            r.viewName
+            for r in spark.sql("SHOW VIEWS").collect()
+            if r.viewName.startswith("stream_")
+        }
+
+    before = stream_views()
+    build = registry()["stream_tumbling"].build
+    runs = [sorted(build(spark, sf_dir).collect()) for _ in range(3)]
+    assert stream_views() == before
+    assert runs[0] and runs[0] == runs[1] == runs[2]

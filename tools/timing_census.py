@@ -14,27 +14,22 @@ Usage: python tools/timing_census.py [--sf DIR] [--top 15] [names...]
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _stage_markers() -> set[str]:
-    """Fixture-staging markers currently on disk. Every scratch
-    fixture the queries stage (doubled streaming feeds, binary-file
-    stages) lands under <tempdir>/cddp_stream/<fixture-tag>/<name>
-    with a ``<name>.staged`` marker, so the
-    marker set is the complete observable staging state."""
-    return set(
-        glob.glob(
-            os.path.join(tempfile.gettempdir(), "cddp_stream", "*", "*.staged")
-        )
-    )
+def _run_entries(spark) -> set[str]:
+    """Entries of the process's scratch run directory. Everything the
+    engine stages (doubled streaming feeds, binary-file stages,
+    scratch parquet) lands there as ``<name>-<8 hex>``, so the entry
+    set is the complete observable staging state."""
+    from configdrivendatapipeline_spark.scratch import run_dir
+
+    return set(os.listdir(run_dir(spark)))
 
 
 def main() -> int:
@@ -74,22 +69,21 @@ def main() -> int:
         print(f"warm-up skip (documents): {str(exc)[:120]}", file=sys.stderr)
     out = []
     for name in names:
-        # Snapshot the staging-marker set around each timed run: an id
+        # Snapshot the run directory around each timed run: an id
         # that builds a scratch fixture inside its window (a doubled
         # streaming feed) pays that one-off build in ITS census
-        # seconds on a cold tempdir. Annotating the
+        # seconds; later ids of the session reuse it. Annotating the
         # line makes the census-vs-steady gap attributable
         # mechanically (r16 verdict item 8: stream_dedup_watermark's
         # 16 s census / 2.2 s steady needed a human to explain).
-        pre_markers = _stage_markers()
+        pre_entries = _run_entries(spark)
         t0 = time.monotonic()
         try:
             n = reg[name].build(spark, args.sf).count()
             sec = round(time.monotonic() - t0, 2)
             rec = {"name": name, "sec": sec, "rows": n}
             staged = sorted(
-                os.path.basename(m)[: -len(".staged")]
-                for m in _stage_markers() - pre_markers
+                {e.rsplit("-", 1)[0] for e in _run_entries(spark) - pre_entries}
             )
             if staged:
                 rec["cold_stage"] = staged
