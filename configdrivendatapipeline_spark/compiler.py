@@ -1152,17 +1152,20 @@ def _pack_manifest(spark, dfs, p):
 @op("bpe_train")
 def _bpe_train(spark, dfs, p):
     """Train a BPE merge table from the input corpus — emits the
-    (step, pair, n) artifact. ``mode: distributed`` (default) is the
-    exact sequential trainer (llm.bpe.bpe_train — one vocab-table
-    job per merge, hash-replayable by the SQL oracle);
-    ``mode: local`` is production recipe #1 (SCALING.md): Spark runs
-    the one corpus-sized word-frequency job, the merge loop runs
-    in-memory on the collected vocab — bit-identical artifact,
+    (step, pair, n) artifact. ``mode: distributed`` (default) is
+    llm.bpe.bpe_train at ``batch_size=1``: the exact trainer, one
+    vocab-table job per merge, hash-replayable by the SQL oracle.
+    ``mode: batched`` is the same loop applying ``batch_size``
+    (default 64) disjoint merges per job — production recipe #2
+    (SCALING.md). ``mode: local`` is production recipe #1: Spark
+    runs the one corpus-sized word-frequency job, the merge loop
+    runs in-memory on the collected vocab — bit-identical artifact,
     minutes instead of ~13 h at 32k merges. ``max_vocab`` (local
-    only) caps training to the top-K words by frequency."""
+    only) caps training to the top-K words by frequency. Both
+    trainers return driver rows; this op makes the one frame."""
     from configdrivendatapipeline_spark.llm.bpe import (
         bpe_train,
-        bpe_train_local_table,
+        bpe_train_local,
     )
 
     mode = p.get("mode", "distributed")
@@ -1181,6 +1184,9 @@ def _bpe_train(spark, dfs, p):
         raise ValueError("bpe_train max_vocab requires mode: local")
     if p.get("batch_size") is not None and mode != "batched":
         raise ValueError("bpe_train batch_size requires mode: batched")
+    df = _one(dfs)
+    text_col = p.get("text_column", "text")
+    n_merges = int(p.get("n_merges", 20))
     if mode == "local":
         # An absent max_vocab inherits bpe.DEFAULT_MAX_VOCAB (1M): the
         # driver-side vocab collect is bounded by default, and the
@@ -1190,26 +1196,11 @@ def _bpe_train(spark, dfs, p):
         kwargs = {}
         if p.get("max_vocab") is not None:
             kwargs["max_vocab"] = int(p["max_vocab"])
-        return bpe_train_local_table(
-            _one(dfs),
-            text_col=p.get("text_column", "text"),
-            n_merges=int(p.get("n_merges", 20)),
-            **kwargs,
-        )
-    if mode == "batched":
-        from configdrivendatapipeline_spark.llm.bpe import bpe_train_batched
-
-        return bpe_train_batched(
-            _one(dfs),
-            text_col=p.get("text_column", "text"),
-            n_merges=int(p.get("n_merges", 20)),
-            batch_size=int(p.get("batch_size", 64)),
-        )
-    return bpe_train(
-        _one(dfs),
-        text_col=p.get("text_column", "text"),
-        n_merges=int(p.get("n_merges", 20)),
-    )
+        rows = bpe_train_local(df, text_col, n_merges, **kwargs)
+    else:
+        batch_size = int(p.get("batch_size", 64)) if mode == "batched" else 1
+        rows = bpe_train(df, text_col, n_merges, batch_size)
+    return spark.createDataFrame(rows, "step INT, pair STRING, n BIGINT")
 
 
 @op("bpe_encode")
@@ -1220,25 +1211,23 @@ def _bpe_encode(spark, dfs, p):
     input it self-trains ``n_merges`` merges on the corpus first."""
     from configdrivendatapipeline_spark.llm.bpe import (
         bpe_encode_counts,
-        bpe_train_merges,
+        bpe_train,
         merge_pairs_from_table,
     )
 
+    text_col = p.get("text_column", "text")
     if len(dfs) == 2:
         corpus, mtab = dfs
         merges = merge_pairs_from_table(mtab)
     else:
         corpus = _one(dfs)
-        merges = bpe_train_merges(
-            corpus,
-            text_col=p.get("text_column", "text"),
-            n_merges=int(p.get("n_merges", 20)),
-        )
+        rows = bpe_train(corpus, text_col, int(p.get("n_merges", 20)))
+        merges = [pr for _, pr, _ in rows]
     return bpe_encode_counts(
         corpus,
         merges,
         id_col=p.get("id_column", "doc_id"),
-        text_col=p.get("text_column", "text"),
+        text_col=text_col,
     )
 
 
@@ -1366,18 +1355,16 @@ def _benford(spark, dfs, p):
 def _bpe_fertility(spark, dfs, p):
     """Per-stratum tokenizer fertility with corpus-trained BPE merges
     (see llm.bpe.bpe_fertility)."""
-    from configdrivendatapipeline_spark.llm.bpe import (
-        bpe_fertility,
-        bpe_train_merges,
-    )
+    from configdrivendatapipeline_spark.llm.bpe import bpe_fertility, bpe_train
 
     df = _one(dfs)
-    merges = bpe_train_merges(df, n_merges=int(p.get("n_merges", 20)))
+    text_col = p.get("text_column", "text")
+    rows = bpe_train(df, text_col, int(p.get("n_merges", 20)))
     return bpe_fertility(
         df,
-        merges,
+        [pr for _, pr, _ in rows],
         group_col=p.get("group_by", "lang"),
-        text_col=p.get("text_column", "text"),
+        text_col=text_col,
     )
 
 

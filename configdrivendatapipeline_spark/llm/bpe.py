@@ -5,9 +5,12 @@ The corpus is scanned ONCE (word-frequency aggregation); every merge
 iteration then runs on the weighted VOCAB table, which is small by
 construction (10⁵–10⁷ distinct words even at web scale) — so the
 iterative part never touches corpus-sized data, exactly like the
-k-means refinement loop. Each iteration is one aggregation + one
-1-row reduction; the chosen pair comes back to the driver as a scalar
-(the merge TABLE is the training output and is tiny by definition).
+k-means refinement loop. Each round is one aggregation + one
+top-k reduction; the chosen pairs come back to the driver as a few
+rows (the merge TABLE is the training output and is tiny by
+definition). :func:`bpe_train` is the one Spark merge loop;
+:func:`bpe_train_local` runs the same merges in driver memory after
+one corpus-sized job. Both return ``[(step, pair, n), ...]``.
 
 Merge application is defined as literal, left-to-right,
 non-overlapping replacement on the space-joined symbol string — the
@@ -28,7 +31,7 @@ retry-stable where "first seen" would not be.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: adjacent symbol pairs of the (trimmed, space-joined) symbol string
@@ -50,7 +53,7 @@ _CHECKPOINT_EVERY = 50
 
 
 def _prepare_vocab(df: DataFrame, text_col: str) -> DataFrame:
-    """The shared vocab-preparation stage of both trainers: ONE
+    """The vocab-preparation stage of :func:`bpe_train`: ONE
     corpus scan into a persisted (cnt, sym) table of space-padded
     symbol strings, right-sized to ~100k words per partition. Every
     merge step afterwards is a full Spark job over this table, so
@@ -94,15 +97,55 @@ def bpe_train(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 20,
-) -> DataFrame:
+    batch_size: int = 1,
+) -> list:
     """Learn ``n_merges`` BPE merges from the corpus; returns the
-    merge table (step, pair, n) — the artifact a tokenizer ships."""
-    spark = df.sparkSession
+    merge table as driver rows ``[(step, pair, n), ...]`` — the
+    artifact a tokenizer ships (n_merges rows by definition; a model
+    parameter list, not row data).
+
+    Each round is one aggregation over the vocab table that collects
+    the top pairs by (count desc, pair asc). ``batch_size=1`` is the
+    exact sequential trainer: the top pair always fills the batch, so
+    each round applies one merge — the run the SQL oracle replays
+    stage by stage. ``batch_size=B > 1`` is production recipe #2
+    (SCALING.md "Round-9 BPE wall-clock boundary"): per round,
+    select the top-B pairwise-DISJOINT pairs from one count
+    snapshot and apply them all in a single job —
+    ``n_merges / B`` sequential Spark rounds instead of ``n_merges``
+    (32k merges at B=64 ⇒ ~500 rounds ≈ minutes at the measured
+    per-round cost, vs ~13.4 h exact).
+
+    Correctness of batching rests on one exact property: a merge of
+    pair (a, b) destroys occurrences of pairs containing a or b (it
+    rewrites ``… x a b y …`` adjacencies) and CREATES occurrences of
+    pairs containing the new symbol a+b. So selected pairs must be
+    disjoint on their symbols AND on their merged concatenations:
+    no batch member's symbol may equal another member's a+b (e.g.
+    (a, b) together with (ab, y) where ``ab`` is a prior-round
+    symbol — the (a, b) replace would mint fresh ``ab y``
+    adjacencies for the chained (ab, y) replace to consume). Under
+    that two-sided disjointness the snapshot counts are exactly the
+    counts sequential application would see, and the replaces
+    commute (each replacement is space-delimited on both sides, so
+    disjoint patterns cannot overlap or be created mid-batch). The
+    recorded ``n`` values are therefore exact. The ONE documented
+    divergence from exact BPE: a pair built from a symbol created
+    earlier in the same batch (e.g. ("ab", c) right after (a, b))
+    cannot be seen until the next round's snapshot, so such merges
+    land up to one round later than exact training would place
+    them — bounded deferral, not a different merge semantics.
+    """
+    if batch_size < 1:
+        raise ValueError(f"batch_size must be >= 1, got {batch_size}")
     vocab = _prepare_vocab(df, text_col)
     merges: list[tuple[int, str, int]] = []
     current = vocab
     try:
-        for step in range(n_merges):
+        while len(merges) < n_merges:
+            want = min(batch_size, n_merges - len(merges))
+            # over-fetch so the disjointness filter can skip
+            # overlapping candidates and still usually fill the batch
             top = (
                 # guard BEFORE building pairs: sequence(2, 1) would
                 # DESCEND on single-symbol words, not come back empty
@@ -111,31 +154,52 @@ def bpe_train(
                 .groupBy("pr")
                 .agg(F.sum("cnt").alias("n"))
                 .orderBy(F.col("n").desc(), F.col("pr").asc())
-                .limit(1)
+                .limit(want * 3 + 8)
                 .collect()
             )
             if not top:
                 break
-            pr, n = top[0]["pr"], int(top[0]["n"])
-            merges.append((step, pr, n))
-            merged = pr.replace(" ", "")
-            current = current.withColumn(
-                "sym",
-                F.replace(
-                    F.col("sym"), F.lit(f" {pr} "), F.lit(f" {merged} ")
-                ),
-            )
-            if (step + 1) % _CHECKPOINT_EVERY == 0 and (step + 1) < n_merges:
-                # bound the replace-chain depth (see _CHECKPOINT_EVERY);
-                # skip on the final iteration — the post-merge vocab is
-                # never read again and the eager materialization would
-                # be one wasted job over the vocab table
-                current = current.localCheckpoint(eager=True)
+            used: set = set()
+            batch: list[tuple[str, int]] = []
+            for r in top:
+                a, b = r["pr"].split(" ")
+                merged_sym = a + b
+                # Disjointness must cover the CREATED symbol too: a
+                # replace of (a, b) destroys occurrences of pairs
+                # containing a or b AND creates occurrences of pairs
+                # containing a+b. If a+b is itself a live symbol
+                # (built in a prior round), a batch-mate like
+                # (a+b, y) would consume occurrences this replace
+                # just created, making its recorded n non-snapshot
+                # and the replaces non-commuting. So: skip a
+                # candidate whose own symbols OR whose merged
+                # concatenation collide with any earlier selection's
+                # symbols or merged concatenation.
+                if a in used or b in used or merged_sym in used:
+                    continue
+                used.update((a, b, merged_sym))
+                batch.append((r["pr"], int(r["n"])))
+                if len(batch) >= want:
+                    break
+            for pr, n in batch:
+                merges.append((len(merges), pr, n))
+                merged = pr.replace(" ", "")
+                current = current.withColumn(
+                    "sym",
+                    F.replace(
+                        F.col("sym"), F.lit(f" {pr} "), F.lit(f" {merged} ")
+                    ),
+                )
+                done = len(merges)
+                if done % _CHECKPOINT_EVERY == 0 and done < n_merges:
+                    # bound the replace-chain depth (see
+                    # _CHECKPOINT_EVERY); skip after the final merge —
+                    # the post-merge vocab is never read again and the
+                    # eager materialization would be one wasted job
+                    current = current.localCheckpoint(eager=True)
     finally:
         vocab.unpersist()
-    return spark.createDataFrame(
-        merges, "step INT, pair STRING, n BIGINT"
-    )
+    return merges
 
 
 def bpe_encode_counts(
@@ -236,33 +300,11 @@ def bpe_fertility(
     )
 
 
-def bpe_train_merges(
-    df: DataFrame, text_col: str = "text", n_merges: int = 20
-) -> list:
-    """Train and return the merge PAIR list (the tokenizer artifact —
-    driver-sized by definition: a model parameter list, not row
-    data). Callers feed it straight to :func:`bpe_encode_counts`."""
-    return [r["pair"] for r in bpe_train(df, text_col, n_merges).collect()]
-
-
-def bpe_train_rows(
-    df: DataFrame, text_col: str = "text", n_merges: int = 20
-) -> list:
-    """Train and return the merge table as driver rows
-    ``[(step, pair, n), ...]`` — the shippable tokenizer artifact
-    (n_merges rows by definition; a model parameter list, not row
-    data)."""
-    return [
-        (r["step"], r["pair"], r["n"])
-        for r in bpe_train(df, text_col, n_merges).collect()
-    ]
-
-
 def merge_pairs_from_table(merges: DataFrame) -> list:
     """Extract the ordered merge-pair list from a trained merge
     TABLE (the ``bpe_train`` output relation) — how a stored
     tokenizer artifact re-enters an encode stage. Driver-sized by
-    the same argument as :func:`bpe_train_rows`."""
+    the same argument as :func:`bpe_train`'s returned rows."""
     return [
         r["pair"] for r in merges.orderBy("step").select("step", "pair").collect()
     ]
@@ -299,7 +341,8 @@ def bpe_train_local(
     word-frequency aggregation — and the merge loop runs in-memory
     on the collected vocab (10⁵–10⁷ weighted words is megabytes; a
     model input, not row data). Returns ``[(step, pair, n), ...]``,
-    bit-identical to :func:`bpe_train` by construction:
+    bit-identical to :func:`bpe_train` at ``batch_size=1`` by
+    construction:
 
     - pair counting mirrors ``_PAIRS`` (every adjacent occurrence,
       weighted by word count), ties break lexicographically;
@@ -410,118 +453,3 @@ def bpe_train_local(
                 else:
                     heapq.heappush(heap, (-pair_counts[p], p))
     return merges
-
-
-def bpe_train_local_table(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 20,
-    max_vocab: int | None = DEFAULT_MAX_VOCAB,
-) -> DataFrame:
-    """:func:`bpe_train_local` emitted as the same (step, pair, n)
-    relation :func:`bpe_train` produces — the drop-in artifact for
-    the ``bpe_train`` op's ``mode: local``. Inherits the default
-    :data:`DEFAULT_MAX_VOCAB` collect cap."""
-    rows = bpe_train_local(df, text_col, n_merges, max_vocab)
-    return df.sparkSession.createDataFrame(
-        rows, "step INT, pair STRING, n BIGINT"
-    )
-
-
-def bpe_train_batched(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 20,
-    batch_size: int = 64,
-) -> DataFrame:
-    """Production BPE recipe #2 (SCALING.md "Round-9 BPE wall-clock
-    boundary"): per round, select the top-``batch_size``
-    pairwise-DISJOINT pairs from one count snapshot and apply them
-    all in a single job — ``n_merges / batch_size`` sequential Spark
-    rounds instead of ``n_merges`` (32k merges at B=64 ⇒ ~500 rounds
-    ≈ minutes at the measured per-round cost, vs ~13.4 h exact).
-
-    Correctness of batching rests on one exact property: a merge of
-    pair (a, b) destroys occurrences of pairs containing a or b (it
-    rewrites ``… x a b y …`` adjacencies) and CREATES occurrences of
-    pairs containing the new symbol a+b. So selected pairs must be
-    disjoint on their symbols AND on their merged concatenations:
-    no batch member's symbol may equal another member's a+b (e.g.
-    (a, b) together with (ab, y) where ``ab`` is a prior-round
-    symbol — the (a, b) replace would mint fresh ``ab y``
-    adjacencies for the chained (ab, y) replace to consume). Under
-    that two-sided disjointness the snapshot counts are exactly the
-    counts sequential application would see, and the replaces
-    commute (each replacement is space-delimited on both sides, so
-    disjoint patterns cannot overlap or be created mid-batch). The recorded ``n`` values are
-    therefore exact. The ONE documented divergence from exact BPE:
-    a pair built from a symbol created earlier in the same batch
-    (e.g. ("ab", c) right after (a, b)) cannot be seen until the
-    next round's snapshot, so such merges land up to one round later
-    than exact training would place them — bounded deferral, not a
-    different merge semantics. ``batch_size=1`` is bit-identical to
-    :func:`bpe_train` (regression-tested).
-    """
-    if batch_size < 1:
-        raise ValueError(f"batch_size must be >= 1, got {batch_size}")
-    spark = df.sparkSession
-    vocab = _prepare_vocab(df, text_col)
-    merges: list[tuple[int, str, int]] = []
-    current = vocab
-    applied = 0
-    try:
-        while len(merges) < n_merges:
-            want = min(batch_size, n_merges - len(merges))
-            # over-fetch so the disjointness filter can skip
-            # overlapping candidates and still usually fill the batch
-            top = (
-                current.filter(F.size(F.split(F.trim("sym"), " ")) >= 2)
-                .select("cnt", F.explode(F.expr(_PAIRS)).alias("pr"))
-                .groupBy("pr")
-                .agg(F.sum("cnt").alias("n"))
-                .orderBy(F.col("n").desc(), F.col("pr").asc())
-                .limit(want * 3 + 8)
-                .collect()
-            )
-            if not top:
-                break
-            used: set = set()
-            batch: list[tuple[str, int]] = []
-            for r in top:
-                a, b = r["pr"].split(" ")
-                merged_sym = a + b
-                # Disjointness must cover the CREATED symbol too: a
-                # replace of (a, b) destroys occurrences of pairs
-                # containing a or b AND creates occurrences of pairs
-                # containing a+b. If a+b is itself a live symbol
-                # (built in a prior round), a batch-mate like
-                # (a+b, y) would consume occurrences this replace
-                # just created, making its recorded n non-snapshot
-                # and the replaces non-commuting. So: skip a
-                # candidate whose own symbols OR whose merged
-                # concatenation collide with any earlier selection's
-                # symbols or merged concatenation.
-                if a in used or b in used or merged_sym in used:
-                    continue
-                used.update((a, b, merged_sym))
-                batch.append((r["pr"], int(r["n"])))
-                if len(batch) >= want:
-                    break
-            for pr, n in batch:
-                merges.append((len(merges), pr, n))
-                merged = pr.replace(" ", "")
-                current = current.withColumn(
-                    "sym",
-                    F.replace(
-                        F.col("sym"), F.lit(f" {pr} "), F.lit(f" {merged} ")
-                    ),
-                )
-                applied += 1
-                if applied % _CHECKPOINT_EVERY == 0 and len(merges) < n_merges:
-                    # bound the replace-chain depth (see _CHECKPOINT_EVERY)
-                    current = current.localCheckpoint(eager=True)
-    finally:
-        vocab.unpersist()
-    return spark.createDataFrame(
-        merges, "step INT, pair STRING, n BIGINT"
-    )

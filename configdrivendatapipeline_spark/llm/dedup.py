@@ -589,7 +589,6 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    candidates: DataFrame | None = None,
     tokens_col: str | None = None,
     raw_counts: bool = False,
 ) -> DataFrame:
@@ -645,12 +644,9 @@ def jaccard_pairs(
     window (``row_number`` over the distinct-token table) is a
     single task sized by VOCABULARY, not corpus — and by
     construction the dense branch only runs when vocab ≤ tokens/32.
-    With ``candidates`` (e.g. LSH) the prefix step is skipped and
-    only those pairs are scored directly (assumed distinct, as
-    :func:`lsh_candidate_pairs` emits them). Zero-intersection
-    pairs never reach the output, matching the join semantics of
-    the exploded-join formulation. ``tokens_col`` names a
-    ready-made array column of set elements (e.g. k-token
+    Zero-intersection pairs never reach the output, matching the
+    join semantics of the exploded-join formulation. ``tokens_col``
+    names a ready-made array column of set elements (e.g. k-token
     shingles); null ELEMENTS count toward set size but never
     intersect (a null token equi-joins nothing). ``raw_counts=True``
     returns the pre-round integer columns ``(id_a, id_b, n_inter,
@@ -709,44 +705,6 @@ def jaccard_pairs(
     # failing the whole build, and each differently-pruned consumer
     # scans only its columns.
     from configdrivendatapipeline_spark.scratch import scratch_parquet
-
-    if candidates is not None:
-        # Score exactly the given pairs. Direct intersection: LSH
-        # candidate sets are per-doc and modest by construction (the
-        # bucket cap bounds them), so a dictionary pass would cost
-        # more than the scoring it accelerates.
-        keyed = scratch_parquet(
-            sets.select("id", "s", F.size("s").alias("n_tok")),
-            "jaccard_keyed_cand",
-        )
-        scored = filter_jaccard(
-            candidates.join(
-                keyed.select(
-                    F.col("id").alias("id_a"),
-                    F.filter("s", lambda x: x.isNotNull()).alias("sa"),
-                    F.col("n_tok").alias("n_ta"),
-                ),
-                "id_a",
-            )
-            .join(
-                keyed.select(
-                    F.col("id").alias("id_b"),
-                    F.filter("s", lambda x: x.isNotNull()).alias("sb"),
-                    F.col("n_tok").alias("n_tb"),
-                ),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                inter_direct(F.col("sa"), F.col("sb")).alias("n_inter"),
-                F.col("n_ta").cast("long").alias("n_a"),
-                F.col("n_tb").cast("long").alias("n_b"),
-            )
-            .filter(F.col("n_inter") > 0),
-            threshold,
-        ).select("id_a", "id_b", "n_inter", "n_a", "n_b")
-        return scored if raw_counts else jaccard_readout(scored)
 
     # One representative per distinct set; members expand after
     # scoring. gid = min member id, so rep pairs order as id pairs.

@@ -618,7 +618,6 @@ def neardup_pairs(
     vec_col: str = "embedding",
     n_tables: int = 6,
     planes_per_table: int = 4,
-    exact: bool = False,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b).
@@ -629,8 +628,7 @@ def neardup_pairs(
     pair space stays bounded at corpus scale (size planes ~log₂ n).
     Candidate recall is the standard 1 − (1 − p^k)^L amplifier; the
     deterministic arithmetic planes mean an oracle can replay the
-    exact same candidate set. ``exact=True`` keeps the all-pairs
-    form as the small-fixture verifier ONLY — never the scale path.
+    exact same candidate set.
 
     Threshold contract: the cutoff applies to the 6-dp ROUNDED
     cosine (a pair whose true cosine is within 5e-7 below the
@@ -642,52 +640,37 @@ def neardup_pairs(
     queries/__init__.py. Callers needing a strict raw-cosine cutoff
     should over-ask by 1e-6 and re-filter.
     """
-    if exact:
-        v = emb.select(F.col(id_col), as_double(vec_col).alias("__v"))
-        vn = v.withColumn("__n", norm(F.col("__v")))
-        a = vn.select(
-            F.col(id_col).alias("id_a"),
-            F.col("__v").alias("__va"),
-            F.col("__n").alias("__na"),
-        )
-        b = vn.select(
-            F.col(id_col).alias("id_b"),
-            F.col("__v").alias("__vb"),
-            F.col("__n").alias("__nb"),
-        )
-        cand = a.join(b, F.col("id_a") < F.col("id_b"))
-    else:
-        # Slim candidate generation: the pair join and multi-table
-        # dedup move 16-byte id pairs, NOT the 64-double vectors —
-        # vectors join back onto the deduped pairs afterwards.
-        # Measured 1.7× faster at sf0.1 (identical pairs); at corpus
-        # scale this is the difference between shuffling ~0.5 KB and
-        # 16 bytes per candidate-pair copy (each pair appears in up
-        # to n_tables buckets before dedup). banded_norms materializes
-        # the scan+band subtree once for both join sides (§3.3).
-        banded, vn = banded_norms(
-            emb, id_col, vec_col, (), n_tables, planes_per_table
-        )
-        banded = _cap_buckets(banded, ["table_id", "bucket"], max_bucket)
-        a = banded.select("table_id", "bucket", F.col(id_col).alias("id_a"))
-        b = banded.select("table_id", "bucket", F.col(id_col).alias("id_b"))
-        pairs = (
-            a.join(b, ["table_id", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        va = vn.select(
-            F.col(id_col).alias("id_a"),
-            F.col("__v").alias("__va"),
-            F.col("__n").alias("__na"),
-        )
-        vb = vn.select(
-            F.col(id_col).alias("id_b"),
-            F.col("__v").alias("__vb"),
-            F.col("__n").alias("__nb"),
-        )
-        cand = pairs.join(va, "id_a").join(vb, "id_b")
+    # Slim candidate generation: the pair join and multi-table
+    # dedup move 16-byte id pairs, NOT the 64-double vectors —
+    # vectors join back onto the deduped pairs afterwards.
+    # Measured 1.7× faster at sf0.1 (identical pairs); at corpus
+    # scale this is the difference between shuffling ~0.5 KB and
+    # 16 bytes per candidate-pair copy (each pair appears in up
+    # to n_tables buckets before dedup). banded_norms materializes
+    # the scan+band subtree once for both join sides (§3.3).
+    banded, vn = banded_norms(
+        emb, id_col, vec_col, (), n_tables, planes_per_table
+    )
+    banded = _cap_buckets(banded, ["table_id", "bucket"], max_bucket)
+    a = banded.select("table_id", "bucket", F.col(id_col).alias("id_a"))
+    b = banded.select("table_id", "bucket", F.col(id_col).alias("id_b"))
+    pairs = (
+        a.join(b, ["table_id", "bucket"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    va = vn.select(
+        F.col(id_col).alias("id_a"),
+        F.col("__v").alias("__va"),
+        F.col("__n").alias("__na"),
+    )
+    vb = vn.select(
+        F.col(id_col).alias("id_b"),
+        F.col("__v").alias("__vb"),
+        F.col("__n").alias("__nb"),
+    )
+    cand = pairs.join(va, "id_a").join(vb, "id_b")
     return (
         cand.select(
             "id_a",

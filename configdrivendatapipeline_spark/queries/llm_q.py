@@ -729,8 +729,7 @@ def llm_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "4 planes, equi-join on (table_id, bucket) — never an O(n²) "
     "theta self-join); threshold 0.3 because the synthetic vectors "
     "are near-orthogonal. The oracle replays the identical "
-    "deterministic planes, so the candidate subset hash-matches; "
-    "neardup_pairs(exact=True) remains the small-fixture verifier.",
+    "deterministic planes, so the candidate subset hash-matches.",
 )
 def llm_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.neardup_pairs(load(spark, sf_dir, "embeddings"), threshold=0.3)
@@ -1991,13 +1990,13 @@ def _trained_merges(spark: SparkSession, sf_dir: str, n_merges: int = 20):
     triple the 20-sequential-job training cost for bit-identical
     output. A new corpus replaces the entry.
     """
-    from configdrivendatapipeline_spark.llm.bpe import bpe_train_rows
+    from configdrivendatapipeline_spark.llm.bpe import bpe_train
 
     return session_memo(
         spark,
         ("bpe", n_merges),
         sf_dir,
-        lambda: bpe_train_rows(load(spark, sf_dir, "documents"), n_merges=n_merges),
+        lambda: bpe_train(load(spark, sf_dir, "documents"), n_merges=n_merges),
     )
 
 

@@ -147,19 +147,13 @@ def run_available_now(
     per-batch I/O) and restored after the drain. Partition count
     never changes results here: aggregations / dropDuplicates /
     stream joins / per-key state are partition-count-independent and
-    the watermark is a global min. ``SPARK_GRAFT_STREAM_PARTS``
-    overrides the derivation (production knob / A-B probes).
+    the watermark is a global min.
     """
     name = name or f"stream_{uuid.uuid4().hex[:12]}"
     spark = sdf.sparkSession
     pending = session_memo(spark, _SRC_BYTES_SLOT, None, list)
     noted, pending[:] = list(pending), []
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTS")
-    target: int | None = None
-    if env:
-        target = int(env)
-    elif noted:
-        target = scaled_stream_partitions(spark, sum(noted))
+    target = scaled_stream_partitions(spark, sum(noted)) if noted else None
     prev = spark.conf.get("spark.sql.shuffle.partitions", None)
     if target is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(target))

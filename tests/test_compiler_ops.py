@@ -1017,10 +1017,7 @@ def test_materialize_and_components_ops(spark, sf_dir):
 def test_audit_ops(spark, sf_dir):
     """minhash_calibration / lsh_recall / centroid_drift / benford /
     bpe_fertility reachable from YAML, equal to direct library calls."""
-    from configdrivendatapipeline_spark.llm.bpe import (
-        bpe_fertility,
-        bpe_train_merges,
-    )
+    from configdrivendatapipeline_spark.llm.bpe import bpe_fertility, bpe_train
     from configdrivendatapipeline_spark.llm.dedup import (
         lsh_recall,
         minhash_calibration,
@@ -1051,9 +1048,29 @@ def test_audit_ops(spark, sf_dir):
     assert rows(frames["rec"]) == rows(lsh_recall(docs, token_hash="md5_32"))
     assert rows(frames["ben"]) == rows(benford_profile(orders, "o_totalprice"))
     assert rows(frames["drift"]) == rows(centroid_drift(emb))
-    merges = bpe_train_merges(docs, n_merges=5)
+    merges = [pr for _, pr, _ in bpe_train(docs, n_merges=5)]
     assert rows(frames["fert"]) == rows(bpe_fertility(docs, merges))
 
+
+
+def test_bpe_fertility_op_trains_on_text_column(spark, sf_dir):
+    """bpe_fertility's text_column reaches the merge trainer, not
+    only the rollup: a corpus whose text lives in ``body`` (no
+    ``text`` column) trains and scores on that column, equal to the
+    direct library calls and to the same corpus under ``text``."""
+    from configdrivendatapipeline_spark.llm.bpe import bpe_fertility, bpe_train
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    body = docs.select("doc_id", "lang", F.col("text").alias("body"))
+    got = OPS["bpe_fertility"](
+        spark, [body], {"text_column": "body", "group_by": "lang", "n_merges": 2}
+    )
+    merges = [pr for _, pr, _ in bpe_train(body, "body", n_merges=2)]
+    assert rows(got) == rows(
+        bpe_fertility(body, merges, group_col="lang", text_col="body")
+    )
+    same = OPS["bpe_fertility"](spark, [docs], {"group_by": "lang", "n_merges": 2})
+    assert rows(got) == rows(same)
 
 def test_asof_join_op_directions(spark, sf_dir):
     """asof_join from YAML matches the library call for all three
@@ -1194,7 +1211,7 @@ def test_bpe_train_and_encode_ops(spark, sf_dir):
     the single-input self-training form and the library call."""
     from configdrivendatapipeline_spark.llm.bpe import (
         bpe_encode_counts,
-        bpe_train_merges,
+        bpe_train,
     )
 
     frames = run_step(
@@ -1208,7 +1225,7 @@ def test_bpe_train_and_encode_ops(spark, sf_dir):
 """,
     )
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = bpe_train_merges(docs, n_merges=5)
+    pairs = [pr for _, pr, _ in bpe_train(docs, n_merges=5)]
     assert [r["pair"] for r in frames["merges"].orderBy("step").collect()] == pairs
     expect = rows(bpe_encode_counts(docs, pairs))
     assert rows(frames["enc2"]) == expect

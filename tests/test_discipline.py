@@ -39,7 +39,7 @@ ALLOWED = {
     # (The trained BPE merge TABLE is a model artifact — n_merges
     # rows by definition, a tokenizer parameter list, not row data —
     # so bpe.py also hosts the artifact collects other layers use:
-    # bpe_train_rows / merge_pairs_from_table.)
+    # bpe_train's returned rows / merge_pairs_from_table.)
     ("llm/bpe.py", "collect"),
     # jaccard_pairs regime routing: two 1-row scalar aggregates over
     # materialized tables — (doc count + approx distinct-set count)

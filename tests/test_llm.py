@@ -739,12 +739,12 @@ def test_bpe_train_monotone_and_encode_bounds(spark):
 
     rows = [(i, "aaab aaab aaab xyz") for i in range(5)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    merges = bpe_train(df, n_merges=3).collect()
-    assert [m["step"] for m in merges] == [0, 1, 2]
+    merges = bpe_train(df, n_merges=3)
+    assert [m[0] for m in merges] == [0, 1, 2]
     # most frequent pair of 'aaab aaab aaab xyz'×5 is 'a a' (30 occurrences
     # pre-merge, non-overlapping pairs: 'a a' appears twice per word... )
-    assert merges[0]["pair"] == "a a"
-    enc = bpe_encode_counts(df, [m["pair"] for m in merges]).collect()
+    assert merges[0][1] == "a a"
+    enc = bpe_encode_counts(df, [m[1] for m in merges]).collect()
     for r in enc:
         assert r["n_words"] == 4
         # 'aaab' (4 chars) must compress below 4 tokens after merges
@@ -931,11 +931,11 @@ def test_bpe_fertility_rolls_up_encode_and_floors_at_one(spark, sf_dir):
     from configdrivendatapipeline_spark.llm.bpe import (
         bpe_encode_counts,
         bpe_fertility,
-        bpe_train_merges,
+        bpe_train,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    merges = bpe_train_merges(docs, n_merges=5)
+    merges = [pr for _, pr, _ in bpe_train(docs, n_merges=5)]
     fert = bpe_fertility(docs, merges).collect()
     # every word encodes to >= 1 token, so fertility >= 1.0
     assert all(r["fertility_micro"] >= 1_000_000 for r in fert)
@@ -1162,7 +1162,7 @@ def test_bpe_deep_merge_chain_checkpoints(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     merges = bpe.bpe_train(df, n_merges=500)
-    pairs = [r["pair"] for r in merges.collect()]
+    pairs = [pr for _, pr, _ in merges]
     assert len(pairs) > bpe._CHECKPOINT_EVERY  # the chunking actually ran
     enc = bpe.bpe_encode_counts(df, pairs).collect()
     assert len(enc) == 80
@@ -1583,8 +1583,8 @@ def test_bpe_local_mode_is_bit_identical_to_distributed(spark, sf_dir):
     quirk-stressing synthetic corpus and real fixture documents
     trained to vocabulary exhaustion."""
     from configdrivendatapipeline_spark.llm.bpe import (
+        bpe_train,
         bpe_train_local,
-        bpe_train_rows,
     )
 
     quirky = spark.createDataFrame(
@@ -1596,14 +1596,14 @@ def test_bpe_local_mode_is_bit_identical_to_distributed(spark, sf_dir):
         ],
         ["doc_id", "text"],
     )
-    assert bpe_train_local(quirky, n_merges=12) == bpe_train_rows(
+    assert bpe_train_local(quirky, n_merges=12) == bpe_train(
         quirky, n_merges=12
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # n_merges beyond exhaustion: both trainers must stop at the same
     # step with the same final merges
-    assert bpe_train_local(docs, n_merges=120) == bpe_train_rows(
+    assert bpe_train_local(docs, n_merges=120) == bpe_train(
         docs, n_merges=120
     )
 
@@ -1656,9 +1656,8 @@ def test_bpe_local_vocab_collect_capped_by_default(spark):
     from configdrivendatapipeline_spark.llm import bpe
 
     assert bpe.DEFAULT_MAX_VOCAB == 1_000_000
-    for fn in (bpe.bpe_train_local, bpe.bpe_train_local_table):
-        default = inspect.signature(fn).parameters["max_vocab"].default
-        assert default == bpe.DEFAULT_MAX_VOCAB, fn.__name__
+    sig = inspect.signature(bpe.bpe_train_local)
+    assert sig.parameters["max_vocab"].default == bpe.DEFAULT_MAX_VOCAB
 
     df = spark.createDataFrame(
         [(0, "ab ab cd"), (1, "ab cd cd ef")], ["doc_id", "text"]
@@ -1676,16 +1675,16 @@ def test_bpe_local_vocab_collect_capped_by_default(spark):
 
 
 def test_bpe_batched_b1_is_bit_identical_and_batches_are_disjoint(spark):
-    """Recipe #2: batch_size=1 degenerates to exact sequential
-    training (bit-identical merge table, including the
-    shared-delimiter quirk corpora); at B>1 the artifact is
+    """Recipe #2: batch_size=1 is exact sequential training
+    (bit-identical to the independent in-memory trainer, including
+    the shared-delimiter quirk corpora); at B>1 the artifact is
     deterministic, its per-round picks are pairwise symbol-disjoint,
     recorded counts are exact snapshot counts, and encoding with it
     works end-to-end."""
     from configdrivendatapipeline_spark.llm.bpe import (
         bpe_encode_counts,
-        bpe_train_batched,
-        bpe_train_rows,
+        bpe_train,
+        bpe_train_local,
     )
 
     quirky = spark.createDataFrame(
@@ -1697,16 +1696,16 @@ def test_bpe_batched_b1_is_bit_identical_and_batches_are_disjoint(spark):
         ],
         ["doc_id", "text"],
     )
-    b1 = [tuple(r) for r in bpe_train_batched(quirky, n_merges=10, batch_size=1).collect()]
-    assert b1 == bpe_train_rows(quirky, n_merges=10)
+    b1 = bpe_train(quirky, n_merges=10, batch_size=1)
+    assert b1 == bpe_train_local(quirky, n_merges=10)
 
     docs = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog %d" % (i % 3))
          for i in range(30)],
         ["doc_id", "text"],
     )
-    b4_a = [tuple(r) for r in bpe_train_batched(docs, n_merges=12, batch_size=4).collect()]
-    b4_b = [tuple(r) for r in bpe_train_batched(docs, n_merges=12, batch_size=4).collect()]
+    b4_a = bpe_train(docs, n_merges=12, batch_size=4)
+    b4_b = bpe_train(docs, n_merges=12, batch_size=4)
     assert b4_a == b4_b  # deterministic
     assert [m[0] for m in b4_a] == list(range(len(b4_a)))
     # within each round of 4, selected pairs share no symbol
@@ -1717,7 +1716,7 @@ def test_bpe_batched_b1_is_bit_identical_and_batches_are_disjoint(spark):
             assert a not in seen and b not in seen
             seen.update((a, b))
     # the first pick of round one is the exact trainer's first pick
-    exact = bpe_train_rows(docs, n_merges=1)
+    exact = bpe_train(docs, n_merges=1)
     assert (b4_a[0][1], b4_a[0][2]) == (exact[0][1], exact[0][2])
     enc = bpe_encode_counts(docs, [m[1] for m in b4_a]).collect()
     assert all(r["n_bpe_tokens"] >= r["n_words"] for r in enc)
@@ -1725,7 +1724,7 @@ def test_bpe_batched_b1_is_bit_identical_and_batches_are_disjoint(spark):
     import pytest
 
     with pytest.raises(ValueError, match="batch_size"):
-        bpe_train_batched(docs, n_merges=2, batch_size=0)
+        bpe_train(docs, n_merges=2, batch_size=0)
 
     from configdrivendatapipeline_spark.compiler import OPS
 
@@ -1744,24 +1743,16 @@ def test_bpe_batched_prior_round_symbol_disjointness(spark):
     disjointness filter (symbols AND merged concatenations) defers
     the colliding pick one round, which makes this corpus
     bit-identical to the exact trainer at every batch size."""
-    from configdrivendatapipeline_spark.llm.bpe import (
-        bpe_train_batched,
-        bpe_train_rows,
-    )
+    from configdrivendatapipeline_spark.llm.bpe import bpe_train
 
     rows = [(i, "ababy") for i in range(5)] + [
         (100 + i, "aby") for i in range(3)
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    exact = bpe_train_rows(df, n_merges=3)
+    exact = bpe_train(df, n_merges=3)
     assert exact == [(0, "a b", 13), (1, "a b", 5), (2, "ab y", 8)]
     for bs in (2, 4):
-        got = [
-            tuple(r)
-            for r in bpe_train_batched(
-                df, n_merges=3, batch_size=bs
-            ).collect()
-        ]
+        got = bpe_train(df, n_merges=3, batch_size=bs)
         assert got == exact, f"batch_size={bs} diverged: {got}"
 
 
@@ -1776,21 +1767,13 @@ def test_bpe_batched_divergence_bound_on_fixture_corpus(spark, sf_dir):
     change that pushes set_div above these measured bounds (or makes
     any recorded count non-exact) changed batching semantics, not
     just scheduling."""
-    from configdrivendatapipeline_spark.llm.bpe import (
-        bpe_train_batched,
-        bpe_train_rows,
-    )
+    from configdrivendatapipeline_spark.llm.bpe import bpe_train
     from tools.bpe_divergence import divergence
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    exact = bpe_train_rows(docs, n_merges=30)
+    exact = bpe_train(docs, n_merges=30)
     for b, set_bound in ((4, 0.34), (16, 0.54)):
-        got = [
-            tuple(r)
-            for r in bpe_train_batched(
-                docs, n_merges=30, batch_size=b
-            ).collect()
-        ]
+        got = bpe_train(docs, n_merges=30, batch_size=b)
         d = divergence(exact, got)
         assert len(got) == 30
         assert d["cnt_div"] == 0.0, f"B={b}: non-snapshot count recorded: {d}"
@@ -1810,24 +1793,16 @@ def test_bpe_batched_long_horizon_converges(spark):
     asserted, not extrapolated. A change that breaks convergence at
     long horizons (set_div no longer shrinking as rounds grow)
     changed batching semantics, not scheduling."""
-    from configdrivendatapipeline_spark.llm.bpe import (
-        bpe_train_batched,
-        bpe_train_rows,
-    )
+    from configdrivendatapipeline_spark.llm.bpe import bpe_train
     from tools.bpe_divergence import divergence, synthetic_corpus
 
     docs = synthetic_corpus(spark, n_docs=100)
-    exact = bpe_train_rows(docs, n_merges=200)
+    exact = bpe_train(docs, n_merges=200)
     assert len(exact) == 200, "synthetic corpus must sustain 200 merges"
 
     d = {}
     for b in (2, 8):
-        got = [
-            tuple(r)
-            for r in bpe_train_batched(
-                docs, n_merges=200, batch_size=b
-            ).collect()
-        ]
+        got = bpe_train(docs, n_merges=200, batch_size=b)
         assert len(got) == 200
         d[b] = divergence(exact, got)
     # long horizon (100 rounds): near-exact vocabulary, snapshot

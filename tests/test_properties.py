@@ -450,15 +450,15 @@ def test_bpe_local_equals_distributed_on_random_corpora(spark, texts):
     the module docstring documents must agree between the in-memory
     and the distributed trainer."""
     from configdrivendatapipeline_spark.llm.bpe import (
+        bpe_train,
         bpe_train_local,
-        bpe_train_rows,
     )
 
     df = spark.createDataFrame(
         [(i, " ".join(ws)) for i, ws in enumerate(texts)],
         ["doc_id", "text"],
     )
-    assert bpe_train_local(df, n_merges=6) == bpe_train_rows(df, n_merges=6)
+    assert bpe_train_local(df, n_merges=6) == bpe_train(df, n_merges=6)
 
 
 @given(

@@ -1,11 +1,11 @@
 """Batched-BPE fidelity curve: divergence rate vs batch size B
 (VERDICT r10 item 4).
 
-Recipe #2 (llm/bpe.py:bpe_train_batched) trades merge-loop rounds for
-bounded deferral: per round it applies the top-B symbol-AND-merged-
-concatenation-disjoint pairs from one snapshot, so a pair that
-collides with a batch-mate lands one round later than exact training
-would place it. This probe MEASURES what that costs in merge-table
+Recipe #2 (llm/bpe.py:bpe_train at batch_size=B) trades merge-loop
+rounds for bounded deferral: per round it applies the top-B
+symbol-AND-merged-concatenation-disjoint pairs from one snapshot, so
+a pair that collides with a batch-mate lands one round later than
+exact training would place it. This probe MEASURES what that costs in merge-table
 fidelity on the real corpus, so the recipe ships with a tuning curve
 (B vs wall-clock vs divergence) instead of one point.
 
@@ -134,10 +134,7 @@ def main() -> int:
     args = ap.parse_args()
 
     sys.path.insert(0, "/root/repo")
-    from configdrivendatapipeline_spark.llm.bpe import (
-        bpe_train,
-        bpe_train_batched,
-    )
+    from configdrivendatapipeline_spark.llm.bpe import bpe_train
     from configdrivendatapipeline_spark.queries import load
     from configdrivendatapipeline_spark.session import get_spark
 
@@ -146,20 +143,15 @@ def main() -> int:
         docs = synthetic_corpus(spark, n_docs=args.synthetic_docs)
     else:
         docs = load(spark, args.sf, "documents")
-    bpe_train(docs, n_merges=3).collect()  # warm JVM/codegen/parquet
+    bpe_train(docs, n_merges=3)  # warm JVM/codegen/parquet
 
     t0 = time.monotonic()
-    exact = [tuple(r) for r in bpe_train(docs, n_merges=args.merges).collect()]
+    exact = bpe_train(docs, n_merges=args.merges)
     exact_sec = round(time.monotonic() - t0, 1)
 
     for b in [int(x) for x in args.batches.split(",")]:
         t0 = time.monotonic()
-        got = [
-            tuple(r)
-            for r in bpe_train_batched(
-                docs, n_merges=args.merges, batch_size=b
-            ).collect()
-        ]
+        got = bpe_train(docs, n_merges=args.merges, batch_size=b)
         sec = round(time.monotonic() - t0, 1)
         d = divergence(exact, got)
         print(

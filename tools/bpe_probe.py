@@ -1,8 +1,8 @@
 """Measure the BPE-training wall-clock boundary (VERDICT r8 item 3).
 
 Exact distributed BPE is inherently driver-paced: every merge is one
-Spark job over the vocab table plus a 1-row top-pair collect
-(llm/bpe.py:95-120). This probe measures per-merge cost at a real
+Spark job over the vocab table plus a small top-pair collect
+(llm/bpe.py:bpe_train at batch_size=1). This probe measures per-merge cost at a real
 merge count (default 1,000) so SCALING.md can state a MEASURED
 extrapolation to a production 32k-merge vocabulary instead of a
 guess.
@@ -68,10 +68,10 @@ def main() -> int:
         docs = load(spark, args.sf, "documents")
 
     # Warm the JVM/codegen paths so the measurement isn't startup.
-    bpe_train(docs, n_merges=3).collect()
+    bpe_train(docs, n_merges=3)
 
     t0 = time.monotonic()
-    merges = bpe_train(docs, n_merges=args.merges).collect()
+    merges = bpe_train(docs, n_merges=args.merges)
     total = time.monotonic() - t0
     done = len(merges)
 
@@ -81,7 +81,7 @@ def main() -> int:
     # timing hooks.
     head = max(0, done - args.window)
     t1 = time.monotonic()
-    bpe_train(docs, n_merges=head).collect()
+    bpe_train(docs, n_merges=head)
     head_s = time.monotonic() - t1
     tail_s = max(0.0, total - head_s)
     tail_n = done - head
