@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from configdrivendatapipeline_spark import enrichment
 from configdrivendatapipeline_spark.config.models import PipelineConfig
 from configdrivendatapipeline_spark.io import read_source, write_sink
+from configdrivendatapipeline_spark.session import session_memo
 from configdrivendatapipeline_spark.validation import rules_from_config, run_rules
 
 OpBuilder = Callable[[SparkSession, list[DataFrame], dict[str, Any]], DataFrame]
@@ -590,99 +591,18 @@ def _neardup_pairs(spark, dfs, p):
 
 @op("mixture_plan")
 def _mixture_plan(spark, dfs, p):
-    """Availability-constrained mixture planning (water-filling):
-    input is a per-source availability frame; ``weights`` maps
-    source -> target weight (integers). Emits per-source planned
-    allocations + utilization (see llm_mixture_plan for the
-    identity: total_max = min over sources of avail·W div w)."""
-    from pyspark.sql import functions as F
+    """Availability-constrained mixture planning over a per-source
+    availability frame; ``weights`` maps source -> integer target
+    weight (see llm.sampling.mixture_plan)."""
+    from configdrivendatapipeline_spark.llm.sampling import mixture_plan
 
-    df = _one(dfs)
     key = p.get("source_column", "source")
-    avail_col = p.get("available_column", "tokens_avail")
     weights = {str(k): int(v) for k, v in dict(p["weights"]).items()}
     wtab = spark.createDataFrame(
         list(weights.items()), f"{key} STRING, w BIGINT"
     )
-    # LEFT join FROM the weight table: a weighted source entirely
-    # ABSENT from the availability frame must surface as NULL
-    # availability and hit the guard below — an inner join would
-    # silently drop it and renormalize the remaining sources over
-    # its share with no signal. No broadcast hint on the
-    # availability side: it is keyed per group key of the INPUT, so
-    # its cardinality grows with the data (per-domain sources can be
-    # millions of keys) — a forced broadcast there is the
-    # grows-with-corpus anti-pattern. AQE broadcasts it at runtime
-    # when it is actually small; the config-sized wtab side cannot
-    # carry the hint either (the LEFT side of a left-outer join is
-    # never broadcastable).
-    a = wtab.join(
-        df.select(key, F.col(avail_col).cast("long").alias("tokens_avail")),
-        key,
-        "left",
-    )
-    # A weighted source with zero/negative/NULL availability makes
-    # the water-filling min collapse total_max to 0 (or silently
-    # NULLs its own utilization) with no signal. Guard IN the plan —
-    # raise_error fires when the pipeline actually runs — so compile
-    # stays lazy and the upstream availability job (possibly the
-    # pipeline's most expensive aggregate) never executes twice.
-    a = a.withColumn(
-        "tokens_avail",
-        F.when(
-            F.col("tokens_avail").isNull() | (F.col("tokens_avail") <= 0),
-            F.raise_error(
-                F.concat(
-                    F.lit("mixture_plan: weighted source '"),
-                    F.col(key),
-                    F.lit(
-                        "' has tokens_avail <= 0 or NULL — drop it from"
-                        " `weights` or fix the availability input"
-                    ),
-                )
-            ).cast("long"),
-        ).otherwise(F.col("tokens_avail")),
-    )
-    tot = a.agg(F.sum("w").cast("long").alias("big_w"))
-    a2 = a.crossJoin(F.broadcast(tot))
-    # 128-bit products (r13 token-scale audit, lockstep with
-    # llm_mixture_plan): tokens_avail·big_w, total_max·w and
-    # planned·1e6 pass 2^63 at 100-TB token inventories; the emitted
-    # values (token counts, utilization ≤ 1e6) fit BIGINT. The MIN
-    # argument stays DECIMAL through the MIN (ADVICE r13): `div`
-    # coerces per-row quotients to BIGINT and WRAPS a tiny-weight
-    # source's ≳9.2e18 quotient to a garbage negative that would win
-    # the MIN; (prod − prod % w) / w is exactly divisible, so the
-    # decimal division is exact and integer-valued, and the min
-    # provably fits BIGINT (Σ planned = total_max ≤ Σ tokens_avail).
-    # See llm_q.llm_mixture_plan for the measured-wrap note.
-    tmax = a2.agg(
-        F.min(
-            F.expr(
-                "(CAST(tokens_avail AS DECIMAL(38,0)) * big_w"
-                " - (CAST(tokens_avail AS DECIMAL(38,0)) * big_w) % w)"
-                " / w"
-            )
-        )
-        .cast("long")
-        .alias("total_max")
-    )
-    return (
-        a2.crossJoin(F.broadcast(tmax))
-        .withColumn(
-            "planned_tokens",
-            F.expr("CAST(total_max AS DECIMAL(38,0)) * w div big_w"),
-        )
-        .select(
-            key,
-            "w",
-            "tokens_avail",
-            "planned_tokens",
-            F.expr(
-                "CAST(planned_tokens AS DECIMAL(38,0)) * 1000000"
-                " div tokens_avail"
-            ).alias("utilization_micro"),
-        )
+    return mixture_plan(
+        _one(dfs), wtab, key, p.get("available_column", "tokens_avail")
     )
 
 
@@ -771,35 +691,21 @@ def _inverted_index(spark, dfs, p):
 @op("keyword_search")
 def _keyword_search(spark, dfs, p):
     """Boolean keyword retrieval: overlap-count top-k per query
-    (see llm_keyword_search). ``queries`` maps qid -> term list."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    (see llm.textstats.keyword_search). ``queries`` maps qid -> term
+    list."""
+    from configdrivendatapipeline_spark.llm.textstats import keyword_search
 
-    df = _one(dfs)
-    id_col = p.get("id_column", "doc_id")
-    text_col = p.get("text_column", "text")
-    k = int(p.get("k", 10))
     rows = [
         (int(qid), str(t))
         for qid, terms in dict(p["queries"]).items()
         for t in terms
     ]
-    q = spark.createDataFrame(rows, "qid INT, token STRING")
-    tok = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("token"),
-    )
-    hits = (
-        tok.join(F.broadcast(q), "token")
-        .groupBy("qid", id_col)
-        .agg(F.count(F.lit(1)).alias("n_matched"))
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("n_matched").desc(), F.col(id_col)
-    )
-    return (
-        hits.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return keyword_search(
+        _one(dfs),
+        spark.createDataFrame(rows, "qid INT, token STRING"),
+        k=int(p.get("k", 10)),
+        id_col=p.get("id_column", "doc_id"),
+        text_col=p.get("text_column", "text"),
     )
 
 
@@ -836,30 +742,25 @@ def _winnow_pairs(spark, dfs, p):
     )
 
 
-#: Per-compile memo of banded_norms frames keyed by (input frame,
-#: banding params): two ANN steps over the SAME input frame with the
-#: same plane family (pipeline_contrastive's knn_join + hard_negatives
-#: legs) band the corpus once instead of once per step — the compiler-
-#: path twin of llm_triplets' explicit ``shared=`` plumbing (§3.3).
-#: The cache holds a strong reference to the input frame so the id()
-#: component of the key cannot be recycled while the entry lives;
-#: cleared at every compile_pipeline start, so nothing is shared
-#: across pipeline runs.
-_BANDED_CACHE: dict[tuple, tuple] = {}
-
-
-def _shared_banded(df, id_col, vec_col, extra, n_tables, planes_per_table):
+def _shared_banded(spark, df, id_col, vec_col, extra, n_tables, planes_per_table):
+    """banded_norms for ``df``, shared by ANN steps over the SAME input
+    frame with the same plane family (pipeline_contrastive's knn_join
+    + hard_negatives legs band the corpus once instead of once per
+    step — the compiler-path twin of llm_triplets' explicit
+    ``shared=`` plumbing, §3.3). A session_memo slot: the key holds
+    the frame itself (DataFrame equality is identity), and the next
+    frame or plane family replaces the entry."""
     from configdrivendatapipeline_spark.llm.similarity import banded_norms
 
-    key = (id(df), id_col, vec_col, tuple(extra), n_tables, planes_per_table)
-    hit = _BANDED_CACHE.get(key)
-    if hit is not None and hit[0] is df:
-        return hit[1]
-    pair = banded_norms(
-        df, id_col, vec_col, tuple(extra), n_tables, planes_per_table
+    extra = tuple(extra)
+    return session_memo(
+        spark,
+        "banded",
+        (df, id_col, vec_col, extra, n_tables, planes_per_table),
+        lambda: banded_norms(
+            df, id_col, vec_col, extra, n_tables, planes_per_table
+        ),
     )
-    _BANDED_CACHE[key] = (df, pair)
-    return pair
 
 
 @op("knn_join")
@@ -875,6 +776,7 @@ def _knn_join(spark, dfs, p):
     id_col = p.get("id_column", "vec_id")
     vec_col = p.get("vector_column", "embedding")
     shared = _shared_banded(
+        spark,
         _one(dfs),
         id_col,
         vec_col,
@@ -1607,36 +1509,15 @@ def _cdc_apply(spark, dfs, p):
 
 @op("oversample")
 def _oversample(spark, dfs, p):
-    """Deterministic inverse-frequency oversampling: repeat each row
-    per the data-derived upsample weight with hash-grid stochastic
-    rounding (the upsampling half of mixture reweighting)."""
-    from configdrivendatapipeline_spark.llm.sampling import (
-        hash_bucket,
-        source_weights,
-    )
+    """Deterministic inverse-frequency oversampling (see
+    llm.sampling.oversample)."""
+    from configdrivendatapipeline_spark.llm.sampling import oversample
 
-    df = _one(dfs)
-    group_cols = list(p.get("group_by", ("source", "lang")))
-    id_col = p.get("id_column", "doc_id")
-    salt = p.get("salt", "oversample:v1")
-    w = source_weights(df, group_cols=tuple(group_cols)).select(
-        *group_cols, F.col("upsample_micro").alias("__up")
-    )
-    d = df.join(F.broadcast(w), group_cols)
-    n_copies = F.expr("__up div 1000000") + F.when(
-        hash_bucket(F.col(id_col), salt, 1_000_000) < F.expr("__up % 1000000"),
-        1,
-    ).otherwise(0)
-    return (
-        d.withColumn("__n", n_copies)
-        .filter(F.col("__n") > 0)
-        .withColumn(
-            "copy_no",
-            F.explode(
-                F.sequence(F.lit(1).cast("long"), F.col("__n").cast("long"))
-            ),
-        )
-        .drop("__up", "__n")
+    return oversample(
+        _one(dfs),
+        group_cols=tuple(p.get("group_by", ("source", "lang"))),
+        id_col=p.get("id_column", "doc_id"),
+        salt=p.get("salt", "oversample:v1"),
     )
 
 
@@ -1652,7 +1533,7 @@ def _hard_negatives(spark, dfs, p):
     n_tables = int(p.get("n_tables", 6))
     planes = int(p.get("planes_per_table", 4))
     shared = _shared_banded(
-        _one(dfs), id_col, vec_col, (label_col,), n_tables, planes
+        spark, _one(dfs), id_col, vec_col, (label_col,), n_tables, planes
     )
     return hard_negatives(
         _one(dfs),
@@ -1832,7 +1713,6 @@ def compile_pipeline(
     compile against the uncut lineage rather than a read-back scan.
     """
     _OBSERVATIONS.clear()  # observations belong to one compiled pipeline
-    _BANDED_CACHE.clear()  # banded frames are shared within one compile only
     frames: dict[str, DataFrame] = {}
     for name, src in cfg.sources.items():
         frames[name] = read_source(spark, src.to_reader_cfg())

@@ -215,16 +215,17 @@ def _banded(
     sigs: DataFrame,
     id_col: str,
     bands: int,
-    sig_len: int | None,
+    sig_len: int,
     band_key: str = "xxhash64",
 ) -> DataFrame:
     """(id, band_id, band_hash) — one row per doc per band.
 
-    ``band_key="concat"`` keeps the raw CSV of the band's signature
-    slots as the bucket key instead of hashing it — identical
-    grouping semantics (equal strings ⇔ equal hashes, minus the
-    ~2⁻⁶⁴ collision), replayable by any SQL engine; xxhash64 shortens
-    the shuffle key and is the scale default.
+    ``sig_len`` is the signature length, so band boundaries are
+    literal slot indices. ``band_key="concat"`` keeps the raw CSV of
+    the band's signature slots as the bucket key instead of hashing
+    it — identical grouping semantics (equal strings ⇔ equal hashes,
+    minus the ~2⁻⁶⁴ collision), replayable by any SQL engine;
+    xxhash64 shortens the shuffle key and is the scale default.
     """
     if bands < 1:
         raise ValueError(f"LSH bands must be >= 1, got {bands}")
@@ -232,7 +233,7 @@ def _banded(
         # same silent-family-fallback trap as token_hash: a typo'd
         # band_key would quietly bucket with xxhash64.
         raise ValueError(f"band_key must be xxhash64|concat, got {band_key!r}")
-    if sig_len is not None and bands > sig_len:
+    if bands > sig_len:
         # rows-per-band = sig_len // bands = 0: every band key would
         # be the empty CSV, so EVERY doc collides in one giant bucket
         # per band — the cap then drops it and the candidate set is
@@ -240,79 +241,28 @@ def _banded(
         raise ValueError(
             f"LSH bands ({bands}) must be <= signature length ({sig_len})"
         )
-    if sig_len is not None:
-        r = sig_len // bands
+    r = sig_len // bands
 
-        def key_of(b: int):
-            csv = F.concat_ws(
-                ",",
-                *[
-                    F.element_at("signature", b * r + j + 1).cast("string")
-                    for j in range(r)
-                ],
-            )
-            return csv if band_key == "concat" else F.xxhash64(csv)
-
-        band_cols = [
-            F.struct(
-                F.lit(b).alias("band_id"),
-                key_of(b).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-        banded = sigs.select(
-            F.col(id_col), F.explode(F.array(*band_cols)).alias("bh")
-        ).select(id_col, "bh.band_id", "bh.band_hash")
-    else:
-        # band rows = |sig| / bands, computed in-plan to stay generic.
-        # The bands<=|sig| misconfig check moves in-plan with it:
-        # assert_true returns NULL for every passing row and raises
-        # on the first violating one, so the same config the sig_len
-        # branch rejects eagerly fails LOUDLY here instead of
-        # emitting empty-CSV band keys (one giant bucket -> cap
-        # drops it -> silent recall 0).
-        sigs = sigs.filter(
-            F.assert_true(
-                F.size("signature") >= F.lit(bands),
-                F.concat(
-                    F.lit("LSH bands ("),
-                    F.lit(str(bands)),
-                    F.lit(") must be <= signature length ("),
-                    F.size("signature").cast("string"),
-                    F.lit(")"),
-                ),
-            ).isNull()
+    def key_of(b: int):
+        csv = F.concat_ws(
+            ",",
+            *[
+                F.element_at("signature", b * r + j + 1).cast("string")
+                for j in range(r)
+            ],
         )
+        return csv if band_key == "concat" else F.xxhash64(csv)
 
-        def slice_csv(b):
-            return F.concat_ws(
-                ",",
-                F.transform(
-                    F.slice(
-                        "signature",
-                        b * (F.size("signature") / bands).cast("int") + 1,
-                        (F.size("signature") / bands).cast("int"),
-                    ),
-                    lambda x: x.cast("string"),
-                ),
-            )
-
-        banded = sigs.select(
-            F.col(id_col),
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    # band_key is honored here too — silently falling
-                    # back to xxhash64 would hand a caller who asked
-                    # for oracle-replayable concat keys JVM-private
-                    # buckets.
-                    (lambda b: slice_csv(b))
-                    if band_key == "concat"
-                    else (lambda b: F.xxhash64(slice_csv(b))),
-                )
-            ).alias("band_id", "band_hash"),
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            key_of(b).alias("band_hash"),
         )
-    return banded
+        for b in range(bands)
+    ]
+    return sigs.select(
+        F.col(id_col), F.explode(F.array(*band_cols)).alias("bh")
+    ).select(id_col, "bh.band_id", "bh.band_hash")
 
 
 def _capped_bucket_ids(
@@ -380,7 +330,8 @@ def lsh_dropped_buckets(
     id_col: str = "doc_id",
     bands: int = 8,
     max_bucket: int = 1000,
-    sig_len: int | None = None,
+    *,
+    sig_len: int,
     band_key: str = "xxhash64",
 ) -> DataFrame:
     """(band_id, band_hash, n_ids) for every collision bucket that
@@ -407,7 +358,8 @@ def lsh_candidate_pairs(
     id_col: str = "doc_id",
     bands: int = 8,
     max_bucket: int = 1000,
-    sig_len: int | None = None,
+    *,
+    sig_len: int,
     band_key: str = "xxhash64",
 ) -> DataFrame:
     """Banded LSH: docs whose signature agrees on any full band.
@@ -416,9 +368,8 @@ def lsh_candidate_pairs(
     caps degenerate collision groups before pair expansion (a bucket
     of size m yields m² pairs — unbounded m is the classic LSH
     skew bomb at corpus scale); :func:`lsh_dropped_buckets` reports
-    what the cap discarded. Pass ``sig_len`` when known: literal
-    band boundaries generate far cheaper code than in-plan
-    ``size(signature)`` arithmetic.
+    what the cap discarded. ``sig_len`` is the signature length
+    (``n_hashes`` of the signatures).
     """
     banded = _banded(sigs, id_col, bands, sig_len, band_key)
     bounded = _capped_bucket_ids(

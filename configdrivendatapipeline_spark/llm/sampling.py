@@ -433,6 +433,138 @@ def source_weights(
     )
 
 
+def oversample(
+    df: DataFrame,
+    group_cols: tuple[str, ...] = ("source", "lang"),
+    id_col: str = "doc_id",
+    salt: str = "oversample:v1",
+) -> DataFrame:
+    """Deterministic inverse-frequency oversampling: repeat each row
+    per its stratum's :func:`source_weights` upsample weight with
+    hash-grid stochastic rounding — floor(w) copies, plus one when
+    the row's md5 grid position falls below w's fractional part (the
+    upsampling half of mixture reweighting). Emits the group columns,
+    the input's other columns, and ``copy_no`` (1-based)."""
+    group_cols = list(group_cols)
+    w = source_weights(df, group_cols=tuple(group_cols)).select(
+        *group_cols, F.col("upsample_micro").alias("__up")
+    )
+    d = df.join(F.broadcast(w), group_cols)
+    n_copies = F.expr("__up div 1000000") + F.when(
+        hash_bucket(F.col(id_col), salt, 1_000_000) < F.expr("__up % 1000000"),
+        1,
+    ).otherwise(0)
+    return (
+        d.withColumn("__n", n_copies)
+        .filter(F.col("__n") > 0)
+        .withColumn(
+            "copy_no",
+            F.explode(
+                F.sequence(F.lit(1).cast("long"), F.col("__n").cast("long"))
+            ),
+        )
+        .drop("__up", "__n")
+    )
+
+
+def mixture_plan(
+    avail: DataFrame,
+    weights_df: DataFrame,
+    key: str = "source",
+    avail_col: str = "tokens_avail",
+) -> DataFrame:
+    """Availability-constrained mixture planning (water-filling).
+
+    ``avail`` holds per-source token inventories (``key``,
+    ``avail_col``); ``weights_df`` holds (``key``, ``w`` BIGINT) target
+    weights. The largest total budget every weighted source can still
+    supply is total_max = min over sources of avail·W div w (W = Σ w);
+    emits (key, w, tokens_avail, planned_tokens, utilization_micro)
+    in exact integers. One aggregation + two broadcast scalars.
+    """
+    # LEFT join FROM the weight table: a weighted source entirely
+    # ABSENT from the availability frame must surface as NULL
+    # availability and hit the guard below — an inner join would
+    # silently drop it and renormalize the remaining sources over
+    # its share with no signal. No broadcast hint on the
+    # availability side: it is keyed per group key of the INPUT, so
+    # its cardinality grows with the data (per-domain sources can be
+    # millions of keys) — a forced broadcast there is the
+    # grows-with-corpus anti-pattern. AQE broadcasts it at runtime
+    # when it is actually small; the weight side cannot carry the
+    # hint either (the LEFT side of a left-outer join is never
+    # broadcastable).
+    a = weights_df.join(
+        avail.select(key, F.col(avail_col).cast("long").alias("tokens_avail")),
+        key,
+        "left",
+    )
+    # A weighted source with zero/negative/NULL availability makes
+    # the water-filling min collapse total_max to 0 (or silently
+    # NULLs its own utilization) with no signal. Guard IN the plan —
+    # raise_error fires when the pipeline actually runs — so building
+    # stays lazy and the upstream availability job (possibly the
+    # pipeline's most expensive aggregate) never executes twice.
+    a = a.withColumn(
+        "tokens_avail",
+        F.when(
+            F.col("tokens_avail").isNull() | (F.col("tokens_avail") <= 0),
+            F.raise_error(
+                F.concat(
+                    F.lit("mixture_plan: weighted source '"),
+                    F.col(key),
+                    F.lit(
+                        "' has tokens_avail <= 0 or NULL — drop it from"
+                        " `weights` or fix the availability input"
+                    ),
+                )
+            ).cast("long"),
+        ).otherwise(F.col("tokens_avail")),
+    )
+    tot = a.agg(F.sum("w").cast("long").alias("big_w"))
+    a2 = a.crossJoin(F.broadcast(tot))
+    # 128-bit products (r13 token-scale audit): at 100-TB token
+    # inventories tokens_avail·big_w, total_max·w and planned·1e6 all
+    # pass 2^63; every emitted value (token counts, utilization ≤ 1e6)
+    # fits BIGINT. The per-row MIN argument stays DECIMAL through the
+    # MIN (ADVICE r13): `... div w` coerces each quotient to BIGINT,
+    # and for a non-constraining tiny-weight source (avail·big_w/w
+    # ≳ 9.2e18) Spark WRAPS it to a garbage negative (measured, ANSI
+    # and non-ANSI both) which would then WIN the MIN — while DuckDB
+    # carries exact HUGEINT. (prod − prod % w) / w is exactly
+    # divisible, so the decimal division is exact and integer-valued,
+    # and the min provably fits BIGINT (Σ planned = total_max ≤
+    # Σ tokens_avail), so the post-MIN cast cannot overflow.
+    tmax = a2.agg(
+        F.min(
+            F.expr(
+                "(CAST(tokens_avail AS DECIMAL(38,0)) * big_w"
+                " - (CAST(tokens_avail AS DECIMAL(38,0)) * big_w) % w)"
+                " / w"
+            )
+        )
+        .cast("long")
+        .alias("total_max")
+    )
+    return (
+        a2.crossJoin(F.broadcast(tmax))
+        .withColumn(
+            "planned_tokens",
+            F.expr("CAST(total_max AS DECIMAL(38,0)) * w div big_w"),
+        )
+        .select(
+            key,
+            "w",
+            "tokens_avail",
+            "planned_tokens",
+            F.expr(
+                "CAST(planned_tokens AS DECIMAL(38,0)) * 1000000"
+                " div tokens_avail"
+            ).alias("utilization_micro"),
+        )
+    )
+
+
 def hash_shuffle(
     df: DataFrame,
     id_col: str = "doc_id",

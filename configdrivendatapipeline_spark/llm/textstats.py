@@ -1,6 +1,6 @@
 """Text analysis for LLM corpora: stats, token counting, language-ID
 heuristic, quality scoring, document fingerprinting, word frequency,
-TF-IDF.
+keyword search, TF-IDF.
 
 Everything is built-in-function SQL (codegen'd, pushdown-friendly);
 the only shuffles are the aggregations themselves. Formulas use
@@ -288,6 +288,38 @@ def word_freq(df: DataFrame, text_col: str = "text", k: int = 20) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.col("freq").desc(), F.col("token").asc())
         .limit(k)
+    )
+
+
+def keyword_search(
+    df: DataFrame,
+    queries_df: DataFrame,
+    k: int = 10,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Boolean keyword retrieval: per (query, doc), the number of the
+    query's terms the doc contains, top-``k`` per query by that count
+    (id tie-break). ``queries_df`` is (qid, token), one row per term.
+    The broadcast query-term join on the distinct-token explode IS
+    the inverted-index probe. Emits (qid, id, n_matched, rank)."""
+    from pyspark.sql import Window
+
+    tok = df.select(
+        F.col(id_col),
+        F.explode(F.array_distinct(tokens(text_col))).alias("token"),
+    )
+    hits = (
+        tok.join(F.broadcast(queries_df), "token")
+        .groupBy("qid", id_col)
+        .agg(F.count(F.lit(1)).alias("n_matched"))
+    )
+    w = Window.partitionBy("qid").orderBy(
+        F.col("n_matched").desc(), F.col(id_col)
+    )
+    return (
+        hits.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )
 
 

@@ -3369,20 +3369,14 @@ def llm_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - 3, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
-        )
-    )
     # Materialize the distinct inventory once (§3.3): it feeds the
     # self-join's two sides plus TWO broadcast size frames — four
     # evaluations of the scan + shingle transform + distinct without
     # the lineage cut. The frame is (source, gram) — vocabulary-sized,
     # the corpus-snapshot scale the jaccard build already stages.
     s = (
-        docs.select("source", F.explode(grams).alias("gram"))
+        dedup.with_shingles(docs.select("source", "text"), k=3)
+        .select("source", F.explode("shingles").alias("gram"))
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -3866,34 +3860,11 @@ def llm_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast weights + a bounded per-row explode.",
 )
 def llm_oversample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from configdrivendatapipeline_spark.llm.sampling import (
-        hash_bucket,
-        source_weights,
-    )
+    from configdrivendatapipeline_spark.llm.sampling import oversample
 
     docs = load(spark, sf_dir, "documents")
-    w = source_weights(docs, group_cols=("source", "lang")).select(
-        "source", "lang", F.col("upsample_micro").alias("up_micro")
-    )
-    d = docs.select("doc_id", "source", "lang").join(
-        F.broadcast(w), ["source", "lang"]
-    )
-    n_copies = F.expr("up_micro div 1000000") + F.when(
-        hash_bucket(F.col("doc_id"), "oversample:v1", 1_000_000)
-        < F.expr("up_micro % 1000000"),
-        1,
-    ).otherwise(0)
-    return (
-        d.withColumn("n_copies", n_copies)
-        .filter(F.col("n_copies") > 0)
-        .select(
-            "doc_id",
-            "source",
-            "lang",
-            F.explode(
-                F.sequence(F.lit(1).cast("long"), F.col("n_copies").cast("long"))
-            ).alias("copy_no"),
-        )
+    return oversample(docs.select("doc_id", "source", "lang")).select(
+        "doc_id", "source", "lang", "copy_no"
     )
 
 
@@ -4675,6 +4646,17 @@ def llm_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _keyword_queries(spark: SparkSession) -> DataFrame:
+    """The (qid, token) term table llm_keyword_search and
+    llm_hybrid_rrf's keyword leg probe with (their oracles' ``q``)."""
+    return spark.createDataFrame(
+        [(0, "the"), (0, "data"), (0, "query"),
+         (1, "stream"), (1, "window"),
+         (2, "the"), (2, "of"), (2, "and")],
+        "qid INT, token STRING",
+    )
+
+
 @declare(
     "llm_keyword_search",
     """
@@ -4708,32 +4690,8 @@ def llm_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partitions per query over candidate docs only.",
 )
 def llm_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load(spark, sf_dir, "documents")
-    q = spark.createDataFrame(
-        [(0, "the"), (0, "data"), (0, "query"),
-         (1, "stream"), (1, "window"),
-         (2, "the"), (2, "of"), (2, "and")],
-        "qid INT, token STRING",
-    )
-    tok = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("token"),
-    )
-    hits = (
-        tok.join(F.broadcast(q), "token")
-        .groupBy("qid", "doc_id")
-        .agg(F.count(F.lit(1)).alias("n_matched"))
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("n_matched").desc(), F.col("doc_id")
-    )
-    return (
-        hits.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select("qid", "doc_id", "n_matched", "rank")
-    )
+    return textstats.keyword_search(docs, _keyword_queries(spark), k=10)
 
 
 @declare(
@@ -4805,28 +4763,8 @@ def llm_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     emb = load(spark, sf_dir, "embeddings")
-    q = spark.createDataFrame(
-        [(0, "the"), (0, "data"), (0, "query"),
-         (1, "stream"), (1, "window"),
-         (2, "the"), (2, "of"), (2, "and")],
-        "qid INT, token STRING",
-    )
-    tok = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("token"),
-    )
-    hits = (
-        tok.join(F.broadcast(q), "token")
-        .groupBy("qid", "doc_id")
-        .agg(F.count(F.lit(1)).alias("n_matched"))
-    )
-    wk = Window.partitionBy("qid").orderBy(
-        F.col("n_matched").desc(), F.col("doc_id")
-    )
-    kw = (
-        hits.withColumn("r_kw", F.row_number().over(wk))
-        .filter(F.col("r_kw") <= 20)
-        .select("qid", "doc_id", "r_kw")
+    kw = textstats.keyword_search(docs, _keyword_queries(spark), k=20).select(
+        "qid", "doc_id", F.col("rank").alias("r_kw")
     )
     v = emb.select("vec_id", as_double("embedding").alias("__v")).withColumn(
         "__nv", norm(F.col("__v"))
@@ -5075,60 +5013,17 @@ def mm_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus size.",
 )
 def llm_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from configdrivendatapipeline_spark.llm.sampling import mixture_plan
+
     docs = load(spark, sf_dir, "documents")
     avail = docs.groupBy("source").agg(
         F.sum(F.size(F.split("text", " "))).cast("long").alias("tokens_avail")
-    ).select(
+    )
+    weights = avail.select(
         "source",
         (F.expr("CAST(SUBSTR(source, 4) AS BIGINT)") % 5 + 1).alias("w"),
-        "tokens_avail",
     )
-    tot = avail.agg(
-        F.sum("w").cast("long").alias("big_w"),
-    )
-    a2 = avail.crossJoin(F.broadcast(tot))
-    # 128-bit products throughout (r13 token-scale audit): at 100-TB
-    # token inventories tokens_avail·big_w, total_max·w and
-    # planned·1e6 all pass 2^63; every emitted value (token counts
-    # ≤ corpus size, utilization ≤ 1e6) fits BIGINT.
-    #
-    # The per-row MIN argument stays DECIMAL through the MIN (ADVICE
-    # r13): `... div w` coerces each quotient to BIGINT, and for a
-    # non-constraining tiny-weight source (avail·big_w/w ≳ 9.2e18)
-    # Spark WRAPS it to a garbage negative (measured, ANSI and
-    # non-ANSI both) which would then WIN the MIN — while DuckDB
-    # carries exact HUGEINT. The remainder-subtraction form
-    # (prod − prod % w) / w is exactly divisible, so the scale-6
-    # decimal division is exact and integer-valued — both engines
-    # min over identical integers, and the min itself provably fits
-    # BIGINT (Σ planned_i = total_max ≤ Σ avail_i = corpus tokens),
-    # so the post-MIN cast cannot overflow.
-    tmax = a2.agg(
-        F.min(
-            F.expr(
-                "(CAST(tokens_avail AS DECIMAL(38,0)) * big_w"
-                " - (CAST(tokens_avail AS DECIMAL(38,0)) * big_w) % w)"
-                " / w"
-            )
-        ).cast("long").alias("total_max")
-    )
-    return (
-        a2.crossJoin(F.broadcast(tmax))
-        .withColumn(
-            "planned_tokens",
-            F.expr("CAST(total_max AS DECIMAL(38,0)) * w div big_w"),
-        )
-        .select(
-            "source",
-            "w",
-            "tokens_avail",
-            "planned_tokens",
-            F.expr(
-                "CAST(planned_tokens AS DECIMAL(38,0)) * 1000000"
-                " div tokens_avail"
-            ).alias("utilization_micro"),
-        )
-    )
+    return mixture_plan(avail, weights)
 
 
 @declare(
@@ -5166,14 +5061,10 @@ def llm_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(F.split("text", " ")).alias("token"))
-    tot = tok.agg(F.count(F.lit(1)).alias("n_total"))
-    vf = (
-        tok.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("token"))
-        .limit(100)
+    tot = docs.select(F.explode(F.split("text", " ")).alias("token")).agg(
+        F.count(F.lit(1)).alias("n_total")
     )
+    vf = textstats.word_freq(docs, k=100).withColumnRenamed("freq", "cnt")
     w = Window.orderBy(F.col("cnt").desc(), F.col("token"))
     r = vf.select(
         "token",

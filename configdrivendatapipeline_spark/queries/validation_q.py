@@ -674,28 +674,12 @@ def val_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     "metric row never carries the identifying combos themselves.",
 )
 def val_kanonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from configdrivendatapipeline_spark.validation import kanonymity_metrics
+
     c = load(spark, sf_dir, "customer")
-    g = c.groupBy("c_nationkey", "c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    s = g.agg(
-        F.count(F.lit(1)).alias("n_groups"),
-        F.coalesce(
-            F.sum(F.when(F.col("n") < 5, 1).otherwise(0)), F.lit(0)
-        ).cast("long").alias("n_violating_groups"),
-        F.coalesce(
-            F.sum(F.when(F.col("n") < 5, F.col("n")).otherwise(0)), F.lit(0)
-        ).cast("long").alias("n_exposed_rows"),
-        F.min("n").alias("min_group_size"),
-    )
-    return s.select(
-        F.lit("k_anonymity_5").alias("rule_name"),
-        "n_groups",
-        "n_violating_groups",
-        "n_exposed_rows",
-        "min_group_size",
-        (F.col("min_group_size") >= 5).alias("passed"),
-    )
+    return kanonymity_metrics(
+        c, ["c_nationkey", "c_mktsegment"], k=5
+    ).withColumnRenamed("worst", "min_group_size")
 
 
 @declare(
@@ -800,37 +784,17 @@ def val_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the metric row never carries the identifying combos.",
 )
 def val_ldiversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from configdrivendatapipeline_spark.validation import ldiversity_metrics
+
     c = load(spark, sf_dir, "customer")
     band = (
         F.when(F.col("c_acctbal") < 0, "debt")
         .when(F.col("c_acctbal") < 5000, "low")
         .otherwise("high")
     )
-    g = c.groupBy("c_nationkey", band.alias("band")).agg(
-        F.countDistinct("c_mktsegment").alias("n_sensitive"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    s = g.agg(
-        F.count(F.lit(1)).alias("n_groups"),
-        F.coalesce(
-            F.sum(F.when(F.col("n_sensitive") < 3, 1).otherwise(0)), F.lit(0)
-        ).cast("long").alias("n_violating_groups"),
-        F.coalesce(
-            F.sum(
-                F.when(F.col("n_sensitive") < 3, F.col("n_rows")).otherwise(0)
-            ),
-            F.lit(0),
-        ).cast("long").alias("n_exposed_rows"),
-        F.min("n_sensitive").alias("min_diversity"),
-    )
-    return s.select(
-        F.lit("l_diversity_3").alias("rule_name"),
-        "n_groups",
-        "n_violating_groups",
-        "n_exposed_rows",
-        "min_diversity",
-        (F.col("min_diversity") >= 3).alias("passed"),
-    )
+    return ldiversity_metrics(
+        c.withColumn("band", band), ["c_nationkey", "band"], "c_mktsegment", l=3
+    ).withColumnRenamed("worst", "min_diversity")
 
 
 @declare(

@@ -921,13 +921,15 @@ def test_training_layout_ops(spark, sf_dir):
     assert rows(frames["sdiff"]) == rows(dedup.snapshot_diff(docs, prev))
 
 
-def test_graph_rank_op(spark, sf_dir):
+def test_graph_rank_op(spark, sf_dir, tmp_path):
     from configdrivendatapipeline_spark.llm import dedup
 
     pairs = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
     nodes = spark.createDataFrame([(1,), (2,), (3,)], ["vec_id"])
-    pairs.write.mode("overwrite").parquet("/tmp/cddp_test_pairs.parquet")
-    nodes.write.mode("overwrite").parquet("/tmp/cddp_test_nodes.parquet")
+    pairs_path = str(tmp_path / "pairs.parquet")
+    nodes_path = str(tmp_path / "nodes.parquet")
+    pairs.write.parquet(pairs_path)
+    nodes.write.parquet(nodes_path)
     frames = run_step(
         spark,
         sf_dir,
@@ -936,8 +938,8 @@ def test_graph_rank_op(spark, sf_dir):
   - {id: ranked, inputs: [pairs, nodes], op: graph_rank, params: {iters: 2}}
 """,
         extra_sources=(
-            '  pairs: {format: parquet, path: "/tmp/cddp_test_pairs.parquet"}\n'
-            '  nodes: {format: parquet, path: "/tmp/cddp_test_nodes.parquet"}\n'
+            f'  pairs: {{format: parquet, path: "{pairs_path}"}}\n'
+            f'  nodes: {{format: parquet, path: "{nodes_path}"}}\n'
         ),
     )
     assert rows(frames["ranked"]) == rows(
@@ -945,7 +947,7 @@ def test_graph_rank_op(spark, sf_dir):
     )
 
 
-def test_materialize_and_components_ops(spark, sf_dir):
+def test_materialize_and_components_ops(spark, sf_dir, tmp_path):
     """materialize writes the step's frame once and downstream steps
     read the PARQUET intermediate (fresh scan, not the original
     lineage); components exposes connected components to YAML. The
@@ -962,12 +964,12 @@ def test_materialize_and_components_ops(spark, sf_dir):
         """
   - {id: pairs_raw, input: documents, op: jaccard_pairs, params: {threshold: 0.95}}
   - {id: slim, input: pairs_raw, op: select, params: {columns: [id_a, id_b]}}
-  - {id: pairs, input: slim, op: materialize, params: {path: /tmp/cddp_test_mat_pairs}}
+  - {id: pairs, input: slim, op: materialize, params: {path: TMP/cddp_test_mat_pairs}}
   - {id: nodes, input: documents, op: select, params: {columns: [doc_id]}}
   - {id: comp, inputs: [pairs, nodes], op: components, params: {id_column: doc_id}}
   - {id: tok_dist, input: documents, op: bpe_train, params: {n_merges: 8}}
   - {id: tok_local, input: documents, op: bpe_train, params: {n_merges: 8, mode: local}}
-""",
+""".replace("TMP", str(tmp_path)),
     )
     # the materialized frame scans the written intermediate
     assert any(
@@ -988,9 +990,9 @@ def test_materialize_and_components_ops(spark, sf_dir):
         """
   - {id: keyed, input: nation, op: select, params: {columns: [n_regionkey, n_name]}}
   - {id: laid, input: keyed, op: materialize,
-     params: {path: /tmp/cddp_test_mat_layout, cluster_by: [n_regionkey],
+     params: {path: TMP/cddp_test_mat_layout, cluster_by: [n_regionkey],
               sort_by: [n_name]}}
-""",
+""".replace("TMP", str(tmp_path)),
     )
     laid = frames2["laid"]
     assert rows(laid) == rows(frames2["keyed"])
@@ -1009,7 +1011,7 @@ def test_materialize_and_components_ops(spark, sf_dir):
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
     )
     with pytest.raises(ValueError, match="batch cut point"):
-        OPS["materialize"](spark, [stream], {"path": "/tmp/cddp_never"})
+        OPS["materialize"](spark, [stream], {"path": str(tmp_path / "never")})
     with pytest.raises(ValueError, match="2 inputs"):
         OPS["components"](spark, [frames["slim"]], {})
 
@@ -1146,12 +1148,13 @@ def test_asof_join_op_directions(spark, sf_dir):
         ).count()
 
 
-def test_route_modality_op(spark, sf_dir):
+def test_route_modality_op(spark, sf_dir, tmp_path):
     from configdrivendatapipeline_spark.llm import multimodal as mm
 
     ids = spark.createDataFrame([(i,) for i in range(30)], ["doc_id"])
     payloads = mm.attach_mixed_payload(ids)
-    payloads.write.mode("overwrite").parquet("/tmp/cddp_test_payloads.parquet")
+    payloads_path = str(tmp_path / "payloads.parquet")
+    payloads.write.parquet(payloads_path)
     frames = run_step(
         spark,
         sf_dir,
@@ -1160,10 +1163,10 @@ def test_route_modality_op(spark, sf_dir):
   - {id: routed, input: media, op: route_modality, params: {}}
 """,
         extra_sources=(
-            '  media: {format: parquet, path: "/tmp/cddp_test_payloads.parquet"}\n'
+            f'  media: {{format: parquet, path: "{payloads_path}"}}\n'
         ),
     )
-    direct = mm.route_modality(spark.read.parquet("/tmp/cddp_test_payloads.parquet"))
+    direct = mm.route_modality(spark.read.parquet(payloads_path))
     assert rows(frames["routed"]) == rows(direct)
 
 
@@ -1311,7 +1314,7 @@ def test_retrieval_ops(spark, sf_dir):
     assert {r["qid"] for r in hits} <= {0, 1}
 
 
-def test_survivorship_op(spark, sf_dir):
+def test_survivorship_op(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from configdrivendatapipeline_spark.enrichment import survivorship
@@ -1329,7 +1332,8 @@ def test_survivorship_op(spark, sf_dir):
             (F.col("n_regionkey") + 10).alias("rk"),
         )
     )
-    variants.write.mode("overwrite").parquet("/tmp/cddp_test_variants.parquet")
+    variants_path = str(tmp_path / "variants.parquet")
+    variants.write.parquet(variants_path)
     frames = run_step(
         spark,
         sf_dir,
@@ -1344,11 +1348,11 @@ def test_survivorship_op(spark, sf_dir):
       rules: {nm: [first_non_null, nm], rk_max: [max, rk]}
 """,
         extra_sources=(
-            '  v: {format: parquet, path: "/tmp/cddp_test_variants.parquet"}\n'
+            f'  v: {{format: parquet, path: "{variants_path}"}}\n'
         ),
     )
     direct = survivorship(
-        spark.read.parquet("/tmp/cddp_test_variants.parquet"),
+        spark.read.parquet(variants_path),
         key_cols=["n_nationkey"], priority_col="prio",
         rules={"nm": ("first_non_null", "nm"), "rk_max": ("max", "rk")},
     )
@@ -1479,6 +1483,106 @@ def test_oversample_op_hits_expected_counts(spark, sf_dir):
         (F.col("source") == biggest["source"]) & (F.col("lang") == biggest["lang"])
     ).count()
     assert got_big == biggest["count"]
+
+
+_PORTED_OPS = [
+    (
+        "llm_oversample",
+        "documents",
+        """
+  - id: up
+    input: documents
+    op: oversample
+    params: {group_by: [source, lang], id_column: doc_id, salt: "oversample:v1"}
+  - {id: out, input: up, op: select, params: {columns: [doc_id, source, lang, copy_no]}}
+""",
+    ),
+    (
+        "llm_mixture_plan",
+        "documents",
+        """
+  - id: avail
+    input: documents
+    op: aggregate
+    params:
+      group_by: [source]
+      aggs:
+        tokens_avail: "CAST(SUM(size(split(text, ' '))) AS BIGINT)"
+  - id: out
+    input: avail
+    op: mixture_plan
+    params: {weights: WEIGHTS, source_column: source, available_column: tokens_avail}
+""",
+    ),
+    (
+        "llm_keyword_search",
+        "documents",
+        """
+  - id: out
+    input: documents
+    op: keyword_search
+    params:
+      k: 10
+      id_column: doc_id
+      text_column: text
+      queries: {0: [the, data, query], 1: [stream, window], 2: [the, of, and]}
+""",
+    ),
+    (
+        "val_kanonymity",
+        "customer",
+        """
+  - id: kanon
+    input: customer
+    op: kanonymity
+    params: {quasi_identifiers: [c_nationkey, c_mktsegment], k: 5}
+  - {id: out, input: kanon, op: rename, params: {mapping: {worst: min_group_size}}}
+""",
+    ),
+    (
+        "val_ldiversity",
+        "customer",
+        """
+  - id: banded
+    input: customer
+    op: derive
+    params:
+      columns:
+        band: "CASE WHEN c_acctbal < 0 THEN 'debt' WHEN c_acctbal < 5000 THEN 'low' ELSE 'high' END"
+  - id: ldiv
+    input: banded
+    op: ldiversity
+    params: {quasi_identifiers: [c_nationkey, band], sensitive: c_mktsegment, l: 3}
+  - {id: out, input: ldiv, op: rename, params: {mapping: {worst: min_diversity}}}
+""",
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "query_id, table, steps", _PORTED_OPS, ids=[c[0] for c in _PORTED_OPS]
+)
+def test_ported_op_matches_declared_query(spark, sf_dir, query_id, table, steps):
+    """Each op whose body is the library function its declared query
+    calls, run from YAML with that query's parameters, returns the
+    query's (oracle-checked) rows — so the op's own parameter handling
+    is pinned too. mixture_plan's weights are the query's in-plan
+    ``CAST(SUBSTR(source, 4) AS BIGINT) % 5 + 1``, spelled out per
+    source of the fixture."""
+    from configdrivendatapipeline_spark.queries import registry
+
+    if "WEIGHTS" in steps:
+        sources = [
+            r["source"]
+            for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .select("source").distinct().collect()
+        ]
+        weights = ", ".join(f"{s}: {int(s[3:]) % 5 + 1}" for s in sources)
+        steps = steps.replace("WEIGHTS", "{" + weights + "}")
+    got = run_step(spark, sf_dir, table, steps)["out"]
+    want = registry()[query_id].build(spark, sf_dir)
+    assert got.dtypes == want.dtypes
+    assert rows(got) == rows(want)
 
 
 def test_mixture_plan_rejects_zero_availability(spark, sf_dir):

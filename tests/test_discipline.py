@@ -93,25 +93,18 @@ def test_no_rdd_in_engine():
 
 def test_no_id_keyed_session_state_in_engine():
     """Per-session state has one way in: ``session.session_memo``,
-    which stores on the session object itself. A module dict keyed on
-    ``id(spark)`` needs its own guard against a collected session's id
-    being reused, and pins or leaks sessions unless it also brings its
-    own eviction."""
-    violations = []
-    for py in PKG.rglob("*.py"):
-        tree = ast.parse(py.read_text())
-        for node in ast.walk(tree):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Name)
-                and node.func.id == "id"
-                and any(
-                    isinstance(a, ast.Name) and a.id in ("spark", "session")
-                    for a in node.args
-                )
-            ):
-                violations.append(f"{py.relative_to(PKG.parent)}:{node.lineno}: id({node.args[0].id})")
-    assert not violations, "id()-keyed session state:\n" + "\n".join(violations)
+    which stores on the session object itself and keys on the objects
+    (a DataFrame compares by identity). A dict keyed on ``id(obj)``
+    needs its own guard against a collected object's id being reused,
+    and pins or leaks objects unless it also brings its own eviction,
+    so no ``id(...)`` call is left in the package."""
+    violations = [
+        f"{py.relative_to(PKG.parent)}:{line}: id()"
+        for py in PKG.rglob("*.py")
+        for name, line in _called_names(ast.parse(py.read_text()))
+        if name == "id"
+    ]
+    assert not violations, "id()-keyed state:\n" + "\n".join(violations)
 
 
 def test_only_scratch_chooses_temp_dirs():

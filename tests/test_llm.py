@@ -66,7 +66,7 @@ def test_minhash_finds_planted_neardup(spark):
     )
     sigs = dedup.minhash_signatures(df, n_hashes=32, shingle_k=3)
     pairs = {
-        (r.id_a, r.id_b) for r in dedup.lsh_candidate_pairs(sigs, bands=16).collect()
+        (r.id_a, r.id_b) for r in dedup.lsh_candidate_pairs(sigs, bands=16, sig_len=32).collect()
     }
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
@@ -1839,8 +1839,7 @@ def test_simhash_rejects_bad_family_and_bits(spark):
 
 
 def test_lsh_banding_in_plan_guard_matches_eager_guard(spark):
-    """_banded's in-plan path (sig_len=None) must fail as LOUDLY as
-    the sig_len branch when bands exceed the signature length —
+    """Bands exceeding the signature length must fail LOUDLY —
     silently emitting empty-CSV band keys was recall 0 with no
     error."""
     import pytest
@@ -1857,10 +1856,6 @@ def test_lsh_banding_in_plan_guard_matches_eager_guard(spark):
     sigs = minhash_signatures(docs, n_hashes=4)
     with pytest.raises(ValueError, match="bands"):
         lsh_candidate_pairs(sigs, bands=8, sig_len=4)
-    with pytest.raises(Exception, match="signature length"):
-        lsh_candidate_pairs(sigs, bands=8).count()
-    # a valid in-plan config still produces candidates
-    assert lsh_candidate_pairs(sigs, bands=2).count() >= 0
 
 
 def test_graph_rank_ignores_duplicate_pairs(spark):

@@ -370,7 +370,7 @@ def test_shared_banded_frames_validate_params(spark):
         S.hard_negatives(emb, n_tables=2, planes_per_table=3, shared=bare)
 
 
-def test_compiler_shares_banded_frames_within_one_compile(spark):
+def test_compiler_shares_banded_frames_within_one_compile(spark, memo, monkeypatch):
     """r18: two ANN steps over the same source in one pipeline band
     the corpus once (the compiler twin of llm_triplets' explicit
     sharing) — and the shared plan is value-identical to unshared."""
@@ -380,10 +380,18 @@ def test_compiler_shares_banded_frames_within_one_compile(spark):
         [(i, [float(i % 3), float(i % 5), 1.0], i % 2) for i in range(30)],
         "vec_id LONG, embedding array<float>, label LONG",
     )
-    C._BANDED_CACHE.clear()
+    builds = []
+    real = S.banded_norms
+
+    def counting(*args, **kwargs):
+        builds.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(S, "banded_norms", counting)
     a = C.OPS["knn_join"](spark, [emb], {"k": 1, "group_column": "label"})
     b = C.OPS["hard_negatives"](spark, [emb], {})
-    assert len(C._BANDED_CACHE) == 1  # one banding served both steps
+    assert len(builds) == 1  # one banding served both steps
+    monkeypatch.undo()
     unshared_a = S.knn_join(emb, k=1, group_col="label")
     unshared_b = S.hard_negatives(emb)
     assert sorted(map(tuple, a.collect())) == sorted(
@@ -392,4 +400,3 @@ def test_compiler_shares_banded_frames_within_one_compile(spark):
     assert sorted(map(tuple, b.collect())) == sorted(
         map(tuple, unshared_b.collect())
     )
-    C._BANDED_CACHE.clear()
