@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from configdrivendatapipeline_spark.queries import declare, dsum, load, odsum, omd5bucket
+from configdrivendatapipeline_spark.scratch import run_path
+from configdrivendatapipeline_spark.session import session_memo
 
 _P = "2.2"
 _J = "2.3"
@@ -554,65 +556,33 @@ def join_self(spark: SparkSession, sf_dir: str) -> DataFrame:
     "table on every join and paying the shuffle once at write time.",
 )
 def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import io
     import os
     from contextlib import redirect_stdout
 
-    # Table names keyed on the source's identity (path+mtime+size):
-    # reruns against unchanged fixtures reuse the bucketed layout;
-    # regenerated fixtures get fresh tables instead of stale replays.
-    src = f"{sf_dir}/orders.parquet"
-    try:
-        st = os.stat(src)
-        ident = f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        ident = sf_dir
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    # Scale-factor name in the table id so cleanup below only ever
-    # touches THIS sf's lineage — a concurrent run against another sf
-    # (tests at sf0.001 vs checker at sf0.01) must not lose its stage.
-    sf_name = "".join(c if c.isalnum() else "_" for c in os.path.basename(sf_dir.rstrip("/")))
-    t_orders, t_cust = f"bq_orders_{sf_name}_{tag}", f"bq_cust_{sf_name}_{tag}"
+    def stage() -> list[str]:
+        # Bucketed layouts need a catalog table; each is an EXTERNAL
+        # table over a run-directory path, named after that path, so
+        # nothing lands in the warehouse dir or outlives the process.
+        names = []
+        for table, cols, key in (
+            ("orders", ("o_orderkey", "o_custkey", "o_totalprice"), "o_custkey"),
+            ("customer", ("c_custkey", "c_name"), "c_custkey"),
+        ):
+            path = run_path(spark, f"bq_{table}")
+            name = os.path.basename(path).replace("-", "_")
+            (
+                load(spark, sf_dir, table)
+                .select(*cols)
+                .write.bucketBy(8, key)
+                .sortBy(key)
+                .option("path", path)
+                .saveAsTable(name)
+            )
+            names.append(name)
+        return names
 
-    catalog = spark.catalog
-    # Drop bucketed stages from superseded generations of the same
-    # fixture so the warehouse doesn't accumulate one pair per
-    # regeneration.
-    stale_prefixes = (f"bq_orders_{sf_name}_", f"bq_cust_{sf_name}_")
-    for tbl in catalog.listTables():
-        if tbl.name.startswith(stale_prefixes) and not tbl.name.endswith(tag):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl.name}")
-    if not catalog.tableExists(t_orders) or not catalog.tableExists(t_cust):
-        # The catalog is per-process (in-memory) but the warehouse dir
-        # persists: a fresh session sees tableExists()=False while the
-        # managed location from a previous process still exists, and
-        # saveAsTable then raises LOCATION_ALREADY_EXISTS. Clear the
-        # orphaned locations before (re)staging.
-        import shutil
-        from urllib.parse import urlparse
-
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
-        wh_dir = wh.path or wh.geturl()
-        for t in (t_orders, t_cust):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(os.path.join(wh_dir, t), ignore_errors=True)
-        (
-            load(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .write.bucketBy(8, "o_custkey")
-            .sortBy("o_custkey")
-            .mode("overwrite")
-            .saveAsTable(t_orders)
-        )
-        (
-            load(spark, sf_dir, "customer")
-            .select("c_custkey", "c_name")
-            .write.bucketBy(8, "c_custkey")
-            .sortBy("c_custkey")
-            .mode("overwrite")
-            .saveAsTable(t_cust)
-        )
+    t_orders, t_cust = session_memo(spark, "bucketed_join", sf_dir, stage)
     o = spark.table(t_orders)
     c = spark.table(t_cust)
     # merge hint pins sort-merge (a broadcast would also be

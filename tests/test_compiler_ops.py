@@ -1843,28 +1843,31 @@ def test_materialize_ignore_is_restart_point(spark, sf_dir, tmp_path):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_compile_pipeline_dry_run_writes_nothing(spark):
+def test_compile_pipeline_dry_run_writes_nothing(spark, tmp_path):
     """compile_pipeline(dry_run=True) substitutes the materialize
     write with a schema-equivalent pass-through: validating
-    examples/dedup_decision.yaml creates NO intermediate on disk,
-    downstream frames still compile with the same columns, and the
-    CLI's explain subcommand (which compiles dry) also leaves the
-    filesystem untouched."""
+    examples/dedup_decision.yaml (its output paths pointed at a
+    tmpdir) creates NO intermediate on disk, downstream frames still
+    compile with the same columns, and the CLI's explain subcommand
+    (which compiles dry) also leaves the filesystem untouched."""
     import os
     import pathlib
-    import shutil
 
     from configdrivendatapipeline_spark.cli import main as cli_main
     from configdrivendatapipeline_spark.config import load_pipeline
 
-    yaml_path = os.path.join(
+    src = os.path.join(
         os.path.dirname(__file__), "..", "examples", "dedup_decision.yaml"
     )
+    text = pathlib.Path(src).read_text()
+    assert "/tmp/cddp_out/dedup_decision_pairs" in text
+    yaml_path = str(tmp_path / "dedup_decision.yaml")
+    pathlib.Path(yaml_path).write_text(text.replace("/tmp/cddp_out/", f"{tmp_path}/out/"))
     cfg = load_pipeline(yaml_path)
     mat_path = next(
         s.params["path"] for s in cfg.steps if s.op == "materialize"
     )
-    shutil.rmtree(mat_path, ignore_errors=True)
+    assert mat_path == f"{tmp_path}/out/dedup_decision_pairs"
 
     frames = compile_pipeline(spark, cfg, dry_run=True)
     assert not pathlib.Path(mat_path).exists(), "dry_run wrote the intermediate"

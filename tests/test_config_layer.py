@@ -202,14 +202,15 @@ def test_degenerate_rule_configs_fail_loudly(spark):
     assert ok.collect()[0].passed
 
 
-def test_all_example_yamls_compile(spark):
+def test_all_example_yamls_compile(spark, tmp_path):
     """Every shipped example in examples/ must parse and plan-compile
     (catching op-name drift between docs and the op registry). The
     streaming example needs a streaming source, covered separately in
-    test_skew_and_streaming_cfg; batch examples compile fully."""
+    test_skew_and_streaming_cfg; batch examples compile fully. Output
+    paths point at a tmpdir: a full compile runs materialize."""
     import pathlib
 
-    from configdrivendatapipeline_spark.config.loader import load_pipeline
+    from configdrivendatapipeline_spark.config.loader import load_pipeline_str
 
     ex_dir = pathlib.Path(__file__).parent.parent / "examples"
     yamls = sorted(ex_dir.glob("*.yaml"))
@@ -217,7 +218,8 @@ def test_all_example_yamls_compile(spark):
     for y in yamls:
         if y.name == "streaming_purchases.yaml":
             continue
-        cfg = load_pipeline(str(y))
+        text = y.read_text().replace("/tmp/cddp_out/", f"{tmp_path}/")
+        cfg = load_pipeline_str(text, base_dir=str(ex_dir))
         frames = compile_pipeline(spark, cfg)
         assert frames, f"{y.name}: no frames compiled"
         for step_id, df in frames.items():

@@ -123,30 +123,47 @@ def test_only_scratch_chooses_temp_dirs():
     assert not violations, "temp dirs chosen outside scratch.py:\n" + "\n".join(violations)
 
 
-def test_survey_rows_and_window_names_resolve():
+def test_survey_rows_resolve_and_registry_follows_evidence(tmp_path):
     """Contract hygiene: every SURVEY.md §2 operator row must name a
     registered query (a stale row is a false promise the judge
-    grades), and every id in the registry's driver-ordering window
-    must exist (a typo there silently reorders coverage)."""
+    grades), and registry order is the evidence order over every
+    registered id (the driver checks only the head of it)."""
+    import json
     import re
 
-    from configdrivendatapipeline_spark.queries import registry, _ROTATION_WINDOW
+    from configdrivendatapipeline_spark.queries import (
+        _REGISTRY,
+        evidence_order,
+        registry,
+    )
 
-    reg = set(registry())
+    reg = list(registry())
     survey = (PKG.parent / "SURVEY.md").read_text()
     rows = set(re.findall(r"^\| `([a-z0-9_]+)`", survey, re.M))
     stale = sorted(r for r in rows if r not in reg)
     assert not stale, f"SURVEY §2 rows with no registered query: {stale}"
-    # Set equality (not just matching lengths + window⊆registry):
-    # a duplicated window entry would otherwise mask an omitted
-    # registry id — registry() silently appends unlisted ids at the
-    # TAIL via its fallback loop, which is exactly the silent
-    # coverage loss this test exists to prevent.
-    dupes = sorted(
-        n for n in set(_ROTATION_WINDOW) if _ROTATION_WINDOW.count(n) > 1
-    )
-    assert not dupes, f"ordering-window ids listed twice: {dupes}"
-    missing = sorted(n for n in _ROTATION_WINDOW if n not in reg)
-    assert not missing, f"ordering-window ids not in registry: {missing}"
-    omitted = sorted(reg - set(_ROTATION_WINDOW))
-    assert not omitted, f"registry ids missing from ordering window: {omitted}"
+    assert reg == evidence_order(list(_REGISTRY))
+    assert sorted(reg) == sorted(_REGISTRY)
+
+    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
+        "a": green,
+        "b": green,
+        "c": {**green, "hash_match": None},
+        "d": {**green, "err": "boom"},
+        "e": "green",
+    }))
+    names = ["b", "e", "a", "d", "c"]
+    assert evidence_order(names, tmp_path) == ["c", "d", "e", "a", "b"]
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({"a": green, "c": green}))
+    assert evidence_order(names, tmp_path) == ["d", "e", "b", "a", "c"]
+    assert evidence_order(names, tmp_path / "none") == sorted(names)
+
+
+def test_inventory_is_generated_from_registry():
+    """INVENTORY.md is generated: it equals what
+    ``tools/gen_inventory.py`` renders from the live registry."""
+    from configdrivendatapipeline_spark.queries import registry
+    from tools.gen_inventory import render
+
+    assert (PKG.parent / "INVENTORY.md").read_text() == render(registry())

@@ -291,7 +291,7 @@ def test_gapfill_linear_brackets_and_agrees_on_observed(spark, sf_dir):
                 assert lo - 1 <= rows[i][1] <= hi + 1, (uid, rows[i])
 
 
-def test_hampel_flags_planted_spike_not_steady_drift(spark):
+def test_hampel_flags_planted_spike_not_steady_drift(spark, tmp_path):
     import datetime as dt
 
     from configdrivendatapipeline_spark.queries.windows import win_hampel
@@ -306,18 +306,14 @@ def test_hampel_flags_planted_spike_not_steady_drift(spark):
     df = spark.createDataFrame(
         rows, ["event_id", "user_id", "ts", "event_type", "value"]
     )
-    import os
-    import tempfile
-
-    path = os.path.join(tempfile.gettempdir(), "cddp_hampel_fixture")
-    os.makedirs(path, exist_ok=True)
+    path = str(tmp_path)
     df.write.mode("overwrite").parquet(f"{path}/events.parquet")
     out = {r["event_id"]: r["is_spike"] for r in win_hampel(spark, path).collect()}
     assert out[4] is True            # the planted spike
     assert not any(out[i] for i in (0, 1, 2, 3))  # steady ramp is clean
 
 
-def test_gini_extremes(spark, sf_dir):
+def test_gini_extremes(spark, sf_dir, tmp_path):
     """Gini is ~0 for uniform values and approaches (n-1)/n when one
     holder owns everything."""
     from configdrivendatapipeline_spark.queries import _REGISTRY
@@ -326,11 +322,9 @@ def test_gini_extremes(spark, sf_dir):
         [(1, 50.0, i) for i in range(10)],
         ["c_nationkey", "c_acctbal", "c_custkey"],
     )
-    import os, tempfile
-
     # two dirs: queries.load() caches per (session, sf_dir, table)
-    path_u = os.path.join(tempfile.gettempdir(), "cddp_gini_uniform")
-    path_c = os.path.join(tempfile.gettempdir(), "cddp_gini_conc")
+    path_u = str(tmp_path / "uniform")
+    path_c = str(tmp_path / "conc")
     uniform.write.mode("overwrite").parquet(f"{path_u}/customer.parquet")
     from configdrivendatapipeline_spark.queries.aggregates import agg_gini
 

@@ -78,6 +78,7 @@ _STAGING_IDS = (
     "stream_checkpoint_resume",
     "pipeline_include",
     "stream_tumbling",
+    "join_bucketed",
 )
 
 _STAGING_SCRIPT = textwrap.dedent(
@@ -103,7 +104,8 @@ _STAGING_SCRIPT = textwrap.dedent(
 def test_staging_stays_in_the_run_directory(sf_dir, tmp_path):
     """Staging builders write only under the process's run directory,
     and nothing of theirs is left in the temp dir after the process
-    exits."""
+    exits. Catalog tables staged by a builder are path-backed, so no
+    table directory lands in the working directory's warehouse."""
     tmp = tmp_path / "tmp"
     cwd = tmp_path / "cwd"
     tmp.mkdir()
@@ -130,3 +132,5 @@ def test_staging_stays_in_the_run_directory(sf_dir, tmp_path):
     assert len(run_dirs) == 1 and run_dirs[0].startswith("cddp_scratch-"), entries
     assert all(e.startswith(run_dirs[0]) for e in entries), entries
     assert list(tmp.iterdir()) == []
+    warehouse = cwd / "spark-warehouse"
+    assert not warehouse.exists() or list(warehouse.iterdir()) == []

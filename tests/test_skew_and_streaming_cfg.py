@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import os
-import shutil
+import pathlib
 
 import pytest
 
@@ -58,15 +58,19 @@ def test_salted_agg_rejects_non_algebraic(spark, sf_dir):
         salted_agg(li, ["l_returnflag"], {"m": ("median", "l_quantity")})
 
 
-def test_streaming_pipeline_from_yaml(spark):
-    """The streaming_purchases example runs end-to-end via config and
-    produces exactly the batch-equivalent rows."""
+def test_streaming_pipeline_from_yaml(spark, tmp_path):
+    """The streaming_purchases example (its sink pointed at a tmpdir)
+    runs end-to-end via config and produces exactly the
+    batch-equivalent rows."""
     from configdrivendatapipeline_spark.compiler import run_pipeline
     from configdrivendatapipeline_spark.config import load_pipeline
 
-    out = "/tmp/cddp_out/purchases_stream"
-    shutil.rmtree(out, ignore_errors=True)
-    cfg = load_pipeline("examples/streaming_purchases.yaml")
+    text = pathlib.Path("examples/streaming_purchases.yaml").read_text()
+    assert "/tmp/cddp_out/purchases_stream" in text
+    out = str(tmp_path / "purchases_stream")
+    yaml_path = tmp_path / "streaming_purchases.yaml"
+    yaml_path.write_text(text.replace("/tmp/cddp_out/purchases_stream", out))
+    cfg = load_pipeline(str(yaml_path))
     frames = run_pipeline(spark, cfg)
     assert frames["shaped"].isStreaming
     got = spark.read.parquet(out)
