@@ -271,32 +271,20 @@ def bpe_fertility(
 
     Same cost shape as encode: the merge chain runs on the DISTINCT
     word table only, a broadcast word → token-count map joins back,
-    and the rollup is one small aggregation per stratum.
+    and the rollup is one small aggregation per stratum: this is
+    :func:`bpe_encode_counts` grouped by ``group_col``.
     """
-    from configdrivendatapipeline_spark.llm.textstats import tokens
-
-    word_tokens = _word_token_counts(df, merges, text_col)
-    toks = df.select(F.col(group_col), F.explode(tokens(text_col)).alias("word"))
-    return (
-        toks.join(F.broadcast(word_tokens), "word")
-        .groupBy(group_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("wtok").alias("n_bpe_tokens"),
-        )
-        .select(
-            group_col,
-            "n_words",
-            "n_bpe_tokens",
-            # n_bpe_tokens is a per-stratum TOKEN count (~1e14 at
-            # 100 TB) — widen the micro product; the fertility ratio
-            # itself (tokens per word, ≤ max word length × 1e6) fits
-            # BIGINT (r13 token-scale audit)
-            F.expr(
-                "(CAST(n_bpe_tokens AS DECIMAL(38,0)) * 1000000)"
-                " div n_words"
-            ).alias("fertility_micro"),
-        )
+    return bpe_encode_counts(df, merges, group_col, text_col).select(
+        group_col,
+        "n_words",
+        "n_bpe_tokens",
+        # n_bpe_tokens is a per-stratum TOKEN count (~1e14 at 100 TB)
+        # — widen the micro product; the fertility ratio itself
+        # (tokens per word, ≤ max word length × 1e6) fits BIGINT
+        # (r13 token-scale audit)
+        F.expr(
+            "(CAST(n_bpe_tokens AS DECIMAL(38,0)) * 1000000) div n_words"
+        ).alias("fertility_micro"),
     )
 
 

@@ -101,6 +101,18 @@ def shingle_hash_sets(
         splits is not None and splits < target
     ):
         src = src.repartition(target, id_col)
+    return _token_hashes(src, id_col, text_col, token_hash).select(
+        id_col, F.array_distinct(_shingle_hashes(shingle_k)).alias("hs")
+    )
+
+
+def _token_hashes(
+    df: DataFrame, id_col: str, text_col: str, token_hash: str
+) -> DataFrame:
+    """(id, __th) — the 32-bit hash of each space-separated token of
+    every non-NULL ``text_col`` (array<long>): xxhash64 masked to 32
+    bits, or ``"md5_32"`` — the first 8 hex chars of md5 as an int,
+    replayable by any SQL engine."""
     toks = F.split(F.col(text_col), " ")
     if token_hash == "md5_32":
         th = F.transform(
@@ -109,20 +121,6 @@ def shingle_hash_sets(
         )
     else:
         th = F.transform(toks, lambda t: F.xxhash64(t).bitwiseAND(F.lit(0xFFFFFFFF)))
-    mixers = [
-        F.lit(((j + 1) * 2654435761) % (2**29) | 1) for j in range(shingle_k)
-    ]
-
-    def shingle_hash(i: Column) -> Column:
-        acc = None
-        for j in range(shingle_k):
-            term = (F.coalesce(F.get(F.col("__th"), i + j), F.lit(0)) * mixers[j]).bitwiseAND(
-                F.lit(0xFFFFFFFFFFFF)
-            )
-            acc = term if acc is None else acc + term
-        return acc.bitwiseAND(F.lit(0xFFFFFFFF))
-
-    idx = F.sequence(F.lit(0), F.greatest(F.size(F.col("__th")) - shingle_k, F.lit(0)))
     # NULL-text guard BEFORE the token-hash projection, phrased on the
     # raw column. The previous form — .filter(F.size("__th") > 0)
     # after the projection — was row-equivalent (split() never yields
@@ -133,14 +131,28 @@ def shingle_hash_sets(
     # was hashed twice, once of those in the narrow pre-shuffle stage
     # (guide §4.4's duplicated-evaluation trap, expression flavor).
     # Filtering on text itself pushes a plain IsNotNull to the scan.
-    return (
-        src.filter(F.col(text_col).isNotNull())
-        .select(id_col, th.alias("__th"))
-        .select(
-            id_col,
-            F.array_distinct(F.transform(idx, shingle_hash)).alias("hs"),
-        )
-    )
+    return df.filter(F.col(text_col).isNotNull()).select(id_col, th.alias("__th"))
+
+
+def _shingle_hashes(k: int) -> Column:
+    """32-bit hash of every k consecutive token hashes in the
+    ``__th`` column (array<long>, one per shingle start; a doc shorter
+    than k yields one zero-padded shingle). Each term is an
+    odd-multiplier mix masked to 48 bits so ANSI long arithmetic
+    cannot overflow."""
+    mixers = [((j + 1) * 2654435761) % (2**29) | 1 for j in range(k)]
+
+    def shingle_hash(i: Column) -> Column:
+        acc = None
+        for j in range(k):
+            term = (
+                F.coalesce(F.get(F.col("__th"), i + j), F.lit(0)) * F.lit(mixers[j])
+            ).bitwiseAND(F.lit(0xFFFFFFFFFFFF))
+            acc = term if acc is None else acc + term
+        return acc.bitwiseAND(F.lit(0xFFFFFFFF))
+
+    idx = F.sequence(F.lit(0), F.greatest(F.size(F.col("__th")) - k, F.lit(0)))
+    return F.transform(idx, shingle_hash)
 
 
 def minhash_signatures(
@@ -1382,7 +1394,7 @@ def winnow_fingerprints(
     hashing and MinHash's unordered sets cannot localize it.
 
     Spark-first shape: the token/shingle hashing is the zero-shuffle
-    md5_32 family map stage shared with :func:`shingle_sets`; the
+    md5_32 family map stage shared with :func:`shingle_hash_sets`; the
     window-min runs per document (partitioned by id — bounded by doc
     length, never corpus-sized). The min-with-rightmost-tie rule is
     made engine-exact by packing (hash asc, position desc) into ONE
@@ -1393,36 +1405,9 @@ def winnow_fingerprints(
     """
     from pyspark.sql import Window
 
-    m48, m32 = (1 << 48) - 1, (1 << 32) - 1
-    toks = F.split(F.col(text_col), " ")
-    th = F.transform(
-        toks,
-        lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"),
-    )
-    mixers = [((j + 1) * 2654435761) % (2**29) | 1 for j in range(k)]
-
-    def shingle_hash(i: Column) -> Column:
-        acc = None
-        for j in range(k):
-            term = (
-                F.coalesce(F.get(F.col("__th"), i + j), F.lit(0)) * F.lit(mixers[j])
-            ).bitwiseAND(F.lit(m48))
-            acc = term if acc is None else acc + term
-        return acc.bitwiseAND(F.lit(m32))
-
-    idx = F.sequence(F.lit(0), F.greatest(F.size(F.col("__th")) - k, F.lit(0)))
-    # Same NULL-text guard hoisting as shingle_hash_sets: filter on
-    # the raw column (row-equivalent — split() is never empty-array on
-    # non-null input) so the pushed-down predicate is a plain
-    # IsNotNull instead of a substituted copy of the whole per-token
-    # md5 transform evaluated once per row per operator.
     sh = (
-        df.filter(F.col(text_col).isNotNull())
-        .select(id_col, th.alias("__th"))
-        .select(
-            F.col(id_col),
-            F.posexplode(F.transform(idx, shingle_hash)).alias("p0", "h"),
-        )
+        _token_hashes(df, id_col, text_col, "md5_32")
+        .select(F.col(id_col), F.posexplode(_shingle_hashes(k)).alias("p0", "h"))
         .select(
             id_col,
             (F.col("p0") + 1).alias("p"),

@@ -2,15 +2,14 @@
 columns with typed metadata, processed through Arrow-batched
 mapInPandas.
 
-The decode architecture is REAL end-to-end for P6 PPM (pure-numpy
-header parse + buffer reshape, see ``decode_ppm`` /
-``decode_ppm_features`` — hash-verified against an analytic oracle);
-codec-dependent formats (JPEG/PNG/audio) stay behind
-``DecodeUnavailable`` because no codec library exists in this
-container. Swapping in PIL/torchaudio for those is a one-function
-change that touches no plan — the schema contract, binary column
-handling, Arrow batch shapes, partitioning and frame-sampling plan
-are shared with the proven PPM path.
+The decoders are REAL and pure-numpy for three container formats —
+P6 PPM images, PCM WAV audio and YUV4MPEG2 video (header parse +
+buffer reshape, see ``decode_ppm`` / ``decode_wav`` / ``decode_y4m``)
+— each hash-verified against an analytic oracle. Every decode kernel
+runs through :func:`_map_payloads`, so a codec-backed format
+(JPEG/PNG via PIL, compressed audio via torchaudio) is one new
+``rows`` function: the schema contract, binary column handling,
+Arrow batch shapes and the frame-sampling plan stay as they are.
 
 Scale notes: binary payloads ride the normal columnar path (parquet
 BYTE_ARRAY); mapInPandas streams Arrow batches so a 100 MB image
@@ -21,19 +20,13 @@ kernel only sees surviving rows.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-class DecodeUnavailable(NotImplementedError):
-    """Raised by real decode paths: the media libraries are not
-    installed in this environment. The deterministic fake path keeps
-    the Spark plumbing testable end-to-end."""
 
 
 def attach_fake_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -101,22 +94,15 @@ _DECODE_SCHEMA = (
 )
 
 
-def decode_features(df: DataFrame, use_real_decoder: bool = False) -> DataFrame:
-    """Arrow-batched 'decode + featurize' over the binary column.
-
-    ``use_real_decoder=True`` raises :class:`DecodeUnavailable` (no
-    PIL/ffmpeg here); the default deterministic fake derives features
-    from the raw bytes so the whole pipeline — batching, schema,
-    postprocessing — runs and verifies.
+def decode_features(df: DataFrame) -> DataFrame:
+    """Arrow-batched 'decode + featurize' over the binary column: a
+    deterministic fake that derives features from the raw bytes, so
+    the whole pipeline — batching, schema, postprocessing — runs and
+    verifies on payloads of any media type.
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if use_real_decoder:
-                raise DecodeUnavailable(
-                    "real image/audio decode requires PIL/torchaudio; "
-                    "install and implement here — plan/schema unchanged"
-                )
             payload = pdf["payload"]
             yield pd.DataFrame(
                 {
@@ -132,12 +118,7 @@ def decode_features(df: DataFrame, use_real_decoder: bool = False) -> DataFrame:
                     # the oracle's half-up (observed at sf0.1: mean
                     # exactly x.xxx5625).
                     "feat_mean": payload.map(
-                        lambda b: (
-                            ((sum(b) * 2_000_000 + len(b)) // (2 * len(b)))
-                            / 1_000_000
-                            if len(b)
-                            else 0.0
-                        )
+                        lambda b: _micro(sum(b), len(b)) / 1_000_000 if len(b) else 0.0
                     ).astype("float64"),
                 }
             )
@@ -196,12 +177,51 @@ def resize_plan(df: DataFrame, max_side: int = 256) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REAL decode path: P6 PPM in pure numpy (no image library needed).
-# JPEG/PNG/audio stay behind DecodeUnavailable — those genuinely need
-# codec libraries — but the decode ARCHITECTURE is proven end-to-end
-# here on a real binary image format: header parse, buffer reshape,
-# per-channel statistics, all inside the same Arrow-batched kernel.
+# REAL decode path: PPM / WAV / Y4M in pure numpy (no codec library
+# needed): header parse, buffer reshape and per-payload statistics,
+# all inside the one Arrow-batched kernel of _map_payloads.
 # ---------------------------------------------------------------------------
+
+
+def _micro(total: int, n: int) -> int:
+    """``total / n`` in half-up micro-units via exact integer
+    arithmetic — python round() is half-EVEN and loses ties against
+    the oracles' half-up (observed at sf0.1: a mean of exactly
+    x.xxx5625)."""
+    return (total * 2_000_000 + n) // (2 * n)
+
+
+def _map_payloads(
+    df: DataFrame, schema: str, rows: Callable[[int, Any], Iterable[tuple]]
+) -> DataFrame:
+    """Arrow-batched mapInPandas over (doc_id, payload): ``rows(doc_id,
+    buf)`` yields the output tuples of one payload, in the column
+    order of the DDL ``schema``. Payloads never materialize as
+    per-row Spark rows; each crosses the Python boundary once."""
+    columns = [c.split()[0] for c in schema.split(",")]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [
+                t
+                for doc_id, buf in zip(pdf["doc_id"], pdf["payload"])
+                for t in rows(int(doc_id), buf)
+            ]
+            yield pd.DataFrame(out, columns=columns)
+
+    return df.select("doc_id", "payload").mapInPandas(kernel, schema=schema)
+
+
+def _attach(df: DataFrame, id_col: str, make: Callable[[int], bytes]) -> DataFrame:
+    """``df``'s ``id_col`` plus a binary ``payload`` column holding
+    ``make(id)`` for each row (one vectorized pandas_udf)."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("binary")
+    def gen(ids: pd.Series) -> pd.Series:
+        return ids.map(lambda i: make(int(i)))
+
+    return df.select(id_col).withColumn("payload", gen(F.col(id_col)))
 
 
 def ppm_bytes(doc_id: int, w: int, h: int) -> bytes:
@@ -252,15 +272,11 @@ def attach_ppm_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a REAL P6 PPM binary payload per row (deterministic
     pattern, varied dims w=8+id%9, h=8+id%7 so the decoder's header
     parse is genuinely exercised)."""
-    from pyspark.sql.functions import pandas_udf
+    return _attach(df, id_col, _ppm_fixture)
 
-    @pandas_udf("binary")
-    def gen(ids: pd.Series) -> pd.Series:
-        return ids.map(
-            lambda i: ppm_bytes(int(i), 8 + int(i) % 9, 8 + int(i) % 7)
-        )
 
-    return df.select(id_col).withColumn("payload", gen(F.col(id_col)))
+def _ppm_fixture(i: int) -> bytes:
+    return ppm_bytes(i, 8 + i % 9, 8 + i % 7)
 
 
 _PPM_SCHEMA = (
@@ -276,31 +292,17 @@ def decode_ppm_features(df: DataFrame) -> DataFrame:
     same determinism discipline as the rest of the engine — float
     means would hash differently across engines). Arrow-batched
     mapInPandas: payloads never materialize as per-row Python rows."""
-    import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                img = decode_ppm(buf)
-                h, w, _ = img.shape
-                n = w * h
-                if n == 0:
-                    raise ValueError(
-                        f"doc {doc_id}: PPM payload has zero pixel area"
-                    )
-                sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                means = [int((int(s) * 2_000_000 + n) // (2 * n)) for s in sums]
-                rows.append((int(doc_id), w, h, *means))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "img_w", "img_h",
-                    "r_mean_micro", "g_mean_micro", "b_mean_micro",
-                ],
-            )
+    def rows(doc_id: int, buf) -> Iterator[tuple]:
+        img = decode_ppm(buf)
+        h, w, _ = img.shape
+        n = w * h
+        if n == 0:
+            raise ValueError(f"doc {doc_id}: PPM payload has zero pixel area")
+        sums = img.reshape(-1, 3).sum(axis=0, dtype="int64")
+        yield (doc_id, w, h, *(_micro(int(s), n) for s in sums))
 
-    return df.select("doc_id", "payload").mapInPandas(kernel, schema=_PPM_SCHEMA)
+    return _map_payloads(df, _PPM_SCHEMA, rows)
 
 
 def wav_bytes(doc_id: int, n_samples: int, sample_rate: int = 16000) -> bytes:
@@ -351,13 +353,11 @@ def decode_wav(buf: bytes):
 def attach_wav_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a REAL PCM WAV payload per row (varied lengths so the
     chunk walk and data sizing are genuinely exercised)."""
-    from pyspark.sql.functions import pandas_udf
+    return _attach(df, id_col, _wav_fixture)
 
-    @pandas_udf("binary")
-    def gen(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: wav_bytes(int(i), 800 + (int(i) % 5) * 160))
 
-    return df.select(id_col).withColumn("payload", gen(F.col(id_col)))
+def _wav_fixture(i: int) -> bytes:
+    return wav_bytes(i, 800 + (i % 5) * 160)
 
 
 _WAV_SCHEMA = (
@@ -370,30 +370,18 @@ def decode_wav_features(df: DataFrame) -> DataFrame:
     int16 samples → mean |amplitude| in exact half-up micro-units."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                samples, sr = decode_wav(buf)
-                n = len(samples)
-                if n == 0:
-                    # structurally valid but empty data chunk: the
-                    # established malformed-payload behavior is a
-                    # LOUD ValueError, not a ZeroDivisionError three
-                    # lines later
-                    raise ValueError(
-                        f"doc {doc_id}: WAV payload has zero samples"
-                    )
-                abs_sum = int(np.abs(samples.astype(np.int64)).sum())
-                rows.append(
-                    (int(doc_id), n, sr, (abs_sum * 2_000_000 + n) // (2 * n))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "mean_abs_micro"],
-            )
+    def rows(doc_id: int, buf) -> Iterator[tuple]:
+        samples, sr = decode_wav(buf)
+        n = len(samples)
+        if n == 0:
+            # structurally valid but empty data chunk: the established
+            # malformed-payload behavior is a LOUD ValueError, not a
+            # ZeroDivisionError three lines later
+            raise ValueError(f"doc {doc_id}: WAV payload has zero samples")
+        abs_sum = int(np.abs(samples.astype(np.int64)).sum())
+        yield (doc_id, n, sr, _micro(abs_sum, n))
 
-    return df.select("doc_id", "payload").mapInPandas(kernel, schema=_WAV_SCHEMA)
+    return _map_payloads(df, _WAV_SCHEMA, rows)
 
 
 def y4m_bytes(doc_id: int, w: int, h: int, n_frames: int) -> bytes:
@@ -454,17 +442,11 @@ def decode_y4m(buf: bytes):
 def attach_y4m_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a REAL Y4M video payload per row (varied dims + frame
     counts so container parsing and frame iteration are exercised)."""
-    from pyspark.sql.functions import pandas_udf
+    return _attach(df, id_col, _y4m_fixture)
 
-    @pandas_udf("binary")
-    def gen(ids: pd.Series) -> pd.Series:
-        return ids.map(
-            lambda i: y4m_bytes(
-                int(i), 4 + int(i) % 3, 4 + int(i) % 2, 3 + int(i) % 4
-            )
-        )
 
-    return df.select(id_col).withColumn("payload", gen(F.col(id_col)))
+def _y4m_fixture(i: int) -> bytes:
+    return y4m_bytes(i, 4 + i % 3, 4 + i % 2, 3 + i % 4)
 
 
 _Y4M_SCHEMA = "doc_id BIGINT, frame_idx INT, y_mean_micro BIGINT"
@@ -478,35 +460,24 @@ def decode_y4m_frames(df: DataFrame, every_k: int = 2) -> DataFrame:
     index it happens before DECODE, same plan shape)."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                frames, (w, h) = decode_y4m(buf)
-                n = w * h
-                if n == 0:
-                    raise ValueError(
-                        f"doc {doc_id}: Y4M payload has zero frame area"
-                    )
-                for fi in range(0, len(frames), every_k):
-                    y_sum = int(frames[fi][0].sum(dtype=np.int64))
-                    rows.append(
-                        (int(doc_id), fi, (y_sum * 2_000_000 + n) // (2 * n))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "y_mean_micro"]
-            )
+    def rows(doc_id: int, buf) -> Iterator[tuple]:
+        frames, (w, h) = decode_y4m(buf)
+        n = w * h
+        if n == 0:
+            raise ValueError(f"doc {doc_id}: Y4M payload has zero frame area")
+        for fi in range(0, len(frames), every_k):
+            yield (doc_id, fi, _micro(int(frames[fi][0].sum(dtype=np.int64)), n))
 
-    return df.select("doc_id", "payload").mapInPandas(kernel, schema=_Y4M_SCHEMA)
+    return _map_payloads(df, _Y4M_SCHEMA, rows)
 
 
 def resize_nearest(img, target_w: int, target_h: int):
-    """Nearest-neighbor resize of an (h, w, 3) array via integer
-    index maps — src index = (dst·src_dim) // dst_dim, the exact
-    arithmetic an oracle can replay."""
+    """Nearest-neighbor resize of an (h, w) or (h, w, channels) array
+    via integer index maps — src index = (dst·src_dim) // dst_dim,
+    the exact arithmetic an oracle can replay."""
     import numpy as np
 
-    h, w, _ = img.shape
+    h, w = img.shape[:2]
     rows = (np.arange(target_h, dtype=np.int64) * h) // target_h
     cols = (np.arange(target_w, dtype=np.int64) * w) // target_w
     return img[rows][:, cols]
@@ -524,32 +495,33 @@ def resize_ppm_features(df: DataFrame, max_side: int = 6) -> DataFrame:
     resized red-channel mean in exact half-up micro-units."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                img = decode_ppm(buf)
-                h, w, _ = img.shape
-                long_side = max(w, h)
-                if long_side <= max_side:
-                    tw, th = w, h
-                else:
-                    # same clamp as resize_plan: extreme aspect
-                    # ratios must not produce a 0-dim (and 0-pixel)
-                    # target — the mean below divides by tw*th
-                    tw = max(1, (w * max_side) // long_side)
-                    th = max(1, (h * max_side) // long_side)
-                small = resize_nearest(img, tw, th)
-                n = tw * th
-                r_sum = int(small[:, :, 0].sum(dtype=np.int64))
-                rows.append(
-                    (int(doc_id), tw, th, (r_sum * 2_000_000 + n) // (2 * n))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "target_w", "target_h", "r_mean_micro"]
-            )
+    def rows(doc_id: int, buf) -> Iterator[tuple]:
+        img = decode_ppm(buf)
+        h, w, _ = img.shape
+        long_side = max(w, h)
+        if long_side <= max_side:
+            tw, th = w, h
+        else:
+            # same clamp as resize_plan: extreme aspect ratios must
+            # not produce a 0-dim (and 0-pixel) target — the mean
+            # below divides by tw*th
+            tw = max(1, (w * max_side) // long_side)
+            th = max(1, (h * max_side) // long_side)
+        small = resize_nearest(img, tw, th)
+        yield (doc_id, tw, th, _micro(int(small[:, :, 0].sum(dtype=np.int64)), tw * th))
 
-    return df.select("doc_id", "payload").mapInPandas(kernel, schema=_RESIZE_SCHEMA)
+    return _map_payloads(df, _RESIZE_SCHEMA, rows)
+
+
+def _frame_energies(samples, frame_len: int):
+    """Per-frame sum of squared samples (int64) over the
+    ``len(samples) // frame_len`` whole frames; a partial tail frame
+    is dropped."""
+    import numpy as np
+
+    n = len(samples) // frame_len
+    s = samples[: n * frame_len].astype(np.int64).reshape(n, frame_len)
+    return (s * s).sum(axis=1)
 
 
 _RMS_SCHEMA = "doc_id BIGINT, frame_idx INT, energy BIGINT"
@@ -563,21 +535,13 @@ def decode_wav_rms_frames(df: DataFrame, frame_len: int = 160) -> DataFrame:
     closed-form sample formula. Arrow-batched mapInPandas; rows
     explode per frame AFTER decode inside the kernel, so the binary
     payload crosses the Python boundary once."""
-    import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                samples, _sr = decode_wav(buf)
-                s = samples.astype(np.int64)
-                n_frames = len(s) // frame_len
-                for fi in range(n_frames):
-                    seg = s[fi * frame_len : (fi + 1) * frame_len]
-                    rows.append((int(doc_id), fi, int((seg * seg).sum())))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "energy"])
+    def rows(doc_id: int, buf) -> Iterator[tuple]:
+        energies = _frame_energies(decode_wav(buf)[0], frame_len)
+        for fi, e in enumerate(energies):
+            yield (doc_id, fi, int(e))
 
-    return df.select("doc_id", "payload").mapInPandas(kernel, schema=_RMS_SCHEMA)
+    return _map_payloads(df, _RMS_SCHEMA, rows)
 
 
 _MOTION_SCHEMA = "doc_id BIGINT, frame_pair INT, motion BIGINT"
@@ -591,18 +555,14 @@ def decode_y4m_motion(df: DataFrame) -> DataFrame:
     bytes have a closed form."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                frames, _dims = decode_y4m(buf)
-                for fi in range(len(frames) - 1):
-                    a = frames[fi][0].astype(np.int64)
-                    b = frames[fi + 1][0].astype(np.int64)
-                    rows.append((int(doc_id), fi, int(np.abs(b - a).sum())))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_pair", "motion"])
+    def rows(doc_id: int, buf) -> Iterator[tuple]:
+        frames, _dims = decode_y4m(buf)
+        for fi in range(len(frames) - 1):
+            a = frames[fi][0].astype(np.int64)
+            b = frames[fi + 1][0].astype(np.int64)
+            yield (doc_id, fi, int(np.abs(b - a).sum()))
 
-    return df.select("doc_id", "payload").mapInPandas(kernel, schema=_MOTION_SCHEMA)
+    return _map_payloads(df, _MOTION_SCHEMA, rows)
 
 
 _PHASH_SCHEMA = "doc_id BIGINT, phash_hi BIGINT, phash_lo BIGINT, n_dark INT"
@@ -619,33 +579,21 @@ def ppm_ahash(df: DataFrame) -> DataFrame:
     is what makes dedup JOINABLE at 100 TB."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                img = decode_ppm(buf).astype(np.int64)
-                gray = img.sum(axis=2) // 3
-                h, w = gray.shape
-                if h == 0 or w == 0:
-                    raise ValueError(
-                        f"doc {doc_id}: PPM payload has zero pixel area"
-                    )
-                ri = (np.arange(8, dtype=np.int64) * h) // 8
-                ci = (np.arange(8, dtype=np.int64) * w) // 8
-                g8 = gray[ri][:, ci]
-                mean = int(g8.sum()) // 64
-                bits = (g8 > mean).astype(np.int64).ravel()  # row-major
-                sh = np.arange(32, dtype=np.int64)
-                # two 32-bit halves: a packed bit 63 would overflow
-                # SIGNED 64-bit identically badly in numpy and SQL
-                lo = int((bits[:32] << sh).sum())
-                hi = int((bits[32:] << sh).sum())
-                rows.append((int(doc_id), hi, lo, int(64 - bits.sum())))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "phash_hi", "phash_lo", "n_dark"]
-            )
+    def rows(doc_id: int, buf) -> Iterator[tuple]:
+        gray = decode_ppm(buf).astype(np.int64).sum(axis=2) // 3
+        if gray.size == 0:
+            raise ValueError(f"doc {doc_id}: PPM payload has zero pixel area")
+        g8 = resize_nearest(gray, 8, 8)
+        mean = int(g8.sum()) // 64
+        bits = (g8 > mean).astype(np.int64).ravel()  # row-major
+        sh = np.arange(32, dtype=np.int64)
+        # two 32-bit halves: a packed bit 63 would overflow SIGNED
+        # 64-bit identically badly in numpy and SQL
+        lo = int((bits[:32] << sh).sum())
+        hi = int((bits[32:] << sh).sum())
+        yield (doc_id, hi, lo, int(64 - bits.sum()))
 
-    return df.select("doc_id", "payload").mapInPandas(kernel, schema=_PHASH_SCHEMA)
+    return _map_payloads(df, _PHASH_SCHEMA, rows)
 
 
 _AFP_SCHEMA = "doc_id BIGINT, n_frames INT, afp BIGINT"
@@ -666,28 +614,13 @@ def wav_fingerprint(df: DataFrame, frame_len: int = 160) -> DataFrame:
     frames pack with room to spare."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                samples, _sr = decode_wav(buf)
-                s = samples.astype(np.int64)
-                n = len(s) // frame_len
-                e = np.array(
-                    [
-                        int(
-                            (s[f * frame_len : (f + 1) * frame_len] ** 2).sum()
-                        )
-                        for f in range(n)
-                    ],
-                    dtype=np.int64,
-                )
-                bits = (e[1:] > e[:-1]).astype(np.int64)[:63]
-                afp = int((bits << np.arange(len(bits), dtype=np.int64)).sum())
-                rows.append((int(doc_id), n, afp))
-            yield pd.DataFrame(rows, columns=["doc_id", "n_frames", "afp"])
+    def rows(doc_id: int, buf) -> Iterator[tuple]:
+        e = _frame_energies(decode_wav(buf)[0], frame_len)
+        bits = (e[1:] > e[:-1]).astype(np.int64)[:63]
+        afp = int((bits << np.arange(len(bits), dtype=np.int64)).sum())
+        yield (doc_id, len(e), afp)
 
-    return df.select("doc_id", "payload").mapInPandas(kernel, schema=_AFP_SCHEMA)
+    return _map_payloads(df, _AFP_SCHEMA, rows)
 
 
 def attach_mixed_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -697,24 +630,13 @@ def attach_mixed_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Y4M payload (the same generators the per-format queries decode),
     and every doc_id%29==0 row is deterministic garbage so the router
     must prove it never misclassifies or crashes on junk."""
-    from pyspark.sql.functions import pandas_udf
+    return _attach(df, id_col, _mixed_fixture)
 
-    @pandas_udf("binary")
-    def gen(ids: pd.Series) -> pd.Series:
-        def mk(i: int) -> bytes:
-            i = int(i)
-            if i % 29 == 0:
-                return b"JUNK" + bytes((i * 17 + k) % 256 for k in range(16))
-            m = i % 3
-            if m == 0:
-                return ppm_bytes(i, 8 + i % 9, 8 + i % 7)
-            if m == 1:
-                return wav_bytes(i, 800 + (i % 5) * 160)
-            return y4m_bytes(i, 4 + i % 3, 4 + i % 2, 3 + i % 4)
 
-        return ids.map(mk)
-
-    return df.select(id_col).withColumn("payload", gen(F.col(id_col)))
+def _mixed_fixture(i: int) -> bytes:
+    if i % 29 == 0:
+        return b"JUNK" + bytes((i * 17 + k) % 256 for k in range(16))
+    return (_ppm_fixture, _wav_fixture, _y4m_fixture)[i % 3](i)
 
 
 def route_modality(df: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -122,6 +122,57 @@ def cosine_dn(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
 
 
+def _bucket_pair_scores(
+    banded: DataFrame,
+    vn: DataFrame,
+    keys: list[str],
+    max_bucket: int | None,
+    keep: Column,
+    a: dict[str, str],
+    b: dict[str, str],
+) -> DataFrame:
+    """Scored candidate pairs of an LSH self-join over
+    :func:`banded_norms` frames: rows of the bucket-capped ``banded``
+    that agree on every ``keys`` column and satisfy ``keep`` pair up,
+    deduplicated across tables, plus ``__cs`` = :func:`cosine_dn` of
+    the two sides' ``vn`` vectors. ``a``/``b`` map ``banded`` columns
+    to each side's output names; the first entry is the side's id.
+
+    Slim candidate generation: the pair join and multi-table dedup
+    move 16-byte id pairs (plus carried columns), NOT the 64-double
+    vectors — each pair appears in up to n_tables buckets before
+    dedup; measured 1.7× faster at sf0.1 (identical pairs). Vectors
+    and norms join back onto the deduped pairs afterwards."""
+    id_col = next(iter(a))
+    banded = _cap_buckets(banded, keys, max_bucket)
+    sa, sb = (
+        banded.select(*keys, *[F.col(c).alias(o) for c, o in side.items()])
+        for side in (a, b)
+    )
+    scored = (
+        sa.join(sb, keys)
+        .filter(keep)
+        .select(*a.values(), *b.values())
+        .dropDuplicates([a[id_col], b[id_col]])
+    )
+    cols = scored.columns
+    for tag, side in (("a", a), ("b", b)):
+        scored = scored.join(
+            vn.select(
+                F.col(id_col).alias(side[id_col]),
+                F.col("__v").alias(f"__v{tag}"),
+                F.col("__n").alias(f"__n{tag}"),
+            ),
+            side[id_col],
+        )
+    return scored.select(
+        *cols,
+        cosine_dn(
+            F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
+        ).alias("__cs"),
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -339,19 +390,27 @@ def banded_norms(
     return banded, vn
 
 
-def _check_shared(
-    shared: tuple[DataFrame, DataFrame],
+def _shared_or_banded(
+    emb: DataFrame,
+    shared: tuple[DataFrame, DataFrame] | None,
     id_col: str,
+    vec_col: str,
     need_extra: tuple[str, ...],
     n_tables: int,
     planes_per_table: int,
-) -> None:
-    """Validate a ``shared`` (banded, vn) pair against the consumer's
-    own banding parameters. Frames from :func:`banded_norms` carry a
-    ``_banding_params`` stamp — mismatched plane family / id column /
-    missing extra columns raise here, at plan-build time, instead of
-    silently mining a different candidate set. Hand-built frames
-    (no stamp) are only checked structurally (required columns)."""
+) -> tuple[DataFrame, DataFrame]:
+    """The consumer's (banded, vn): ``banded_norms(emb, ...)`` when
+    ``shared`` is None, else ``shared`` validated against the
+    consumer's own banding parameters. Frames from
+    :func:`banded_norms` carry a ``_banding_params`` stamp —
+    mismatched plane family / id column / missing extra columns raise
+    here, at plan-build time, instead of silently mining a different
+    candidate set. Hand-built frames (no stamp) are only checked
+    structurally (required columns)."""
+    if shared is None:
+        return banded_norms(
+            emb, id_col, vec_col, need_extra, n_tables, planes_per_table
+        )
     banded, vn = shared
     p = getattr(banded, "_banding_params", None)
     if p is not None:
@@ -376,6 +435,7 @@ def _check_shared(
         raise ValueError(
             f"shared banded/norm frames are missing column(s) {missing}"
         )
+    return shared
 
 
 def lsh_topk(
@@ -387,7 +447,6 @@ def lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     probe_id: str = "probe_id",
-    n_planes: int | None = None,  # legacy alias for planes_per_table
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: multi-table hyperplane LSH.
@@ -398,8 +457,6 @@ def lsh_topk(
     equi-join on (table_id, bucket) — candidates shrink ~2^k-fold per
     table, and the crossJoin never happens.
     """
-    if n_planes is not None:
-        planes_per_table = n_planes
     # Slim candidate generation (same discipline as knn_join /
     # neardup_pairs): only (probe_id, id) pairs flow through the
     # bucket join and the multi-table dedup — each candidate appears
@@ -570,44 +627,18 @@ def knn_join(
     materializes) them here.
     """
     extra = [group_col] if group_col else []
-    if shared is not None:
-        _check_shared(shared, id_col, tuple(extra), n_tables, planes_per_table)
-        banded, vn = shared
-    else:
-        banded, vn = banded_norms(
-            emb, id_col, vec_col, tuple(extra), n_tables, planes_per_table
-        )
-    keys = extra + ["table_id", "bucket"]
-    banded = _cap_buckets(banded, keys, max_bucket)
-    a = banded.select(*keys, F.col(id_col).alias("left_id"))
-    b = banded.select(*keys, F.col(id_col).alias("right_id"))
-    pairs = (
-        a.join(b, keys)
-        .filter(F.col("left_id") != F.col("right_id"))
-        .select("left_id", "right_id")
-        .dropDuplicates(["left_id", "right_id"])
+    banded, vn = _shared_or_banded(
+        emb, shared, id_col, vec_col, tuple(extra), n_tables, planes_per_table
     )
-    va = vn.select(
-        F.col(id_col).alias("left_id"),
-        F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"),
-    )
-    vb = vn.select(
-        F.col(id_col).alias("right_id"),
-        F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"),
-    )
-    cand = pairs.join(va, "left_id").join(vb, "right_id")
-    scored = cand.select(
-        "left_id",
-        "right_id",
-        F.round(
-            cosine_dn(
-                F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
-            ),
-            6,
-        ).alias("cos_sim"),
-    )
+    scored = _bucket_pair_scores(
+        banded,
+        vn,
+        extra + ["table_id", "bucket"],
+        max_bucket,
+        F.col("left_id") != F.col("right_id"),
+        {id_col: "left_id"},
+        {id_col: "right_id"},
+    ).select("left_id", "right_id", F.round("__cs", 6).alias("cos_sim"))
     return _rank_topk(scored, "left_id", "right_id", k)
 
 
@@ -640,48 +671,22 @@ def neardup_pairs(
     queries/__init__.py. Callers needing a strict raw-cosine cutoff
     should over-ask by 1e-6 and re-filter.
     """
-    # Slim candidate generation: the pair join and multi-table
-    # dedup move 16-byte id pairs, NOT the 64-double vectors —
-    # vectors join back onto the deduped pairs afterwards.
-    # Measured 1.7× faster at sf0.1 (identical pairs); at corpus
-    # scale this is the difference between shuffling ~0.5 KB and
-    # 16 bytes per candidate-pair copy (each pair appears in up
-    # to n_tables buckets before dedup). banded_norms materializes
-    # the scan+band subtree once for both join sides (§3.3).
+    # banded_norms materializes the scan+band subtree once for both
+    # join sides (§3.3).
     banded, vn = banded_norms(
         emb, id_col, vec_col, (), n_tables, planes_per_table
     )
-    banded = _cap_buckets(banded, ["table_id", "bucket"], max_bucket)
-    a = banded.select("table_id", "bucket", F.col(id_col).alias("id_a"))
-    b = banded.select("table_id", "bucket", F.col(id_col).alias("id_b"))
-    pairs = (
-        a.join(b, ["table_id", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    va = vn.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"),
-    )
-    vb = vn.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"),
-    )
-    cand = pairs.join(va, "id_a").join(vb, "id_b")
     return (
-        cand.select(
-            "id_a",
-            "id_b",
-            F.round(
-                cosine_dn(
-                    F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
-                ),
-                6,
-            ).alias("cos_sim"),
+        _bucket_pair_scores(
+            banded,
+            vn,
+            ["table_id", "bucket"],
+            max_bucket,
+            F.col("id_a") < F.col("id_b"),
+            {id_col: "id_a"},
+            {id_col: "id_b"},
         )
+        .select("id_a", "id_b", F.round("__cs", 6).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
 
@@ -1136,69 +1141,29 @@ def hard_negatives(
     ``extra=(label_col,)`` — the triplet miners band once and feed
     both the positive and negative leg. Default None builds here.
     """
-    if shared is not None:
-        _check_shared(shared, id_col, (label_col,), n_tables, planes_per_table)
-        banded, vn = shared
-    else:
-        banded, vn = banded_norms(
-            emb, id_col, vec_col, (label_col,), n_tables, planes_per_table
-        )
-    banded = _cap_buckets(banded, ["table_id", "bucket"], max_bucket)
-    a = banded.select(
-        "table_id",
-        "bucket",
-        F.col(id_col).alias("anchor_id"),
-        F.col(label_col).alias("anchor_label"),
+    banded, vn = _shared_or_banded(
+        emb, shared, id_col, vec_col, (label_col,), n_tables, planes_per_table
     )
-    b = banded.select(
-        "table_id",
-        "bucket",
-        F.col(id_col).alias("neg_id"),
-        F.col(label_col).alias("neg_label"),
-    )
-    pairs = (
-        a.join(b, ["table_id", "bucket"])
-        .filter(F.col("anchor_label") != F.col("neg_label"))
-        .select("anchor_id", "anchor_label", "neg_id", "neg_label")
-        .dropDuplicates(["anchor_id", "neg_id"])
-    )
-    va = vn.select(
-        F.col(id_col).alias("anchor_id"),
-        F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"),
-    )
-    vb = vn.select(
-        F.col(id_col).alias("neg_id"),
-        F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"),
-    )
-    scored = pairs.join(va, "anchor_id").join(vb, "neg_id").select(
-        "anchor_id",
-        "anchor_label",
-        "neg_id",
-        "neg_label",
-        cosine_dn(
-            F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
-        ).alias("__cs"),
+    scored = _bucket_pair_scores(
+        banded,
+        vn,
+        ["table_id", "bucket"],
+        max_bucket,
+        F.col("anchor_label") != F.col("neg_label"),
+        {id_col: "anchor_id", label_col: "anchor_label"},
+        {id_col: "neg_id", label_col: "neg_label"},
     )
     w = Window.partitionBy("anchor_id").orderBy(
         F.col("__cs").desc(), F.col("neg_id")
     )
-    from pyspark.sql import types as T
-
-    numeric_label = isinstance(emb.schema[label_col].dataType, T.NumericType)
-
-    def lbl(c: str) -> Column:
-        return F.col(c).cast("long") if numeric_label else F.col(c)
-
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select(
             "anchor_id",
-            lbl("anchor_label").alias("anchor_label"),
+            _label_out(scored, "anchor_label").alias("anchor_label"),
             "neg_id",
-            lbl("neg_label").alias("neg_label"),
+            _label_out(scored, "neg_label").alias("neg_label"),
             (F.round("__cs", 6) + F.lit(0.0)).alias("cos_sim"),
         )
     )

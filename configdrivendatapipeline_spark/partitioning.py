@@ -27,8 +27,8 @@ LEAF scans of any plan, so a frame downstream of a groupBy/join
 would be judged by its leaves' file count and could pick up a
 useless extra repartition (the frame already has
 ``spark.sql.shuffle.partitions`` splits). Both engine call sites —
-``queries.spread`` and ``dedup.shingle_hash_sets`` — feed scan
-projections; keep it that way.
+``queries.aggregates.agg_groupby`` and ``dedup.shingle_hash_sets``
+— feed scan projections; keep it that way.
 """
 
 from __future__ import annotations
@@ -51,20 +51,34 @@ def scan_split_count(df: DataFrame) -> Optional[int]:
     return n if n > 0 else None
 
 
+# Widen only a scan with at most 1/_MIN_FACTOR as many splits as cores.
+_MIN_FACTOR = 2
+
+
 def widen_narrow_scan(
-    df: DataFrame,
-    *,
-    min_factor: int = 2,
-    key: Optional[Union[str, Column]] = None,
+    df: DataFrame, *, key: Optional[Union[str, Column]] = None
 ) -> DataFrame:
     """Repartition a frame that arrived in fewer file splits than
     cores (the local single-row-group-parquet case). At lake scale
     sources arrive pre-split, the condition is false, and this is a
     no-op — the shuffle is never paid where it would hurt.
+
+    Pass a high-cardinality ``key`` where one exists: a keyed hash
+    repartition skips the whole-row local sort every keyless
+    round-robin exchange pays (``spark.sql.execution.sortBeforeRepartition``
+    — needed there so task retries reproduce the row→partition map,
+    which a deterministic key gives for free). Measured on the
+    agg_groupby widening at sf0.1: 1.64 s → 1.39 s median.
+
+    Prefer a ``Column`` expression derived from columns the query
+    already reads (e.g. ``F.xxhash64(...)`` over the measure
+    columns): a bare column name that the query does not otherwise
+    need would widen the scan's ReadSchema — paying an extra column
+    of I/O and shuffle on the fattest table (guide §2.3/§6).
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     splits = scan_split_count(df)
-    if splits is None or splits * min_factor > target:
+    if splits is None or splits * _MIN_FACTOR > target:
         return df
     if key is not None:
         return df.repartition(target, key)

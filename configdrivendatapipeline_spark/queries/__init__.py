@@ -42,7 +42,6 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from configdrivendatapipeline_spark.partitioning import widen_narrow_scan
 from configdrivendatapipeline_spark.session import session_memo
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -162,31 +161,6 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         return normalize_ts(df) if table == "events" else df
 
     return session_memo(spark, ("load", table), sf_dir, read)
-
-
-def spread(df: DataFrame, min_factor: int = 2, key: "str | Column | None" = None) -> DataFrame:
-    """Repartition a DataFrame that arrived in fewer file splits than
-    cores (the local single-row-group-parquet case). At lake scale
-    sources arrive pre-split, the condition is false, and this is a
-    no-op — so the shuffle is never paid where it would hurt. Split
-    count comes from the scan's file list, NOT ``df.rdd`` (which
-    would force a plan-to-RDD conversion per builder call; see
-    :mod:`..partitioning`).
-
-    Pass a high-cardinality ``key`` where one exists: a keyed hash
-    repartition skips the whole-row local sort every keyless
-    round-robin exchange pays (``spark.sql.execution.sortBeforeRepartition``
-    — needed there so task retries reproduce the row→partition map,
-    which a deterministic key gives for free). Measured on the
-    agg_groupby widening at sf0.1: 1.64 s → 1.39 s median.
-
-    Prefer a ``Column`` expression derived from columns the query
-    already reads (e.g. ``F.xxhash64(...)`` over the measure
-    columns): a bare column name that the query does not otherwise
-    need would widen the scan's ReadSchema — paying an extra column
-    of I/O and shuffle on the fattest table (guide §2.3/§6).
-    """
-    return widen_narrow_scan(df, min_factor=min_factor, key=key)
 
 
 def evidence_order(

@@ -18,8 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from configdrivendatapipeline_spark.partitioning import widen_narrow_scan
 from configdrivendatapipeline_spark.queries import (
-    spread,
     DEC,
     davg,
     declare,
@@ -62,7 +62,7 @@ def agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic by construction (guide §2.5), and unlike keying
     # on l_orderkey the scan's ReadSchema stays pruned to the
     # measure columns (no extra I/O or shuffle bytes, guide §2.3).
-    li = spread(
+    li = widen_narrow_scan(
         load(spark, sf_dir, "lineitem"),
         key=F.xxhash64("l_extendedprice", "l_quantity", "l_shipdate"),
     )

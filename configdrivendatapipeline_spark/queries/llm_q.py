@@ -815,9 +815,8 @@ def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     _SEC,
     "Arrow-batched decode/featurize kernel over binary payloads "
-    "(mapInPandas; deterministic fake decoder — real PIL/ffmpeg path "
-    "raises DecodeUnavailable; plan/schema/batching are the real "
-    "deliverable).",
+    "(mapInPandas; deterministic fake decoder over the raw bytes of "
+    "any media type; plan/schema/batching are the real deliverable).",
 )
 def mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm = multimodal.attach_fake_payload(load(spark, sf_dir, "documents"))
@@ -1383,9 +1382,9 @@ def llm_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reshape → per-channel stats in exact half-up micro-units. The "
     "deterministic pixel pattern lets the oracle recompute the "
     "decoded statistics analytically, so the decode itself is "
-    "hash-verified. Codec formats (JPEG/PNG/audio) remain behind "
-    "DecodeUnavailable — this proves the decode architecture is not "
-    "a stub.",
+    "hash-verified. Codec formats (JPEG/PNG/compressed audio) are not "
+    "decoded (no codec library) — this proves the decode architecture "
+    "is not a stub.",
 )
 def mm_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")

@@ -417,24 +417,7 @@ def kanonymity_metrics(
     group sizes on the QI key, scalar rollup, no identifying combos
     in the output."""
     g = df.groupBy(*quasi_identifiers).agg(F.count(F.lit(1)).alias("n"))
-    s = g.agg(
-        F.count(F.lit(1)).alias("n_groups"),
-        F.coalesce(
-            F.sum(F.when(F.col("n") < k, 1).otherwise(0)), F.lit(0)
-        ).cast("long").alias("n_violating_groups"),
-        F.coalesce(
-            F.sum(F.when(F.col("n") < k, F.col("n")).otherwise(0)), F.lit(0)
-        ).cast("long").alias("n_exposed_rows"),
-        F.min("n").alias("min_group_size"),
-    )
-    return s.select(
-        F.lit(f"k_anonymity_{k}").alias("rule_name"),
-        "n_groups",
-        "n_violating_groups",
-        "n_exposed_rows",
-        F.col("min_group_size").alias("worst"),
-        (F.col("min_group_size") >= k).alias("passed"),
-    )
+    return _qi_rollup(g, "n", k, f"k_anonymity_{k}")
 
 
 def ldiversity_metrics(
@@ -450,21 +433,30 @@ def ldiversity_metrics(
         F.countDistinct(sensitive).alias("nd"),
         F.count(F.lit(1)).alias("n"),
     )
+    return _qi_rollup(g, "nd", l, f"l_diversity_{l}")
+
+
+def _qi_rollup(g: DataFrame, measure: str, bound: int, rule_name: str) -> DataFrame:
+    """One metrics row over per-QI-group sizes ``g`` (a group-size
+    column ``n`` and the checked ``measure``): a group violates when
+    ``measure < bound``; ``worst`` is the smallest measure, and the
+    rule passes when it reaches ``bound``."""
+    low = F.col(measure) < bound
     s = g.agg(
         F.count(F.lit(1)).alias("n_groups"),
-        F.coalesce(
-            F.sum(F.when(F.col("nd") < l, 1).otherwise(0)), F.lit(0)
-        ).cast("long").alias("n_violating_groups"),
-        F.coalesce(
-            F.sum(F.when(F.col("nd") < l, F.col("n")).otherwise(0)), F.lit(0)
-        ).cast("long").alias("n_exposed_rows"),
-        F.min("nd").alias("min_diversity"),
+        F.coalesce(F.sum(F.when(low, 1).otherwise(0)), F.lit(0))
+        .cast("long")
+        .alias("n_violating_groups"),
+        F.coalesce(F.sum(F.when(low, F.col("n")).otherwise(0)), F.lit(0))
+        .cast("long")
+        .alias("n_exposed_rows"),
+        F.min(measure).alias("worst"),
     )
     return s.select(
-        F.lit(f"l_diversity_{l}").alias("rule_name"),
+        F.lit(rule_name).alias("rule_name"),
         "n_groups",
         "n_violating_groups",
         "n_exposed_rows",
-        F.col("min_diversity").alias("worst"),
-        (F.col("min_diversity") >= l).alias("passed"),
+        "worst",
+        (F.col("worst") >= bound).alias("passed"),
     )

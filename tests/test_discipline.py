@@ -167,3 +167,24 @@ def test_inventory_is_generated_from_registry():
     from tools.gen_inventory import render
 
     assert (PKG.parent / "INVENTORY.md").read_text() == render(registry())
+
+
+def test_multimodal_kernel_shells_have_one_home():
+    """Every decode kernel in llm/multimodal.py runs through
+    ``_map_payloads`` and every fixture payload column through
+    ``_attach``: only those (plus ``decode_features``, whose kernel
+    reads the extra ``media_type`` column) call mapInPandas or
+    pandas_udf, so the Arrow batch loop exists once."""
+    allowed = {
+        "mapInPandas": {"_map_payloads", "decode_features"},
+        "pandas_udf": {"_attach"},
+    }
+    tree = ast.parse((PKG / "llm" / "multimodal.py").read_text())
+    violations = [
+        f"llm/multimodal.py:{line}: {name}() in {fn.name}"
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for name, line in _called_names(fn)
+        if name in allowed and fn.name not in allowed[name]
+    ]
+    assert not violations, "kernel shells outside their helper:\n" + "\n".join(violations)

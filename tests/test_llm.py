@@ -89,17 +89,6 @@ def test_fingerprint_is_order_sensitive(spark):
     assert fps[1] != fps[2]
 
 
-def test_decode_stub_raises_for_real_decoder(spark, sf_dir):
-    import pytest
-
-    from configdrivendatapipeline_spark.llm import multimodal
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(2)
-    mm = multimodal.attach_fake_payload(docs)
-    with pytest.raises(Exception, match="PIL|torchaudio|Decode"):
-        multimodal.decode_features(mm, use_real_decoder=True).collect()
-
-
 def test_simhash_near_dups_have_small_hamming_distance(spark):
     """Companion for the rows-only llm_simhash: a doc and its
     one-token edit land within a few bits; unrelated docs are ~32
@@ -612,6 +601,29 @@ def test_ppm_kernel_matches_local_decode(spark):
         assert out[i].img_w == w and out[i].img_h == h
         assert out[i].r_mean_micro == (int(sums[0]) * 2_000_000 + n) // (2 * n)
         assert out[i].b_mean_micro == (int(sums[2]) * 2_000_000 + n) // (2 * n)
+
+
+def test_mixed_payload_reuses_the_per_format_fixtures(spark):
+    """attach_mixed_payload routes id%3 = 0/1/2 to the same PPM / WAV /
+    Y4M bytes the per-format attach functions emit for that id (only
+    id%29 == 0 rows are junk)."""
+    from configdrivendatapipeline_spark.llm import multimodal
+
+    ids = [i for i in range(1, 31) if i % 29 != 0]
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id LONG")
+
+    def payloads(attach) -> dict:
+        return {r.doc_id: bytes(r.payload) for r in attach(docs).collect()}
+
+    mixed = payloads(multimodal.attach_mixed_payload)
+    by_mod = [
+        payloads(multimodal.attach_ppm_payload),
+        payloads(multimodal.attach_wav_payload),
+        payloads(multimodal.attach_y4m_payload),
+    ]
+    assert {i % 3 for i in ids} == {0, 1, 2}
+    for i in ids:
+        assert mixed[i] == by_mod[i % 3][i], i
 
 
 def test_wav_decode_roundtrip_and_chunk_walk():

@@ -509,9 +509,9 @@ def test_lint_plan_detects_each_antipattern():
 
 
 def test_widen_narrow_scan_is_rdd_free_and_conditional(spark, sf_dir):
-    """spread/shingle_hash_sets derive arrival width from the scan's
-    file list (no plan-to-RDD conversion): a single-file local scan
-    is widened to defaultParallelism and the repartition lands on
+    """widen_narrow_scan/shingle_hash_sets derive arrival width from
+    the scan's file list (no plan-to-RDD conversion): a single-file
+    local scan is widened to defaultParallelism and the repartition lands on
     exactly that width; a frame with no file source reports None and
     is left untouched. (Contract: callers feed scan projections —
     inputFiles reports LEAF scans, so post-shuffle frames are out of

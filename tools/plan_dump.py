@@ -3,12 +3,16 @@
 Usage: python tools/plan_dump.py --tag r17 --suffix before [names...]
 Default names: the bench HEADLINE list. Plans are captured at the bench
 scale factor (sf0.1) so PushedFilters/stats match what the bench runs.
+Expression ids (``#123``, ``#123L``) and the run directory's pid/hex
+suffixes change on every run and are stripped, so dumps of two commits
+diff cleanly.
 """
 from __future__ import annotations
 
 import argparse
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -16,6 +20,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from configdrivendatapipeline_spark.queries import registry
 from configdrivendatapipeline_spark.session import get_spark
+
+_EXPR_ID = re.compile(r"#\d+L?\b")
+# a path inside the run directory: cddp_scratch-<pid>-<hex>/<name>-<hex>/...
+_RUN_PATH = re.compile(r"cddp_scratch-\d+-[0-9a-f]{8}[^\s,\]\)]*")
+_HEX_SUFFIX = re.compile(r"-(?:\d+-)?[0-9a-f]{8}(?=/|$)")
+
+
+def stable(plan: str) -> str:
+    """``plan`` with expression ids and run-directory suffixes removed."""
+    plan = _EXPR_ID.sub("#", plan)
+    return _RUN_PATH.sub(lambda m: _HEX_SUFFIX.sub("", m.group(0)), plan)
 
 
 def main() -> None:
@@ -42,7 +57,7 @@ def main() -> None:
             df.explain("formatted")
         path = os.path.join(outdir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as f:
-            f.write(buf.getvalue())
+            f.write(stable(buf.getvalue()))
         print(f"wrote {path}")
 
 
