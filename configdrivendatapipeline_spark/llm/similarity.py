@@ -823,18 +823,11 @@ def kmeans_assign(
     a = _kmeans_iterate(
         emb, n_clusters, refine_iters, id_col, vec_col
     )[0]
-    # cluster = a seed vector's id, so its type follows id_col: the
-    # same numeric-normalize-else-pass-through rule as _label_out
-    # (CAST('doc-0017' AS BIGINT) would throw under ANSI / NULL every
-    # cluster with ANSI off for string-id callers).
-    from pyspark.sql import types as T
-
-    cl = F.col("cluster")
-    if isinstance(emb.schema[id_col].dataType, T.NumericType):
-        cl = cl.cast("long")
+    # cluster = a seed vector's id, so its type follows id_col and
+    # _label_out keeps string ids uncast
     return a.select(
         id_col,
-        cl.alias("cluster"),
+        _label_out(a, "cluster").alias("cluster"),
         F.round("__cos", 6).alias("cos_sim"),
     )
 
@@ -850,6 +843,29 @@ def kmeans_centroids(
     the same deterministic k-means as :func:`kmeans_assign` — feed to
     :func:`ivf_topk` as the trained coarse quantizer."""
     return _kmeans_iterate(emb, n_clusters, refine_iters, id_col, vec_col)[1]
+
+
+def _fixed_point_means(df: DataFrame, keys: list[str]) -> DataFrame:
+    """``(keys…, __c)``: the per-``keys`` mean of the ``__v`` vectors,
+    each component averaged on the 2⁻²⁰ fixed-point grid. ``floor(v·2²⁰)``
+    is exact for any float v and the BIGINT sums are order-independent,
+    so the one final division yields the identical double on every
+    engine; the centroid re-assembles via a key·dim-bounded sorted
+    collect_list."""
+    q = 1 << 20
+    ex = df.select(*keys, F.posexplode("__v").alias("dim", "val"))
+    comp = ex.groupBy(*keys, "dim").agg(
+        (
+            F.sum(F.floor(F.col("val") * q).cast("long")).cast("double")
+            / (F.count(F.lit(1)) * q)
+        ).alias("mean")
+    )
+    return comp.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("dim", "mean"))),
+            lambda s: s.getField("mean"),
+        ).alias("__c")
+    )
 
 
 def _kmeans_iterate(
@@ -874,7 +890,6 @@ def _kmeans_iterate(
     instead of ``m`` sequential pipelines (guide §1.2 — fewer passes
     over the data; measured 33 → 11 Spark jobs at sf0.1).
     """
-    q = 1 << 20
     grp = [group_col] if group_col else []
     v = emb.select(F.col(id_col), *grp, as_double(vec_col).alias("__v"))
     vn = v.withColumn("__nv", norm(F.col("__v")))
@@ -922,21 +937,7 @@ def _kmeans_iterate(
 
     a = assign(cents)
     for _ in range(refine_iters):
-        ex = a.select(
-            id_col, *grp, "cluster", F.posexplode("__v").alias("dim", "val")
-        )
-        comp = ex.groupBy(*grp, "cluster", "dim").agg(
-            (
-                F.sum(F.floor(F.col("val") * q).cast("long")).cast("double")
-                / (F.count(F.lit(1)) * q)
-            ).alias("mean")
-        )
-        cents = comp.groupBy(*grp, "cluster").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "mean"))),
-                lambda s: s.getField("mean"),
-            ).alias("__c")
-        )
+        cents = _fixed_point_means(a, [*grp, "cluster"])
         # Truncate the loop-carried lineage at the NEW centroid table
         # (k·dim rows — trivially small): the next round's assignment
         # then builds on a materialized frame, so plan depth stays
@@ -1075,23 +1076,10 @@ def label_outliers(
     are few — the centroid frame broadcasts), one map-side cosine per
     vector. Nothing pairwise, nothing quadratic.
     """
-    q = 1 << 20
     v = emb.select(
         F.col(id_col), F.col(label_col), as_double(vec_col).alias("__v")
     )
-    ex = v.select(label_col, F.posexplode("__v").alias("dim", "val"))
-    comp = ex.groupBy(label_col, "dim").agg(
-        (
-            F.sum(F.floor(F.col("val") * q).cast("long")).cast("double")
-            / (F.count(F.lit(1)) * q)
-        ).alias("mean")
-    )
-    cents = comp.groupBy(label_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "mean"))),
-            lambda s: s.getField("mean"),
-        ).alias("__c")
-    )
+    cents = _fixed_point_means(v, [label_col])
     scored = (
         v.withColumn("__nv", norm(F.col("__v")))
         .join(
@@ -1199,8 +1187,6 @@ def pq_encode(
     seed-vector ids, fits are round-6 cosines; everything replays in
     the SQL oracle.
     """
-    from pyspark.sql import types as T
-
     # The LAST subspace takes the remainder (identical to the even
     # split when m divides the dim), so no dimension is ever silently
     # dropped from the encoding; m > dim fails loudly in-plan instead
@@ -1227,13 +1213,10 @@ def pq_encode(
     a = _kmeans_iterate(
         subs, n_clusters, refine_iters, id_col, "__sub", group_col="__sub_id"
     )[0]
-    cl = F.col("cluster")
-    if isinstance(emb.schema[id_col].dataType, T.NumericType):
-        cl = cl.cast("long")
     coded = a.select(
         id_col,
         "__sub_id",
-        cl.alias("__code"),
+        _label_out(a, "cluster").alias("__code"),
         F.round("__cos", 6).alias("__fit"),
     )
     # Pivot invariant (r17 advice): every id yields exactly m

@@ -233,6 +233,11 @@ def registry() -> dict[str, DeclaredQuery]:
 #: the two engines break ties differently — observed on 0.5% of rows.)
 DEC = "decimal(18,6)"
 
+#: Exact integer micro-units of the 2-dp double ``events.value``: the
+#: form every running, windowed or streaming value sum goes through,
+#: so summation order can never change a result.
+VU = "CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)"
+
 _MILLION = __import__("decimal").Decimal(1_000_000)
 
 

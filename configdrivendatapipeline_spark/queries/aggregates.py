@@ -15,12 +15,15 @@ cardinalities where exact distinct would shuffle too much.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from configdrivendatapipeline_spark.partitioning import widen_narrow_scan
 from configdrivendatapipeline_spark.queries import (
     DEC,
+    VU,
     davg,
     declare,
     dsum,
@@ -635,7 +638,7 @@ def agg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.col("ts"), F.lit("2024-01-01").cast("timestamp"))
         .cast("long")
         .alias("x"),
-        F.expr("CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)").alias("y"),
+        F.expr(VU).alias("y"),
     )
     # 128-bit moment sums (see skew_stats): Σxy over a heavy user's
     # 1e6 events at day-index × micro-value magnitudes passes 2^63,
@@ -870,6 +873,25 @@ def agg_cohort_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ranked_cents(
+    spark: SparkSession, sf_dir: str, rank_cols: Callable[[Column], list[Column]]
+) -> DataFrame:
+    """``(c_nationkey, cents, *rank_cols(rank))`` over customer balances:
+    cents shifted positive by +1000.00, ``rank`` the per-nation
+    ascending row number with ties broken by ``c_custkey``."""
+    from pyspark.sql import Window
+
+    v = load(spark, sf_dir, "customer").select(
+        "c_nationkey",
+        (F.expr("CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT)") + 100000).alias(
+            "cents"
+        ),
+        "c_custkey",
+    )
+    w = Window.partitionBy("c_nationkey").orderBy("cents", "c_custkey")
+    return v.select("c_nationkey", "cents", *rank_cols(F.row_number().over(w)))
+
+
 @declare(
     "agg_gini",
     """
@@ -906,20 +928,7 @@ def agg_cohort_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "by custkey.",
 )
 def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    c = load(spark, sf_dir, "customer")
-    v = c.select(
-        "c_nationkey",
-        (F.expr("CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT)") + 100000).alias(
-            "cents"
-        ),
-        "c_custkey",
-    )
-    w = Window.partitionBy("c_nationkey").orderBy("cents", "c_custkey")
-    r = v.select(
-        "c_nationkey", "cents", F.row_number().over(w).cast("long").alias("rnk")
-    )
+    r = _ranked_cents(spark, sf_dir, lambda rnk: [rnk.cast("long").alias("rnk")])
     # 128-bit rank-weighted sum: Σ rnk·cents reaches ~1e25 at 1e9
     # accounts per partition (rnk up to n TIMES cents), far past
     # BIGINT — the sum itself must be decimal, not just the ratio.
@@ -1028,7 +1037,7 @@ def agg_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = ev.select(
         "user_id",
         day.alias("day"),
-        F.expr("CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)").alias("vu"),
+        F.expr(VU).alias("vu"),
         (
             F.unix_timestamp(F.lead("ts").over(w)) - F.unix_timestamp("ts")
         ).alias("dur_s"),
@@ -1372,21 +1381,11 @@ def agg_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    c = load(spark, sf_dir, "customer")
-    v = c.select(
-        "c_nationkey",
-        (F.expr("CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT)") + 100000).alias(
-            "cents"
-        ),
-        "c_custkey",
-    )
-    wr = Window.partitionBy("c_nationkey").orderBy("cents", "c_custkey")
     wp = Window.partitionBy("c_nationkey")
-    r = v.select(
-        "c_nationkey",
-        "cents",
-        F.row_number().over(wr).alias("rnk"),
-        F.count(F.lit(1)).over(wp).alias("n"),
+    r = _ranked_cents(
+        spark,
+        sf_dir,
+        lambda rnk: [rnk.alias("rnk"), F.count(F.lit(1)).over(wp).alias("n")],
     )
     d = r.select(
         "c_nationkey",
@@ -2060,8 +2059,7 @@ def agg_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = ev.crossJoin(F.broadcast(mx)).select(
         "user_id",
         F.expr(
-            "CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)"
-            " div CAST(POWER(2, LEAST(datediff(now, ts) div 7, 20)) AS BIGINT)"
+            f"{VU} div CAST(POWER(2, LEAST(datediff(now, ts) div 7, 20)) AS BIGINT)"
         ).alias("w_micro"),
     )
     return scored.groupBy("user_id").agg(
@@ -2432,7 +2430,7 @@ def agg_jackknife_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     g = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.expr("CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)")).alias("s"),
+        F.sum(F.expr(VU)).alias("s"),
     )
     tot = g.agg(
         F.sum("n").cast("long").alias("big_n"),

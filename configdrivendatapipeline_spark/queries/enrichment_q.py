@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from configdrivendatapipeline_spark import enrichment
-from configdrivendatapipeline_spark.queries import declare, load
+from configdrivendatapipeline_spark.queries import VU, declare, load
 
 _SEC = "2.9"
 
@@ -237,7 +237,7 @@ def enr_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "event_type",
-        F.expr("CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)").alias("value_micro"),
+        F.expr(VU).alias("value_micro"),
         "ts",
     )
     return cdc_apply(

@@ -2754,6 +2754,26 @@ def llm_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.length_buckets(load(spark, sf_dir, "documents"))
 
 
+def _prev_snapshot(docs: DataFrame) -> DataFrame:
+    """The manufactured previous release of ``docs``: id%7==0 docs are
+    missing (added since), id%5==0 docs end in `` v1`` (changed since),
+    and id%11==0 docs carry an extra copy at id+1000000 (removed
+    since)."""
+    return (
+        docs.filter(F.col("doc_id") % 7 != 0)
+        .withColumn(
+            "text",
+            F.when(
+                F.col("doc_id") % 5 == 0, F.concat(F.col("text"), F.lit(" v1"))
+            ).otherwise(F.col("text")),
+        )
+        .unionByName(
+            docs.filter(F.col("doc_id") % 11 == 0)
+            .withColumn("doc_id", F.col("doc_id") + 1000000)
+        )
+    )
+
+
 @declare(
     "llm_snapshot_diff",
     """
@@ -2789,20 +2809,7 @@ def llm_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    prev = (
-        docs.filter(F.col("doc_id") % 7 != 0)
-        .withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") % 5 == 0, F.concat(F.col("text"), F.lit(" v1"))
-            ).otherwise(F.col("text")),
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % 11 == 0)
-            .withColumn("doc_id", F.col("doc_id") + 1000000)
-        )
-    )
-    return dedup.snapshot_diff(docs, prev)
+    return dedup.snapshot_diff(docs, _prev_snapshot(docs))
 
 
 def _opagerank_iter(prev: str, out: str) -> str:
@@ -3545,6 +3552,21 @@ def llm_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.budget_select(load(spark, sf_dir, "documents"))
 
 
+def split_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The doubled split fixture: the documents plus a copy of every
+    id%4==0 doc at id+1000000 (same text, so duplicates can straddle
+    the boundary), split 90/10 train/test by ``sampling.hash_split``."""
+    from configdrivendatapipeline_spark.llm.sampling import hash_split
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    doubled = docs.unionByName(
+        docs.filter(F.col("doc_id") % 4 == 0).withColumn(
+            "doc_id", F.col("doc_id") + 1_000_000
+        )
+    )
+    return hash_split(doubled, train_pct=90, val_pct=0)
+
+
 @declare(
     "llm_split_aware_dedup",
     f"""
@@ -3586,20 +3608,8 @@ def llm_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_split_aware_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from configdrivendatapipeline_spark.llm.sampling import hash_bucket
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    doubled = docs.unionByName(
-        docs.filter(F.col("doc_id") % 4 == 0).withColumn(
-            "doc_id", F.col("doc_id") + 1_000_000
-        )
-    )
-    assigned = doubled.select(
-        "doc_id",
-        F.when(
-            hash_bucket(F.col("doc_id"), "split:v1", 100) < 90, "train"
-        ).otherwise("test").alias("split"),
-        F.sha2("text", 256).alias("h"),
+    assigned = split_assigned(spark, sf_dir).select(
+        "doc_id", "split", F.sha2("text", 256).alias("h")
     )
     test_h = (
         assigned.filter(F.col("split") == "test").select("h").distinct()
@@ -4052,19 +4062,7 @@ def llm_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_release_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    prev = (
-        docs.filter(F.col("doc_id") % 7 != 0)
-        .withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") % 5 == 0, F.concat(F.col("text"), F.lit(" v1"))
-            ).otherwise(F.col("text")),
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % 11 == 0)
-            .withColumn("doc_id", F.col("doc_id") + 1_000_000)
-        )
-    )
+    prev = _prev_snapshot(docs)
     tok = F.size(F.split("text", " ")).cast("long")
     c = docs.select(
         F.col("doc_id").alias("id"),
@@ -4363,6 +4361,16 @@ _WINNOW_SRC = (
 )
 
 
+def _winnow_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents plus the planted copies, as ``_WINNOW_SRC``."""
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    planted = docs.filter(F.col("doc_id") % 5 == 0).select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"),
+        F.concat(F.lit("aa bb cc dd "), F.col("text")).alias("text"),
+    )
+    return docs.unionByName(planted)
+
+
 @declare(
     "llm_winnow_pairs",
     f"""
@@ -4389,13 +4397,8 @@ _WINNOW_SRC = (
     "same skew cap as the LSH path.",
 )
 def llm_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = docs.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.concat(F.lit("aa bb cc dd "), F.col("text")).alias("text"),
-    )
     return dedup.winnow_candidate_pairs(
-        docs.unionByName(planted), k=4, w=5, min_shared=3, max_bucket=200
+        _winnow_corpus(spark, sf_dir), k=4, w=5, min_shared=3, max_bucket=200
     )
 
 
@@ -4882,12 +4885,7 @@ def llm_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph's fixpoint (pair components here are tiny cliques).",
 )
 def llm_winnow_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = docs.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.concat(F.lit("aa bb cc dd "), F.col("text")).alias("text"),
-    )
-    corpus = docs.unionByName(planted)
+    corpus = _winnow_corpus(spark, sf_dir)
     pairs = dedup.winnow_candidate_pairs(
         corpus, k=4, w=5, min_shared=3, max_bucket=200
     ).select("id_a", "id_b")

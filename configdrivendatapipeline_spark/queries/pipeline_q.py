@@ -13,9 +13,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from configdrivendatapipeline_spark.compiler import compile_pipeline
+from configdrivendatapipeline_spark.compiler import compile_pipeline, observed_metrics
 from configdrivendatapipeline_spark.config.loader import load_pipeline_str
-from configdrivendatapipeline_spark.queries import declare, ensure_session_confs
+from configdrivendatapipeline_spark.queries import (
+    VU,
+    declare,
+    ensure_session_confs,
+    ts_normalize_expr,
+)
 from configdrivendatapipeline_spark.scratch import run_path
 
 _SEC = "3.1"
@@ -587,7 +592,27 @@ steps:
     return _run(spark, yml, "ranked")
 
 
-_VU = "CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)"
+def _run_stream(
+    spark: SparkSession, yaml_text: str, out_step: str, mode: str
+) -> DataFrame:
+    """``_run``, then drain ``out_step`` through AvailableNow in
+    ``mode``, after checking the YAML really declared a stream."""
+    from configdrivendatapipeline_spark.streaming import run_available_now
+
+    out = _run(spark, yaml_text, out_step)
+    assert out.isStreaming
+    return run_available_now(out, mode)
+
+
+def _events_ts_expr(spark: SparkSession, sf_dir: str) -> str:
+    """The derive-step expression that turns ``events.ts`` into a
+    TIMESTAMP. It depends on how the parquet ships event time (long
+    nanos / TIMESTAMP_NTZ / TIMESTAMP), so it is resolved from a
+    footer-only batch read, exactly what a config generator would
+    template in."""
+    ensure_session_confs(spark)
+    raw_t = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes).get("ts")
+    return ts_normalize_expr(raw_t)
 
 
 @declare(
@@ -596,7 +621,7 @@ _VU = "CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)"
     SELECT date_trunc('hour', ts) AS win_start,
            event_type,
            COUNT(*) AS n_events,
-           CAST(SUM({_VU}) AS DOUBLE) / 1000000 AS total_value
+           CAST(SUM({VU}) AS DOUBLE) / 1000000 AS total_value
     FROM events
     WHERE event_type <> 'error'
     GROUP BY 1, 2
@@ -611,16 +636,7 @@ _VU = "CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)"
     "so streaming partial-agg order can't flip hashes.",
 )
 def pipeline_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from configdrivendatapipeline_spark.queries import ts_normalize_expr
-    from configdrivendatapipeline_spark.streaming import run_available_now
-
-    # The derive step's ts expression depends on how the parquet ships
-    # event time (long nanos / TIMESTAMP_NTZ / TIMESTAMP) — resolve it
-    # from a footer-only batch read, exactly what a config generator
-    # would template in.
-    ensure_session_confs(spark)
-    raw_t = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes).get("ts")
-    ts_expr = ts_normalize_expr(raw_t)
+    ts_expr = _events_ts_expr(spark, sf_dir)
     yml = f"""
 pipeline:
   name: stream_family
@@ -636,7 +652,7 @@ steps:
     params:
       columns:
         ts: "{ts_expr}"
-        vu: "{_VU}"
+        vu: "{VU}"
   - id: kept
     input: typed
     op: filter
@@ -653,9 +669,7 @@ steps:
                CAST(SUM(vu) AS DOUBLE) / 1000000 AS total_value
         FROM ev GROUP BY window(ts, '1 hour'), event_type
 """
-    frames = compile_pipeline(spark, load_pipeline_str(yml))
-    assert frames["hourly"].isStreaming  # the YAML really declared a stream
-    return run_available_now(frames["hourly"], "complete")
+    return _run_stream(spark, yml, "hourly", "complete")
 
 
 def _knn_oracle() -> str:
@@ -712,6 +726,21 @@ steps:
     return _run(spark, yml, "neighbors")
 
 
+def _check_observed(
+    spark: SparkSession, watched: DataFrame, name: str, path: str
+) -> None:
+    """Drive the observed frame once so its ``name`` metrics
+    materialize, then check their ``rows`` against an independent
+    count of ``path``: the declared query thereby proves the observe
+    plumbing, not just the aggregation."""
+    ensure_session_confs(spark)
+    watched.write.format("noop").mode("overwrite").save()
+    m = observed_metrics()[name]
+    expected = spark.read.parquet(path).count()
+    if m.get("rows") != expected:
+        raise AssertionError(f"observe metrics wrong: {m} vs rows={expected}")
+
+
 @declare(
     "pipeline_observe",
     """
@@ -726,8 +755,6 @@ steps:
     "broken metrics path fails the driver gate, not just a log line.",
 )
 def pipeline_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from configdrivendatapipeline_spark.compiler import observed_metrics
-
     yml = f"""
 pipeline:
   name: observe_family
@@ -753,15 +780,7 @@ steps:
         n_orders: "COUNT(*)"
 """
     frames = compile_pipeline(spark, load_pipeline_str(yml))
-    ensure_session_confs(spark)
-    # Drive the observed frame once so the metrics materialize, then
-    # verify them against an independent count — the declared query
-    # thereby proves the observe plumbing, not just the aggregation.
-    frames["watched"].write.format("noop").mode("overwrite").save()
-    m = observed_metrics()["order_stats"]
-    expected = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
-    if m.get("rows") != expected:
-        raise AssertionError(f"observe metrics wrong: {m} vs rows={expected}")
+    _check_observed(spark, frames["watched"], "order_stats", f"{sf_dir}/orders.parquet")
     return frames["by_status"]
 
 
@@ -787,8 +806,6 @@ steps:
     "second scan) and are cross-checked before returning.",
 )
 def pipeline_curation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from configdrivendatapipeline_spark.compiler import observed_metrics
-
     yml = f"""
 pipeline:
   name: curation_stats
@@ -824,12 +841,9 @@ steps:
         - {{rule: zscore, name: length_outliers, column: n_chars, max_z: 1.5}}
 """
     frames = compile_pipeline(spark, load_pipeline_str(yml))
-    ensure_session_confs(spark)
-    frames["watched"].write.format("noop").mode("overwrite").save()
-    m = observed_metrics()["doc_stats"]
-    expected = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    if m.get("rows") != expected:
-        raise AssertionError(f"observe metrics wrong: {m} vs rows={expected}")
+    _check_observed(
+        spark, frames["watched"], "doc_stats", f"{sf_dir}/documents.parquet"
+    )
     # Drive the zscore branch too: an empty/broken anomaly plan must
     # fail the gate here, not silently return only the weights frame.
     if frames["length_anomaly"].count() != 1:
@@ -857,12 +871,7 @@ steps:
     "not just single-stream aggregations.",
 )
 def pipeline_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from configdrivendatapipeline_spark.queries import ts_normalize_expr
-    from configdrivendatapipeline_spark.streaming import run_available_now
-
-    ensure_session_confs(spark)
-    raw_t = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes).get("ts")
-    ts_expr = ts_normalize_expr(raw_t)
+    ts_expr = _events_ts_expr(spark, sf_dir)
     yml = f"""
 pipeline:
   name: stream_join_family
@@ -954,9 +963,7 @@ steps:
     params:
       columns: [click_id, purchase_id, c_user, delay_sec]
 """
-    frames = compile_pipeline(spark, load_pipeline_str(yml))
-    assert frames["result"].isStreaming
-    return run_available_now(frames["result"], "append")
+    return _run_stream(spark, yml, "result", "append")
 
 
 @declare(

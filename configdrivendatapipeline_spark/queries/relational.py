@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from configdrivendatapipeline_spark import joins
 from configdrivendatapipeline_spark.queries import declare, dsum, load, odsum, omd5bucket
 from configdrivendatapipeline_spark.scratch import run_path
 from configdrivendatapipeline_spark.session import session_memo
@@ -436,6 +437,23 @@ def join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", F.col("day_start").cast("date").alias("event_day"))
 
 
+def _asof_signup(spark: SparkSession, sf_dir: str, direction: str) -> DataFrame:
+    """Each purchase with its user's signup ``sign_ts`` picked by
+    ``joins.asof_join`` in ``direction``."""
+    ev = load(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts"
+    )
+    return joins.asof_join(
+        purchases,
+        ev.filter(F.col("event_type") == "signup"),
+        by=["user_id"],
+        left_key="event_id",
+        direction=direction,
+        take={"sign_ts": "ts"},
+    )
+
+
 @declare(
     "join_asof",
     """
@@ -456,18 +474,8 @@ def join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "no driver loop; at scale the window shuffles once on event_id.",
 )
 def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    f = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    d = (
-        ev.filter(F.col("event_type") == "signup")
-        .select(F.col("user_id").alias("d_user"), F.col("ts").alias("sign_ts"))
-    )
-    j = f.join(d, (f.user_id == d.d_user) & (d.sign_ts <= f.ts), "left")
-    w = Window.partitionBy("event_id").orderBy(F.col("sign_ts").desc())
-    return (
-        j.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("event_id", "user_id", "sign_ts")
+    return _asof_signup(spark, sf_dir, "backward").select(
+        "event_id", "user_id", "sign_ts"
     )
 
 
@@ -654,8 +662,6 @@ def _obloom_probes(key_expr: str, src: str, n_bits: int, k: int, salt: str) -> s
     "a pipeline decide whether the residual exact join must run.",
 )
 def join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from configdrivendatapipeline_spark import joins
-
     dim = (
         load(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
@@ -935,27 +941,13 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window, one shuffle, no driver loop.",
 )
 def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    f = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    d = ev.filter(F.col("event_type") == "signup").select(
-        F.col("user_id").alias("d_user"), F.col("ts").alias("sign_ts")
-    )
-    j = f.join(d, f.user_id == d.d_user, "left")
-    w = Window.partitionBy("event_id").orderBy(
-        F.abs(F.unix_micros("sign_ts") - F.unix_micros("ts")).asc(),
-        F.col("sign_ts").asc(),
-    )
     direction = (
         F.when(F.col("sign_ts").isNull(), F.lit(None).cast("string"))
         .when(F.col("sign_ts") <= F.col("ts"), "backward")
         .otherwise("forward")
     )
-    return (
-        j.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("event_id", "user_id", "sign_ts", direction.alias("direction"))
+    return _asof_signup(spark, sf_dir, "nearest").select(
+        "event_id", "user_id", "sign_ts", direction.alias("direction")
     )
 
 

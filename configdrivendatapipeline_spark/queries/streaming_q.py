@@ -7,7 +7,7 @@ SQL over the same events (SURVEY.md §5 item 6). Late-data semantics
 that cannot appear in a single drained backlog are unit-tested with
 multi-micro-batch feeds in tests/test_streaming.py.
 
-Value sums use exact integer micro-units (see windows.py) so
+Value sums use exact integer micro-units (``queries.VU``) so
 streaming partial aggregation order can't flip hashes.
 """
 
@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from configdrivendatapipeline_spark.queries import declare, load
+from configdrivendatapipeline_spark.queries import VU, declare, load
 from configdrivendatapipeline_spark.scratch import run_path
 from configdrivendatapipeline_spark.session import session_memo
 from configdrivendatapipeline_spark.streaming import (
@@ -28,8 +28,6 @@ from configdrivendatapipeline_spark.streaming import (
 )
 
 _SEC = "2.10"
-
-_VU = "CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)"
 
 
 @declare(
@@ -65,7 +63,7 @@ def src_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT date_trunc('hour', ts) AS win_start,
            event_type,
            COUNT(*) AS n_events,
-           CAST(SUM({_VU}) AS DOUBLE) / 1000000 AS total_value
+           CAST(SUM({VU}) AS DOUBLE) / 1000000 AS total_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -73,7 +71,7 @@ def src_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Tumbling 1-hour windows (count + exact sum) on the event stream.",
 )
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sdf = stream_events(spark, sf_dir).withColumn("vu", F.expr(_VU))
+    sdf = stream_events(spark, sf_dir).withColumn("vu", F.expr(VU))
     agg = (
         sdf.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
@@ -96,7 +94,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH expanded AS (
       SELECT time_bucket(INTERVAL '15 minutes', ts)
                - CAST(g.i AS INT) * INTERVAL '15 minutes' AS win_start,
-             {_VU} AS vu
+             {VU} AS vu
       FROM events, generate_series(0, 3) AS g(i)
     )
     SELECT win_start, COUNT(*) AS n_events,
@@ -109,7 +107,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     "4 overlapping windows.",
 )
 def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sdf = stream_events(spark, sf_dir).withColumn("vu", F.expr(_VU))
+    sdf = stream_events(spark, sf_dir).withColumn("vu", F.expr(VU))
     agg = (
         sdf.groupBy(F.window("ts", "1 hour", "15 minutes"))
         .agg(
@@ -284,7 +282,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_stateful_count",
     f"""
     SELECT user_id, COUNT(*) AS n_events,
-           CAST(SUM({_VU}) AS DOUBLE) / 1000000 AS total_value
+           CAST(SUM({VU}) AS DOUBLE) / 1000000 AS total_value
     FROM events
     GROUP BY user_id
     """,
@@ -293,7 +291,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "store backed; RocksDB provider at scale).",
 )
 def stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sdf = stream_events(spark, sf_dir).withColumn("vu", F.expr(_VU))
+    sdf = stream_events(spark, sf_dir).withColumn("vu", F.expr(VU))
     agg = sdf.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         (F.sum("vu").cast("double") / 1000000).alias("total_value"),
@@ -336,7 +334,7 @@ def stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     SELECT user_id,
            COUNT(*) AS n_events,
-           CAST(SUM({_VU}) AS DOUBLE) / 1000000 AS total_value,
+           CAST(SUM({VU}) AS DOUBLE) / 1000000 AS total_value,
            CAST(MAX(epoch_us(ts)) - MIN(epoch_us(ts)) AS BIGINT) AS span_us
     FROM events
     GROUP BY user_id
@@ -352,7 +350,7 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    sdf = stream_events(spark, sf_dir).withColumn("vu", F.expr(_VU))
+    sdf = stream_events(spark, sf_dir).withColumn("vu", F.expr(VU))
 
     out_schema = (
         "user_id BIGINT, n_events BIGINT, total_value DOUBLE, span_us BIGINT"
@@ -390,6 +388,43 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(result, "update")
 
 
+def _click_purchase_join(
+    spark: SparkSession, sf_dir: str, delay: str, how: str
+) -> DataFrame:
+    """Click→purchase interval join (purchase within 30 min of the
+    click), both sides watermarked by ``delay``, drained through
+    AvailableNow."""
+
+    def side(event_type: str, id_col: str, prefix: str) -> DataFrame:
+        return (
+            stream_events(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(id_col),
+                F.col("user_id").alias(f"{prefix}_user"),
+                F.col("ts").alias(f"{prefix}_ts"),
+            )
+            .withWatermark(f"{prefix}_ts", delay)
+        )
+
+    joined = side("click", "click_id", "c").join(
+        side("purchase", "purchase_id", "p"),
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("c_ts"))
+        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
+        how,
+    ).select(
+        F.col("click_id"),
+        F.col("purchase_id"),
+        F.col("c_user").alias("user_id"),
+        (
+            F.unix_timestamp("p_ts").cast("long")
+            - F.unix_timestamp("c_ts").cast("long")
+        ).alias("delay_sec"),
+    )
+    return run_available_now(joined, "append")
+
+
 @declare(
     "stream_stream_join",
     """
@@ -410,42 +445,7 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     "== boundary-crossing count on both engines).",
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clicks = (
-        stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "inner",
-    ).select(
-        F.col("click_id"),
-        F.col("purchase_id"),
-        F.col("c_user").alias("user_id"),
-        (
-            F.unix_timestamp("p_ts").cast("long")
-            - F.unix_timestamp("c_ts").cast("long")
-        ).alias("delay_sec"),
-    )
-    return run_available_now(joined, "append")
+    return _click_purchase_join(spark, sf_dir, "1 hour", "inner")
 
 
 @declare(
@@ -481,42 +481,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "emit iff c_ts + 30 min < that.",
 )
 def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clicks = (
-        stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "10 minutes")
-    )
-    purchases = (
-        stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "leftOuter",
-    ).select(
-        F.col("click_id"),
-        F.col("purchase_id"),
-        F.col("c_user").alias("user_id"),
-        (
-            F.unix_timestamp("p_ts").cast("long")
-            - F.unix_timestamp("c_ts").cast("long")
-        ).alias("delay_sec"),
-    )
-    return run_available_now(joined, "append")
+    return _click_purchase_join(spark, sf_dir, "10 minutes", "leftOuter")
 
 
 @declare(
@@ -728,7 +693,7 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM({_VU}) AS BIGINT) AS vu_sum
+           CAST(SUM({VU}) AS BIGINT) AS vu_sum
     FROM events GROUP BY event_type
     """,
     _SEC,
@@ -755,7 +720,7 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         os.makedirs(src)
         static = load(spark, sf_dir, "events").select(
-            "event_id", "event_type", F.expr(_VU).alias("vu")
+            "event_id", "event_type", F.expr(VU).alias("vu")
         )
         for i in (0, 1):
             # half i arrives...

@@ -835,20 +835,9 @@ def val_ldiversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "near-match version.",
 )
 def val_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from configdrivendatapipeline_spark.llm.sampling import hash_bucket
+    from configdrivendatapipeline_spark.queries.llm_q import split_assigned
 
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    doubled = docs.unionByName(
-        docs.filter(F.col("doc_id") % 4 == 0).withColumn(
-            "doc_id", F.col("doc_id") + 1_000_000
-        )
-    )
-    assigned = doubled.withColumn(
-        "split",
-        F.when(
-            hash_bucket(F.col("doc_id"), "split:v1", 100) < 90, "train"
-        ).otherwise("test"),
-    )
+    assigned = split_assigned(spark, sf_dir)
     train = (
         assigned.filter(F.col("split") == "train")
         .select(F.sha2("text", 256).alias("h"))

@@ -18,12 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from configdrivendatapipeline_spark.queries import declare, load
+from configdrivendatapipeline_spark.queries import VU, declare, load
 
 _SEC = "2.5"
-
-# Exact micro-units of the 2-dp double `value` column.
-_VU = "CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)"
 
 
 @declare(
@@ -238,7 +235,7 @@ def win_first_last_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     "win_running_sum",
     f"""
     SELECT event_id, user_id,
-           CAST(SUM({_VU}) OVER (PARTITION BY user_id ORDER BY ts
+           CAST(SUM({VU}) OVER (PARTITION BY user_id ORDER BY ts
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
                / 1000000 AS running_value
     FROM events
@@ -247,7 +244,7 @@ def win_first_last_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Cumulative sum per user via exact integer micro-units.",
 )
 def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events").withColumn("vu", F.expr(_VU))
+    ev = load(spark, sf_dir, "events").withColumn("vu", F.expr(VU))
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts")
@@ -264,7 +261,7 @@ def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     "win_moving_avg",
     f"""
     SELECT event_id, user_id,
-           CAST(SUM({_VU}) OVER w AS DOUBLE)
+           CAST(SUM({VU}) OVER w AS DOUBLE)
              / (1000000 * COUNT(*) OVER w) AS avg_value_4
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts
@@ -275,7 +272,7 @@ def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     "identically-rounded IEEE division).",
 )
 def win_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events").withColumn("vu", F.expr(_VU))
+    ev = load(spark, sf_dir, "events").withColumn("vu", F.expr(VU))
     w = Window.partitionBy("user_id").orderBy("ts").rowsBetween(-3, 0)
     return ev.select(
         "event_id",
@@ -594,6 +591,42 @@ def win_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _daily_last_obs(ev: DataFrame) -> DataFrame:
+    """Each user's latest event per calendar day (``ts DESC, event_id
+    DESC``) as ``(user_id, day, vu)``, ``vu`` in micro-units."""
+    daily_w = Window.partitionBy("user_id", "day").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    return (
+        ev.select(
+            "user_id",
+            F.col("ts").cast("date").alias("day"),
+            "ts",
+            "event_id",
+            F.expr(VU).alias("vu"),
+        )
+        .withColumn("rn", F.row_number().over(daily_w))
+        .filter(F.col("rn") == 1)
+        .select("user_id", "day", "vu")
+    )
+
+
+def _daily_grid(obs: DataFrame) -> DataFrame:
+    """Each user's calendar from their first to their last observed day
+    (a bounded ``sequence`` per user, never a users × days cross
+    product), left-joined to ``obs``, plus ``observed``."""
+    bounds = obs.groupBy("user_id").agg(
+        F.min("day").alias("lo"), F.max("day").alias("hi")
+    )
+    grid = bounds.select(
+        "user_id",
+        F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("day"),
+    )
+    return grid.join(obs, ["user_id", "day"], "left").select(
+        "user_id", "day", "vu", F.col("vu").isNotNull().alias("observed")
+    )
+
+
 @declare(
     "win_gapfill_locf",
     """
@@ -631,32 +664,7 @@ def win_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one user-partitioned window, values in exact micro-units.",
 )
 def win_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    daily_w = Window.partitionBy("user_id", "day").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    obs = (
-        ev.select(
-            "user_id",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            F.expr("CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)").alias("vu"),
-        )
-        .withColumn("rn", F.row_number().over(daily_w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "day", "vu")
-    )
-    bounds = obs.groupBy("user_id").agg(
-        F.min("day").alias("lo"), F.max("day").alias("hi")
-    )
-    grid = bounds.select(
-        "user_id",
-        F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("day"),
-    )
-    joined = grid.join(obs, ["user_id", "day"], "left").select(
-        "user_id", "day", "vu", F.col("vu").isNotNull().alias("observed")
-    )
+    joined = _daily_grid(_daily_last_obs(load(spark, sf_dir, "events")))
     locf = Window.partitionBy("user_id").orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1024,32 +1032,7 @@ def win_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     "every missing day has both neighbors by construction.",
 )
 def win_gapfill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    daily_w = Window.partitionBy("user_id", "day").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    obs = (
-        ev.select(
-            "user_id",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            F.expr("CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)").alias("vu"),
-        )
-        .withColumn("rn", F.row_number().over(daily_w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "day", "vu")
-    )
-    bounds = obs.groupBy("user_id").agg(
-        F.min("day").alias("lo"), F.max("day").alias("hi")
-    )
-    grid = bounds.select(
-        "user_id",
-        F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("day"),
-    )
-    joined = grid.join(obs, ["user_id", "day"], "left").select(
-        "user_id", "day", "vu", F.col("vu").isNotNull().alias("observed")
-    )
+    joined = _daily_grid(_daily_last_obs(load(spark, sf_dir, "events")))
     wp = (
         Window.partitionBy("user_id")
         .orderBy("day")
@@ -1213,7 +1196,7 @@ def win_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "ts",
-        F.expr("CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)").alias("vu"),
+        F.expr(VU).alias("vu"),
     )
     w = (
         Window.partitionBy("user_id")
@@ -1429,22 +1412,7 @@ def win_rank_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(user, dow) aggregation + one broadcastable join back.",
 )
 def win_seasonal_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    daily_w = Window.partitionBy("user_id", "day").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    obs = (
-        ev.select(
-            "user_id",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            F.expr("CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)").alias("vu"),
-        )
-        .withColumn("rn", F.row_number().over(daily_w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "day", "vu")
-    )
+    obs = _daily_last_obs(load(spark, sf_dir, "events"))
     w7 = Window.partitionBy("user_id").orderBy("day").rowsBetween(-3, 3)
     fr = obs.select(
         "user_id",

@@ -188,3 +188,52 @@ def test_multimodal_kernel_shells_have_one_home():
         if name in allowed and fn.name not in allowed[name]
     ]
     assert not violations, "kernel shells outside their helper:\n" + "\n".join(violations)
+
+
+#: (file:function, file:function) -> 8-token shingles the pair shared
+#: before its copied sub-plan was folded into one helper (or into the
+#: library function its YAML op runs), as ``tools/fork_scan.py`` counts
+#: them. A pair must stay below half of that.
+FOLDED_FORKS = {
+    ("queries/windows.py:win_gapfill_locf", "queries/windows.py:win_gapfill_linear"): 218,
+    ("queries/windows.py:win_gapfill_locf", "queries/windows.py:win_seasonal_lite"): 127,
+    ("queries/windows.py:win_gapfill_linear", "queries/windows.py:win_seasonal_lite"): 126,
+    (
+        "queries/streaming_q.py:stream_stream_join",
+        "queries/streaming_q.py:stream_stream_left_join",
+    ): 155,
+    ("queries/llm_q.py:llm_snapshot_diff", "queries/llm_q.py:llm_release_delta"): 104,
+    ("queries/llm_q.py:llm_winnow_pairs", "queries/llm_q.py:llm_winnow_clusters"): 84,
+    ("queries/llm_q.py:llm_split_aware_dedup", "queries/validation_q.py:val_split_leakage"): 92,
+    ("queries/relational.py:join_asof", "queries/relational.py:join_asof_nearest"): 91,
+    (
+        "queries/pipeline_q.py:pipeline_observe",
+        "queries/pipeline_q.py:pipeline_curation_stats",
+    ): 80,
+    ("queries/pipeline_q.py:pipeline_stream", "queries/pipeline_q.py:pipeline_stream_join"): 72,
+    ("llm/similarity.py:_kmeans_iterate", "llm/similarity.py:label_outliers"): 128,
+    ("llm/similarity.py:centroid_drift", "llm/similarity.py:label_outliers"): 108,
+}
+
+#: Folded pairs whose remainder is generic idiom, held at its count:
+#: agg_gini / agg_lorenz shared 94 shingles; with the cents projection
+#: and the rank in ``_ranked_cents`` the 48 left are the builder
+#: signature and a count + sum(cents) rollup at a different grain.
+FOLDED_AT_MOST = {
+    ("queries/aggregates.py:agg_gini", "queries/aggregates.py:agg_lorenz"): 48,
+}
+
+
+def test_folded_query_forks_stay_folded():
+    """Each pair of functions that once held a pasted copy of the same
+    sub-plan now shares fewer than half the shingles it shared then."""
+    from tools.fork_scan import shared_shingles
+
+    shared = shared_shingles(PKG)
+
+    def now(pair):
+        return shared.get(pair, 0) + shared.get(pair[::-1], 0)
+
+    grown = {p: (now(p), n) for p, n in FOLDED_FORKS.items() if 2 * now(p) >= n}
+    grown |= {p: (now(p), n) for p, n in FOLDED_AT_MOST.items() if now(p) > n}
+    assert not grown, f"re-forked (now, bound): {grown}"
