@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from configdrivendatapipeline_spark import enrichment
+from configdrivendatapipeline_spark.config.loader import column_list
 from configdrivendatapipeline_spark.config.models import PipelineConfig
 from configdrivendatapipeline_spark.io import read_source, write_sink
 from configdrivendatapipeline_spark.session import session_memo
@@ -154,7 +155,7 @@ def _rename(spark, dfs, p):
 
 @op("drop")
 def _drop(spark, dfs, p):
-    return _one(dfs).drop(*p["columns"])
+    return _one(dfs).drop(*column_list(p["columns"], "drop columns"))
 
 
 @op("derive")
@@ -1315,7 +1316,7 @@ def _compact(spark, dfs, p):
     holds one target-size file (see layout.compact_write)."""
     from configdrivendatapipeline_spark import layout
 
-    cols = list(p["partition_by"])
+    cols = column_list(p["partition_by"], "compact partition_by")
     target = int(p.get("target_rows", 1_000_000))
     if p.get("plan"):
         return layout.compaction_plan(_one(dfs), cols, target)
@@ -1333,8 +1334,8 @@ def _materialize_validate(df, path, mode, fmt, cluster_by, sort_by):
     allowlist scans literal ``p[...]``/``p.get`` reads in op bodies,
     and a ``p`` escaping into a helper would make the op unscannable.
     Returns ``(mode, fmt, cluster_by, sort_by)`` normalized — mode
-    alias resolved, layout params as lists (a scalar fails the
-    ``list()`` shape check on both paths)."""
+    alias resolved, layout params as lists (a scalar fails
+    ``column_list`` on both paths)."""
     if df.isStreaming:
         raise ValueError(
             "materialize is a batch cut point; for streams use a "
@@ -1344,21 +1345,12 @@ def _materialize_validate(df, path, mode, fmt, cluster_by, sort_by):
         raise ValueError(
             f"materialize path must be a non-empty string, got {path!r}"
         )
-    mode = _materialize_check_mode(mode)
-    fmt = _materialize_check_format(fmt)
-
-    def _cols(name, v):
-        # explicit shape check: a scalar "col" would iterate as
-        # characters under a bare list() and silently layout-by-'c'
-        if not v:
-            return []
-        if isinstance(v, str) or not isinstance(v, (list, tuple)):
-            raise ValueError(
-                f"materialize {name} must be a list of columns, got {v!r}"
-            )
-        return [str(c) for c in v]
-
-    return mode, fmt, _cols("cluster_by", cluster_by), _cols("sort_by", sort_by)
+    return (
+        _materialize_check_mode(mode),
+        _materialize_check_format(fmt),
+        column_list(cluster_by, "materialize cluster_by"),
+        column_list(sort_by, "materialize sort_by"),
+    )
 
 
 def _materialize_check_mode(mode: str) -> str:
@@ -1715,7 +1707,7 @@ def compile_pipeline(
     _OBSERVATIONS.clear()  # observations belong to one compiled pipeline
     frames: dict[str, DataFrame] = {}
     for name, src in cfg.sources.items():
-        frames[name] = read_source(spark, src.to_reader_cfg())
+        frames[name] = read_source(spark, src)
     for step in cfg.steps:
         builder = OPS.get(step.op)
         if builder is None:
@@ -1757,10 +1749,9 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFram
             spark.conf.set(k, v)
     frames = compile_pipeline(spark, cfg)
     for sink in cfg.sinks:
-        df = frames[sink.input]
-        wcfg = sink.to_writer_cfg()
+        df = frames[sink["input"]]
         if df.isStreaming:
-            wcfg["mode"] = "append"  # per-micro-batch appends
+            wcfg = {**sink, "mode": "append"}  # per-micro-batch appends
 
             def _write(batch_df: DataFrame, batch_id: int, _cfg=wcfg) -> None:
                 write_sink(batch_df, _cfg)
@@ -1768,7 +1759,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFram
             q = df.writeStream.foreachBatch(_write).trigger(availableNow=True).start()
             q.awaitTermination()
         else:
-            write_sink(df, wcfg)
+            write_sink(df, sink)
     return frames
 
 
@@ -1784,7 +1775,8 @@ def lineage_frame(spark: SparkSession, cfg: PipelineConfig):
             kind = "source" if inp in cfg.sources else "step"
             rows.append((step.id, step.op, inp, kind))
     for i, sink in enumerate(cfg.sinks):
-        rows.append((f"sink[{i}]", f"sink:{sink.format}", sink.input, "step"))
+        fmt = sink.get("format", "parquet")
+        rows.append((f"sink[{i}]", f"sink:{fmt}", sink["input"], "step"))
     return spark.createDataFrame(
         rows, "node STRING, op STRING, input STRING, input_kind STRING"
     )

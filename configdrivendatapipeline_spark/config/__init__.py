@@ -7,8 +7,6 @@ configurations, perform customisable validation and enrichment").
 
 from configdrivendatapipeline_spark.config.models import (
     PipelineConfig,
-    SinkConfig,
-    SourceConfig,
     StepConfig,
 )
 from configdrivendatapipeline_spark.config.loader import (
@@ -19,9 +17,7 @@ from configdrivendatapipeline_spark.config.loader import (
 
 __all__ = [
     "PipelineConfig",
-    "SourceConfig",
     "StepConfig",
-    "SinkConfig",
     "ConfigError",
     "load_pipeline",
     "load_pipeline_str",

@@ -14,16 +14,31 @@ from typing import Any
 
 import yaml
 
-from configdrivendatapipeline_spark.config.models import (
-    PipelineConfig,
-    SinkConfig,
-    SourceConfig,
-    StepConfig,
-)
+from configdrivendatapipeline_spark.config.models import PipelineConfig, StepConfig
 
 
 class ConfigError(ValueError):
     """A pipeline document failed validation (with path context)."""
+
+
+def column_list(value: Any, what: str) -> list[str]:
+    """``value`` as a list of column names (absent or empty: ``[]``).
+    A bare string is rejected: spread with ``*`` it would iterate as
+    characters and name one-letter columns. The loader checks sink
+    layout keys with it, and the io layer and compiler ops apply it to
+    the values they are called with."""
+    if not value:
+        return []
+    if not isinstance(value, (list, tuple)):
+        raise ConfigError(f"{what} must be a list of columns, got {value!r}")
+    return [str(c) for c in value]
+
+
+def _options(raw: dict, where: str) -> dict[str, str]:
+    opts = raw.get("options") or {}
+    if not isinstance(opts, dict):
+        raise ConfigError(f"{where}: 'options' must be a mapping")
+    return {str(k): str(v) for k, v in opts.items()}
 
 
 _SOURCE_KEYS = {
@@ -282,35 +297,35 @@ def _build(doc: Any, origin: str) -> PipelineConfig:
     raw_sources = doc.get("sources") or {}
     if not isinstance(raw_sources, dict) or not raw_sources:
         raise ConfigError(f"{origin}: 'sources' must be a non-empty mapping")
-    sources: dict[str, SourceConfig] = {}
+    sources: dict[str, dict[str, Any]] = {}
     for sname, scfg in raw_sources.items():
+        where = f"{origin}: source {sname!r}"
         if not isinstance(scfg, dict):
-            raise ConfigError(f"{origin}: source {sname!r} must be a mapping")
+            raise ConfigError(f"{where} must be a mapping")
         unknown = set(scfg) - _SOURCE_KEYS
         if unknown:
-            raise ConfigError(f"{origin}: source {sname!r}: unknown keys {sorted(unknown)}")
-        known = {k: v for k, v in scfg.items() if k in SourceConfig.__dataclass_fields__}
-        extra = {k: v for k, v in scfg.items() if k not in SourceConfig.__dataclass_fields__}
+            raise ConfigError(f"{where}: unknown keys {sorted(unknown)}")
         if scfg.get("format", "parquet") == "jdbc":
             if not scfg.get("url") or not scfg.get("dbtable"):
+                raise ConfigError(f"{where}: jdbc sources require 'url' and 'dbtable'")
+            if "partition_column" in scfg and not {"lower_bound", "upper_bound"} <= set(scfg):
                 raise ConfigError(
-                    f"{origin}: source {sname!r}: jdbc sources require "
-                    "'url' and 'dbtable'"
+                    f"{where}: 'partition_column' requires 'lower_bound' and 'upper_bound'"
                 )
         elif scfg.get("format") == "kafka":
             if not scfg.get("bootstrap_servers") or not scfg.get("topic"):
                 raise ConfigError(
-                    f"{origin}: source {sname!r}: kafka sources require "
-                    "'bootstrap_servers' and 'topic'"
+                    f"{where}: kafka sources require 'bootstrap_servers' and 'topic'"
                 )
         elif not scfg.get("path"):
-            raise ConfigError(f"{origin}: source {sname!r}: 'path' is required")
-        sources[sname] = SourceConfig(
-            name=sname,
-            options={str(k): str(v) for k, v in (scfg.get("options") or {}).items()},
-            **{k: v for k, v in known.items() if k != "options"},
-            extra=extra,
-        )
+            raise ConfigError(f"{where}: 'path' is required")
+        inc = scfg.get("incremental")
+        if inc and not (isinstance(inc, dict) and {"column", "since"} <= set(inc)):
+            raise ConfigError(f"{where}: 'incremental' requires 'column' and 'since'")
+        sources[sname] = {**scfg, "options": _options(scfg, where)}
+
+    # deferred: the compiler imports this package
+    from configdrivendatapipeline_spark.compiler import OPS
 
     raw_steps = doc.get("steps") or []
     steps: list[StepConfig] = []
@@ -334,15 +349,8 @@ def _build(doc: Any, origin: str) -> PipelineConfig:
         inputs = tuple(raw.get("inputs") or ([raw["input"]] if raw.get("input") else ()))
         if not inputs:
             raise ConfigError(f"{where}: at least one input required")
-        # Op-name check at validate time, not first-compile time. The
-        # import is deferred (the compiler pulls in pyspark; config
-        # validation alone must not) and tolerated missing so pure
-        # config tooling can still parse documents.
-        try:
-            from configdrivendatapipeline_spark.compiler import OPS
-        except ImportError:  # pragma: no cover - compiler always ships
-            OPS = None
-        if OPS is not None and str(op) not in OPS:
+        # Op-name check at validate time, not first-compile time.
+        if str(op) not in OPS:
             raise ConfigError(
                 f"{where}: unknown op {op!r} (known: {sorted(OPS)})"
             )
@@ -381,7 +389,7 @@ def _build(doc: Any, origin: str) -> PipelineConfig:
         cyclic = sorted(set(by_id) - {s.id for s in ordered})
         raise ConfigError(f"{origin}: cycle detected among steps {cyclic}")
 
-    sinks: list[SinkConfig] = []
+    sinks: list[dict[str, Any]] = []
     for i, raw in enumerate(doc.get("sinks") or []):
         where = f"{origin}: sinks[{i}]"
         if not isinstance(raw, dict):
@@ -401,21 +409,9 @@ def _build(doc: Any, origin: str) -> PipelineConfig:
                 )
         elif not raw.get("path"):
             raise ConfigError(f"{where}: 'path' is required")
-        sinks.append(
-            SinkConfig(
-                input=raw["input"],
-                format=raw.get("format", "parquet"),
-                path=raw.get("path"),
-                mode=raw.get("mode", "append" if raw.get("format") == "kafka"
-                             else "error"),
-                partition_by=tuple(raw.get("partition_by") or ()),
-                cluster_by=tuple(raw.get("cluster_by") or ()),
-                sort_by=tuple(raw.get("sort_by") or ()),
-                options={str(k): str(v) for k, v in (raw.get("options") or {}).items()},
-                bootstrap_servers=raw.get("bootstrap_servers"),
-                topic=raw.get("topic"),
-            )
-        )
+        for key in ("partition_by", "cluster_by", "sort_by"):
+            column_list(raw.get(key), f"{where}: {key}")
+        sinks.append({**raw, "options": _options(raw, where)})
 
     return PipelineConfig(
         name=name,

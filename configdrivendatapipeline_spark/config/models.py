@@ -3,45 +3,15 @@
 Plain dataclasses (no pydantic dependency): the loader performs the
 validation pydantic would, with pipeline-specific checks (DAG shape,
 reference resolution) that a type system alone can't express.
+Sources and sinks stay the validated YAML mappings: ``read_source``
+and ``write_sink`` read them as they are, so the keys and defaults
+live in one place each (the loader's allowlists, the io layer).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 from typing import Any
-
-
-@dataclass(frozen=True)
-class SourceConfig:
-    """One named input: ``sources: {name: {format, path, ...}}``."""
-
-    name: str
-    format: str = "parquet"
-    path: str | None = None
-    url: str | None = None
-    dbtable: str | None = None
-    options: dict[str, str] = field(default_factory=dict)
-    schema: str | None = None
-    declared_schema: str | None = None
-    drift: str = "passthrough"
-    streaming: bool = False
-    incremental: dict[str, Any] | None = None
-    extra: dict[str, Any] = field(default_factory=dict)
-
-    def to_reader_cfg(self) -> dict[str, Any]:
-        cfg: dict[str, Any] = {
-            "format": self.format,
-            "options": self.options,
-            "streaming": self.streaming,
-        }
-        for k in ("path", "url", "dbtable", "schema", "declared_schema", "incremental"):
-            v = getattr(self, k)
-            if v is not None:
-                cfg[k] = v
-        if self.declared_schema:
-            cfg["drift"] = self.drift
-        cfg.update(self.extra)
-        return cfg
 
 
 @dataclass(frozen=True)
@@ -55,43 +25,13 @@ class StepConfig:
 
 
 @dataclass(frozen=True)
-class SinkConfig:
-    """One output: ``sinks: [{input, format, path, mode, ...}]``."""
-
-    input: str
-    format: str = "parquet"
-    path: str | None = None
-    mode: str = "error"
-    partition_by: tuple[str, ...] = ()
-    cluster_by: tuple[str, ...] = ()
-    sort_by: tuple[str, ...] = ()
-    options: dict[str, str] = field(default_factory=dict)
-    bootstrap_servers: str | None = None
-    topic: str | None = None
-
-    def to_writer_cfg(self) -> dict[str, Any]:
-        cfg: dict[str, Any] = {}
-        if self.bootstrap_servers is not None:
-            cfg["bootstrap_servers"] = self.bootstrap_servers
-        if self.topic is not None:
-            cfg["topic"] = self.topic
-        return cfg | {
-            "format": self.format,
-            "path": self.path,
-            "mode": self.mode,
-            "partition_by": list(self.partition_by),
-            "cluster_by": list(self.cluster_by),
-            "sort_by": list(self.sort_by),
-            "options": self.options,
-        }
-
-
-@dataclass(frozen=True)
 class PipelineConfig:
     """The whole validated pipeline document."""
 
     name: str
-    sources: dict[str, SourceConfig]
+    #: ``sources: {name: {format, path, ...}}``, one validated mapping each
+    sources: dict[str, dict[str, Any]]
     steps: tuple[StepConfig, ...]  # already topologically ordered
-    sinks: tuple[SinkConfig, ...]
+    #: ``sinks: [{input, format, path, mode, ...}]``
+    sinks: tuple[dict[str, Any], ...]
     spark_conf: dict[str, str] = field(default_factory=dict)

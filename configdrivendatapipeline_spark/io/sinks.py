@@ -4,8 +4,9 @@ Config shape::
 
     {format: parquet|csv|json|orc|avro|kafka, path: ...
      (bootstrap_servers+topic for kafka), mode: append|overwrite|
-     overwrite_dynamic|error (kafka: append only — a topic cannot be
-     overwritten), partition_by: [col, ...], options: {...}}
+     overwrite_dynamic|error (default error; kafka: append only, its
+     default — a topic cannot be overwritten), partition_by|cluster_by|
+     sort_by: [col, ...], options: {...}}
 
 ``avro``/``kafka`` ride Spark's public packaged DataSources — same
 classpath boundary as the source side (io/sources.py): absent the
@@ -24,6 +25,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from configdrivendatapipeline_spark.config.loader import column_list
+from configdrivendatapipeline_spark.io.sources import packaged
+
 
 def write_sink(df: DataFrame, cfg: dict[str, Any]) -> None:
     """Write a DataFrame to one configured sink (batch).
@@ -36,27 +40,15 @@ def write_sink(df: DataFrame, cfg: dict[str, Any]) -> None:
     a driver-side step; sort-within-partitions never triggers a
     global range exchange.
     """
-    def _cols(name):
-        # same scalar-shape check as the materialize op: a bare string
-        # "col" would iterate as characters under *spread and lay out
-        # by one-letter phantom columns
-        v = cfg.get(name)
-        if not v:
-            return []
-        if isinstance(v, str) or not isinstance(v, (list, tuple)):
-            raise ValueError(
-                f"sink {name} must be a list of columns, got {v!r}"
-            )
-        return [str(c) for c in v]
-
-    cluster_by = _cols("cluster_by")
+    cluster_by = column_list(cfg.get("cluster_by"), "sink cluster_by")
     if cluster_by:
         df = df.repartition(*cluster_by)
-    sort_by = _cols("sort_by")
+    sort_by = column_list(cfg.get("sort_by"), "sink sort_by")
     if sort_by:
         df = df.sortWithinPartitions(*sort_by)
     fmt = cfg.get("format", "parquet")
-    mode = cfg.get("mode", "error")
+    mode = cfg.get("mode", "append" if fmt == "kafka" else "error")
+    writer = df.write.format(fmt).options(**dict(cfg.get("options") or {}))
 
     if fmt == "kafka":
         # Message-bus sink: rows must already carry a `value` column
@@ -64,23 +56,18 @@ def write_sink(df: DataFrame, cfg: dict[str, Any]) -> None:
         # sql step (to_json / CAST AS BINARY). A topic is append-only,
         # so `mode` defaults to append and anything else is rejected
         # rather than silently dropped.
-        kmode = cfg.get("mode", "append")
-        if kmode != "append":
+        if mode != "append":
             raise ValueError(
-                f"sink format 'kafka' is append-only; mode: {kmode!r} "
+                f"sink format 'kafka' is append-only; mode: {mode!r} "
                 "is not supported — remove the key or set mode: append"
             )
         writer = (
-            df.write.format("kafka")
-            .option("kafka.bootstrap.servers", cfg["bootstrap_servers"])
+            writer.option("kafka.bootstrap.servers", cfg["bootstrap_servers"])
             .option("topic", cfg["topic"])
             .mode("append")
-            .options(**dict(cfg.get("options") or {}))
         )
-        _packaged_save(writer, fmt)
+        packaged(writer.save, "sink", fmt)
         return
-
-    writer = df.write.format(fmt).options(**dict(cfg.get("options") or {}))
 
     if mode == "overwrite_dynamic":
         # Replace only partitions present in this batch.
@@ -88,24 +75,7 @@ def write_sink(df: DataFrame, cfg: dict[str, Any]) -> None:
     else:
         writer = writer.mode(mode)
 
-    partition_by = cfg.get("partition_by")
+    partition_by = column_list(cfg.get("partition_by"), "sink partition_by")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if fmt == "avro":
-        _packaged_save(writer, fmt, cfg["path"])
-    else:
-        writer.save(cfg["path"])
-
-
-def _packaged_save(writer, fmt: str, path: str | None = None) -> None:
-    from configdrivendatapipeline_spark.io.sources import _PACKAGED
-
-    try:
-        writer.save(path) if path is not None else writer.save()
-    except Exception as e:
-        if "Failed to find data source" in str(e) or "ClassNotFound" in str(e):
-            raise RuntimeError(
-                f"sink format {fmt!r} needs its Spark package on the "
-                f"cluster classpath: --packages {_PACKAGED[fmt]}"
-            ) from e
-        raise
+    packaged(writer.save, "sink", fmt, cfg["path"])

@@ -31,7 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_FILE_FORMATS = {"parquet", "csv", "json", "text", "orc", "xml", "binaryFile"}
+#: ``avro`` reads and writes like the bundled file formats; only its
+#: DataSource ships separately (see ``_PACKAGED``).
+_FILE_FORMATS = {"parquet", "csv", "json", "text", "orc", "xml", "binaryFile", "avro"}
 
 #: Formats whose DataSource ships as a separate package a cluster
 #: adds via --packages (public Spark surface; not bundled in this
@@ -43,13 +45,18 @@ _PACKAGED = {
 }
 
 
-def _packaged_load(reader, fmt: str, path: str | None = None) -> DataFrame:
+def packaged(call, side: str, fmt: str, *args):
+    """``call(*args)`` — a reader's ``load`` or a writer's ``save`` —
+    with a missing packaged DataSource (``fmt`` in ``_PACKAGED``)
+    raised as the --packages remedy for this ``side`` (source|sink)."""
     try:
-        return reader.load(path) if path is not None else reader.load()
+        return call(*args)
     except Exception as e:  # AnalysisException: Failed to find data source
-        if "Failed to find data source" in str(e) or "ClassNotFound" in str(e):
+        if fmt in _PACKAGED and (
+            "Failed to find data source" in str(e) or "ClassNotFound" in str(e)
+        ):
             raise RuntimeError(
-                f"source format {fmt!r} needs its Spark package on the "
+                f"{side} format {fmt!r} needs its Spark package on the "
                 f"cluster classpath: --packages {_PACKAGED[fmt]}"
             ) from e
         raise
@@ -76,8 +83,8 @@ def read_source(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
             # Streaming file sources require a schema: infer it from a
             # one-off batch read of the same path (footer-only for
             # parquet — cheap even on huge lakes).
-            static = spark.read.format(fmt).options(**options).load(path)
-            reader = reader.schema(static.schema)
+            static = spark.read.format(fmt).options(**options)
+            reader = reader.schema(packaged(static.load, "source", fmt, path).schema)
         if streaming:
             # Size the eventual stateful shuffle from the backlog
             # (see streaming.ops.note_stream_source).
@@ -92,7 +99,7 @@ def read_source(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
             from configdrivendatapipeline_spark.streaming.ops import file_stream_dir
 
             path = file_stream_dir(spark, path)
-        df = reader.load(path)
+        df = packaged(reader.load, "source", fmt, path)
     elif fmt == "jdbc":
         reader = (
             spark.read.format("jdbc")
@@ -108,24 +115,6 @@ def read_source(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
                 .option("numPartitions", str(cfg.get("num_partitions", 8)))
             )
         df = reader.load()
-    elif fmt == "avro":
-        # Columnar-row lake/interchange format (ADF Copy's default
-        # binary format). Same reader shape as the bundled file
-        # formats; the DataSource itself is the spark-avro package.
-        path = cfg["path"]
-        reader = spark.readStream if streaming else spark.read
-        reader = reader.format("avro").options(**options)
-        if schema_ddl:
-            reader = reader.schema(schema_ddl)
-        elif streaming:
-            # Parity with the bundled file formats: streaming file
-            # sources require a schema, so infer from a one-off
-            # batch read (header-only for avro container files).
-            static = _packaged_load(
-                spark.read.format("avro").options(**options), fmt, path
-            )
-            reader = reader.schema(static.schema)
-        df = _packaged_load(reader, fmt, path)
     elif fmt == "kafka":
         # Message-bus source (the event-trigger replacement): value
         # bytes + topic/partition/offset/timestamp columns; decode
@@ -138,7 +127,7 @@ def read_source(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
             .option(cfg.get("subscribe_mode", "subscribe"), cfg["topic"])
             .options(**options)
         )
-        df = _packaged_load(reader, fmt)
+        df = packaged(reader.load, "source", fmt)
     else:
         raise ValueError(f"unknown source format: {fmt!r}")
 

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from configdrivendatapipeline_spark.compiler import OPS, compile_pipeline
-from configdrivendatapipeline_spark.config import load_pipeline_str
+from configdrivendatapipeline_spark.config import ConfigError, load_pipeline_str
 
 
 def run_step(spark, sf_dir, table: str, step_yaml: str, extra_sources: str = ""):
@@ -840,6 +840,34 @@ def test_compact_through_yaml(spark, sf_dir):
         assert files == -(-n // 300)  # ceil
     assert frames["rewritten"].count() == total
     assert "file_bucket" in frames["rewritten"].columns
+
+
+def test_drop_rejects_a_scalar_column(spark, sf_dir):
+    """``drop: {columns: ssn}`` used to spread into one-letter names
+    and silently keep ``ssn``; a bare string is now a config error."""
+    with pytest.raises(ConfigError, match="drop columns must be a list of columns"):
+        run_step(
+            spark,
+            sf_dir,
+            "nation",
+            "  - {id: dr, input: nation, op: drop, params: {columns: n_regionkey}}\n",
+        )
+
+
+def test_compact_rejects_a_scalar_partition_by(spark, sf_dir):
+    """compact's ``partition_by`` goes through the same column-list
+    check as the sink layout keys: a bare string is an error."""
+    for plan in ("true", "false"):
+        with pytest.raises(ConfigError, match="compact partition_by must be a list"):
+            run_step(
+                spark,
+                sf_dir,
+                "orders",
+                f"""
+  - {{id: c, input: orders, op: compact,
+     params: {{partition_by: o_orderpriority, plan: {plan}, key: o_orderkey}}}}
+""",
+            )
 
 
 def test_cdc_apply_through_yaml(spark, sf_dir):

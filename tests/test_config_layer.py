@@ -548,7 +548,7 @@ def test_packaged_sink_formats_surface_classpath_error(spark, sf_dir, tmp_path):
         )
 
 
-def test_kafka_reaches_the_config_layer():
+def test_kafka_reaches_the_config_layer(spark):
     """Kafka source/sink configs must validate and carry their broker
     keys through to the io layer (previously the loader rejected
     bootstrap_servers/topic as unknown keys, so the io layer's kafka
@@ -557,6 +557,7 @@ def test_kafka_reaches_the_config_layer():
 
     from configdrivendatapipeline_spark.config import load_pipeline_str
     from configdrivendatapipeline_spark.config.loader import ConfigError
+    from configdrivendatapipeline_spark.io import write_sink
 
     cfg = load_pipeline_str(
         """
@@ -569,11 +570,19 @@ sinks:
   - {input: s, format: kafka, bootstrap_servers: "h:9092", topic: out}
 """
     )
-    r = cfg.sources["ev"].to_reader_cfg()
+    r = cfg.sources["ev"]
     assert r["bootstrap_servers"] == "h:9092" and r["topic"] == "t"
-    w = cfg.sinks[0].to_writer_cfg()
+    w = cfg.sinks[0]
     assert w["bootstrap_servers"] == "h:9092" and w["topic"] == "out"
-    assert w["mode"] == "append"  # kafka sinks default to append
+    # kafka sinks default to append: with no `mode` the writer gets past
+    # its append-only check and stops at the absent package (or, with
+    # the package installed, at the closed local port)
+    with pytest.raises(Exception) as err:
+        write_sink(
+            spark.range(1).selectExpr("CAST(id AS STRING) AS value"),
+            {**w, "bootstrap_servers": "localhost:19099"},
+        )
+    assert "append-only" not in str(err.value)
 
     with pytest.raises(ConfigError, match="bootstrap_servers"):
         load_pipeline_str(
@@ -593,6 +602,62 @@ sinks:
   - {input: a, format: parquet}
 """
         )
+
+
+@pytest.mark.parametrize("key", ["partition_by", "cluster_by", "sort_by"])
+def test_scalar_sink_layout_is_a_config_error(tmp_path, capsys, key):
+    """A bare column name where a list is due (``partition_by: region``)
+    is rejected at load, naming the sink, instead of reaching the
+    writer split into one-letter columns."""
+    from configdrivendatapipeline_spark.cli import main
+
+    text = f"""
+sources:
+  o: {{format: parquet, path: /tmp/in}}
+sinks:
+  - {{input: o, format: parquet, path: /tmp/out, {key}: region}}
+"""
+    with pytest.raises(ConfigError, match=rf"sinks\[0\]: {key} must be a list of columns"):
+        load_pipeline_str(text)
+    doc = tmp_path / "p.yaml"
+    doc.write_text(text)
+    assert main(["validate", str(doc)]) == 2
+    assert f"sinks[0]: {key} must be a list" in capsys.readouterr().err
+    # the list form still loads, unchanged
+    cfg = load_pipeline_str(text.replace(f"{key}: region", f"{key}: [region]"))
+    assert cfg.sinks[0][key] == ["region"]
+
+
+def test_jdbc_partition_column_needs_both_bounds():
+    """A parallel jdbc read without its bounds fails at load, not as a
+    bare KeyError inside the reader at compile time."""
+    src = "{format: jdbc, url: 'jdbc:x', dbtable: t, partition_column: id%s}"
+    for extra in ("", ", lower_bound: 0", ", upper_bound: 9"):
+        with pytest.raises(ConfigError, match="source 'j'.*'lower_bound' and 'upper_bound'"):
+            load_pipeline_str(f"sources:\n  j: {src % extra}\n")
+    cfg = load_pipeline_str(f"sources:\n  j: {src % ', lower_bound: 0, upper_bound: 9'}\n")
+    assert cfg.sources["j"]["lower_bound"] == 0
+
+
+def test_incremental_needs_column_and_since():
+    """An ``incremental`` block missing its watermark column or its
+    start value fails at load, not as a KeyError in the reader."""
+    for inc in ("{column: ts}", "{since: '2024-01-01'}", "ts"):
+        with pytest.raises(ConfigError, match="source 's'.*'column' and 'since'"):
+            load_pipeline_str(f"sources:\n  s: {{path: /x, incremental: {inc}}}\n")
+    cfg = load_pipeline_str(
+        "sources:\n  s: {path: /x, incremental: {column: ts, since: '2024-01-01'}}\n"
+    )
+    assert cfg.sources["s"]["incremental"] == {"column": "ts", "since": "2024-01-01"}
+
+
+def test_non_mapping_options_is_a_config_error():
+    """``options`` is stringified key by key at load; a list or scalar
+    there is a ConfigError, not an AttributeError traceback."""
+    with pytest.raises(ConfigError, match="source 'a': 'options' must be a mapping"):
+        load_pipeline_str("sources: {a: {path: /x, options: [header]}}")
+    with pytest.raises(ConfigError, match=r"sinks\[0\]: 'options' must be a mapping"):
+        load_pipeline_str("sources: {a: {path: /x}}\nsinks: [{input: a, path: /y, options: 3}]")
 
 
 def test_master_supplied_detects_submit_environment():

@@ -237,3 +237,71 @@ def test_folded_query_forks_stay_folded():
     grown = {p: (now(p), n) for p, n in FOLDED_FORKS.items() if 2 * now(p) >= n}
     grown |= {p: (now(p), n) for p, n in FOLDED_AT_MOST.items() if now(p) > n}
     assert not grown, f"re-forked (now, bound): {grown}"
+
+
+def _dict_keys_read(fn, name: str) -> set:
+    """Literal keys function ``fn`` reads off its dict argument
+    ``name`` (``name["k"]``, ``name.get("k")``, ``"k" in name``); a
+    non-literal read fails the scan."""
+    import inspect
+    import textwrap
+
+    def is_dict(node) -> bool:
+        return isinstance(node, ast.Name) and node.id == name
+
+    keys: set = set()
+    for n in ast.walk(ast.parse(textwrap.dedent(inspect.getsource(fn)))):
+        if isinstance(n, ast.Subscript) and is_dict(n.value):
+            key = n.slice
+        elif (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and is_dict(n.func.value)
+            and n.func.attr == "get"
+        ):
+            key = n.args[0]
+        elif isinstance(n, ast.Compare) and any(map(is_dict, n.comparators)):
+            key = n.left
+        else:
+            continue
+        assert isinstance(key, ast.Constant), f"{fn.__name__}: non-literal {name} key"
+        keys.add(key.value)
+    return keys
+
+
+def test_io_key_allowlists_match_the_readers():
+    """The loader's source/sink key allowlists are exactly the keys the
+    io layer reads (and ``input``, which the runner routes on): a key
+    the reader learns cannot be rejected at load, and a key the loader
+    accepts cannot be ignored by the reader."""
+    from configdrivendatapipeline_spark.compiler import run_pipeline
+    from configdrivendatapipeline_spark.config.loader import _SINK_KEYS, _SOURCE_KEYS
+    from configdrivendatapipeline_spark.io.sinks import write_sink
+    from configdrivendatapipeline_spark.io.sources import read_source
+
+    assert _SOURCE_KEYS == _dict_keys_read(read_source, "cfg")
+    assert _SINK_KEYS == _dict_keys_read(write_sink, "cfg") | _dict_keys_read(
+        run_pipeline, "sink"
+    )
+
+
+def test_plan_dump_strips_run_ids():
+    """Two runs of one plan differ in expression ids, exchange plan ids
+    and run-directory suffixes; ``stable`` removes all three."""
+    from tools.plan_dump import stable
+
+    def dump(e, p, pid, hx):
+        return (
+            f"(3) Exchange\n"
+            f"Input [2]: [a#{e}L, b#{e + 1}]\n"
+            f"Arguments: hashpartitioning(a#{e}L, 32), ENSURE_REQUIREMENTS, [plan_id={p}]\n"
+            f"(5) BroadcastExchange\n"
+            f"Arguments: HashedRelationBroadcastMode(List(input[0, bigint, false]),false), "
+            f"[plan_id={p + 3}]\n"
+            f"Location: InMemoryFileIndex [file:/tmp/cddp_scratch-{pid}-{hx}/pairs-{hx}]\n"
+        )
+
+    a, b = dump(37, 648, 101, "0a1b2c3d"), dump(912, 7, 202, "deadbeef")
+    assert a != b and stable(a) == stable(b)
+    assert "plan_id" not in stable(a)
+    assert "ENSURE_REQUIREMENTS\n" in stable(a) and "]),false)\n" in stable(a)

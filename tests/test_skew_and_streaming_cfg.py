@@ -84,6 +84,33 @@ def test_streaming_pipeline_from_yaml(spark, tmp_path):
     assert dict(got.dtypes)["event_ts"] == "timestamp"
 
 
+def test_streaming_sink_config_is_not_mutated(spark, sf_dir, tmp_path):
+    """A streaming sink is written per micro-batch with mode=append,
+    set on a copy: the loaded config's sink keeps what the document
+    said (here, no mode at all)."""
+    from configdrivendatapipeline_spark.compiler import run_pipeline
+    from configdrivendatapipeline_spark.config import load_pipeline_str
+
+    out = str(tmp_path / "ids")
+    cfg = load_pipeline_str(
+        f"""
+sources:
+  ev: {{format: parquet, path: "{sf_dir}/events.parquet", streaming: true}}
+steps:
+  - {{id: ids, input: ev, op: select, params: {{columns: [event_id]}}}}
+sinks:
+  - {{input: ids, format: parquet, path: "{out}"}}
+"""
+    )
+    before = dict(cfg.sinks[0])
+    run_pipeline(spark, cfg)
+    assert cfg.sinks[0] == before and "mode" not in before
+    assert (
+        spark.read.parquet(out).count()
+        == spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    )
+
+
 def test_schema_drift_modes(spark):
     """passthrough keeps unknowns + nulls missing; drop shapes to the
     declared schema; strict raises."""

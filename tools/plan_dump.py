@@ -3,9 +3,9 @@
 Usage: python tools/plan_dump.py --tag r17 --suffix before [names...]
 Default names: the bench HEADLINE list. Plans are captured at the bench
 scale factor (sf0.1) so PushedFilters/stats match what the bench runs.
-Expression ids (``#123``, ``#123L``) and the run directory's pid/hex
-suffixes change on every run and are stripped, so dumps of two commits
-diff cleanly.
+Expression ids (``#123``, ``#123L``), exchange plan ids
+(``[plan_id=123]``) and the run directory's pid/hex suffixes change on
+every run and are stripped, so dumps of two commits diff cleanly.
 """
 from __future__ import annotations
 
@@ -22,14 +22,16 @@ from configdrivendatapipeline_spark.queries import registry
 from configdrivendatapipeline_spark.session import get_spark
 
 _EXPR_ID = re.compile(r"#\d+L?\b")
+# Exchange / BroadcastExchange argument: `..., ENSURE_REQUIREMENTS, [plan_id=648]`
+_PLAN_ID = re.compile(r",? ?\[plan_id=\d+\]")
 # a path inside the run directory: cddp_scratch-<pid>-<hex>/<name>-<hex>/...
 _RUN_PATH = re.compile(r"cddp_scratch-\d+-[0-9a-f]{8}[^\s,\]\)]*")
 _HEX_SUFFIX = re.compile(r"-(?:\d+-)?[0-9a-f]{8}(?=/|$)")
 
 
 def stable(plan: str) -> str:
-    """``plan`` with expression ids and run-directory suffixes removed."""
-    plan = _EXPR_ID.sub("#", plan)
+    """``plan`` with expression ids, plan ids and run-directory suffixes removed."""
+    plan = _PLAN_ID.sub("", _EXPR_ID.sub("#", plan))
     return _RUN_PATH.sub(lambda m: _HEX_SUFFIX.sub("", m.group(0)), plan)
 
 
